@@ -166,63 +166,70 @@ object Bfs {
 
     val levels = scala.collection.mutable.ArrayBuffer[Lineage.Handle](visited)
     if (frontier ne visited) levels += frontier
-    while (frontierSize > 0 && depth < cfg.maxDepth) {
-      depth += 1
-      val doPull = cfg.pull.getOrElse {
-        // Auto: pull once the frontier outnumbers the unvisited
-        // residue (cheap proxy for edge-out vs edge-in volume).
-        frontierSize > math.max(1L, nVerts - visitedCount)
-      }
-      val expanded =
-        if (doPull) {
-          val unvisited = allVerts.df
-            .join(visited.df.select(ID), Seq(ID), "left_anti")
-          edges
-            .join(unvisited.withColumnRenamed(ID, DST).hint("shuffle_hash"),
-              Seq(DST), "left_semi")
-            .join(frontier.df.select(col(ID).as(SRC)).hint("shuffle_hash"),
-              Seq(SRC))
-            .groupBy(DST).agg(min(SRC).as("predecessor"))
-        } else {
-          edges
-            .join(frontier.df.select(col(ID)).hint("shuffle_hash"),
-              edges(SRC) === col(ID))
-            .select(col(DST), edges(SRC).as("pred"))
-            .groupBy(DST).agg(min("pred").as("predecessor"))
-            .join(visited.df.select(col(ID)).withColumnRenamed(ID, DST),
-              Seq(DST), "left_anti")
+    CheckpointManager.committing(cfg.checkpoint) {
+      while (frontierSize > 0 && depth < cfg.maxDepth) {
+        depth += 1
+        val doPull = cfg.pull.getOrElse {
+          // Auto: pull once the frontier outnumbers the unvisited
+          // residue (cheap proxy for edge-out vs edge-in volume).
+          frontierSize > math.max(1L, nVerts - visitedCount)
         }
-      // Both branches end in groupBy(DST), so the level is already
-      // hash(dst → id)-partitioned at the session width; when that
-      // matches the graph layout the explicit repartition is a
-      // redundant V-sized exchange per level (guide §2.4) — the next
-      // push join is co-partitioned either way. Kept when the widths
-      // differ (caller-managed layouts).
-      val body = expanded
-        .select(col(DST).as(ID), lit(depth).as("distance"),
-          col("predecessor"))
-      val nextFrontier = Lineage.materialize(
-        if (p == spark.sessionState.conf.numShufflePartitions) body
-        else body.repartition(p, col(ID)),
-        eager = false)
-      frontierSize = nextFrontier.df.count()
-      if (frontierSize > 0) {
-        visitedCount += frontierSize
-        val newVisited = Lineage.materialize(
-          visited.df.union(nextFrontier.df), eager = false)
-        levels += nextFrontier
-        levels += newVisited
-        visited = newVisited
-        frontier = nextFrontier
-        cfg.checkpoint.foreach { cm =>
-          if (depth % cfg.checkpointEvery == 0) {
-            cm.commit(cfg.algoName, depth.toInt, visited.df,
-              Map("frontier" -> frontierSize.toDouble,
-                "depth" -> depth.toDouble), fp)
+        val expanded =
+          if (doPull) {
+            val unvisited = allVerts.df
+              .join(visited.df.select(ID), Seq(ID), "left_anti")
+            edges
+              .join(unvisited.withColumnRenamed(ID, DST).hint("shuffle_hash"),
+                Seq(DST), "left_semi")
+              .join(frontier.df.select(col(ID).as(SRC)).hint("shuffle_hash"),
+                Seq(SRC))
+              .groupBy(DST).agg(min(SRC).as("predecessor"))
+          } else {
+            edges
+              .join(frontier.df.select(col(ID)).hint("shuffle_hash"),
+                edges(SRC) === col(ID))
+              .select(col(DST), edges(SRC).as("pred"))
+              .groupBy(DST).agg(min("pred").as("predecessor"))
+              .join(visited.df.select(col(ID)).withColumnRenamed(ID, DST),
+                Seq(DST), "left_anti")
           }
+        // Both branches end in groupBy(DST), so the level is already
+        // hash(dst → id)-partitioned at the session width; when that
+        // matches the graph layout the explicit repartition is a
+        // redundant V-sized exchange per level (guide §2.4) — the next
+        // push join is co-partitioned either way. Kept when the widths
+        // differ (caller-managed layouts).
+        val body = expanded
+          .select(col(DST).as(ID), lit(depth).as("distance"),
+            col("predecessor"))
+        val nextFrontier = Lineage.materialize(
+          if (p == spark.sessionState.conf.numShufflePartitions) body
+          else body.repartition(p, col(ID)),
+          eager = false)
+        frontierSize = nextFrontier.df.count()
+        if (frontierSize > 0) {
+          visitedCount += frontierSize
+          // A level to be committed is cached before the commit starts,
+          // so the background write and the next level's join both read
+          // the cache instead of computing the level at the same time.
+          val committed = depth % cfg.checkpointEvery == 0
+          val newVisited = Lineage.materialize(
+            visited.df.union(nextFrontier.df),
+            eager = committed && cfg.checkpoint.isDefined)
+          levels += nextFrontier
+          levels += newVisited
+          visited = newVisited
+          frontier = nextFrontier
+          cfg.checkpoint.foreach { cm =>
+            if (committed) {
+              cm.commit(cfg.algoName, depth.toInt, visited.df,
+                Map("frontier" -> frontierSize.toDouble,
+                  "depth" -> depth.toDouble), fp)
+            }
+          }
+        } else {
+          nextFrontier.release()
         }
-      } else {
-        nextFrontier.release()
       }
     }
 

@@ -73,37 +73,39 @@ object ConnectedComponents {
     var active = 1L
     var converged = false
 
-    while (!converged && iter < cfg.maxIter) {
-      iter += 1
-      // Only improved vertices broadcast their (smaller) label.
-      val msgs = edges
-        .join(state.df.filter(col(CHANGED)).select(col(ID), col(COMP))
-            .hint("shuffle_hash"),
-          edges(SRC) === col(ID))
-        .select(col(DST), col(COMP).as("m"))
-        .groupBy(DST)
-        .agg(min("m").as("m"))
+    CheckpointManager.committing(cfg.checkpoint) {
+      while (!converged && iter < cfg.maxIter) {
+        iter += 1
+        // Only improved vertices broadcast their (smaller) label.
+        val msgs = edges
+          .join(state.df.filter(col(CHANGED)).select(col(ID), col(COMP))
+              .hint("shuffle_hash"),
+            edges(SRC) === col(ID))
+          .select(col(DST), col(COMP).as("m"))
+          .groupBy(DST)
+          .agg(min("m").as("m"))
 
-      val next = Lineage.materialize(
-        state.df.join(msgs.hint("shuffle_hash"),
-            state.df(ID) === msgs(DST), "left")
-          .select(
-            state.df(ID),
-            least(state.df(COMP), coalesce(col("m"), state.df(COMP))).as(COMP),
-            (coalesce(col("m"), lit(Long.MaxValue)) < state.df(COMP)).as(CHANGED)),
-        eager = false)
+        val next = Lineage.materialize(
+          state.df.join(msgs.hint("shuffle_hash"),
+              state.df(ID) === msgs(DST), "left")
+            .select(
+              state.df(ID),
+              least(state.df(COMP), coalesce(col("m"), state.df(COMP))).as(COMP),
+              (coalesce(col("m"), lit(Long.MaxValue)) < state.df(COMP)).as(CHANGED)),
+          eager = false)
 
-      active = next.df.filter(col(CHANGED)).count()
-      converged = active == 0L
+        active = next.df.filter(col(CHANGED)).count()
+        converged = active == 0L
 
-      cfg.checkpoint.foreach { cm =>
-        if (converged || iter % cfg.checkpointEvery == 0) {
-          cm.commit(cfg.algoName, iter, next.df,
-            Map("active" -> active.toDouble), fp)
+        CheckpointManager.release(cfg.checkpoint, state)
+        cfg.checkpoint.foreach { cm =>
+          if (converged || iter % cfg.checkpointEvery == 0) {
+            cm.commit(cfg.algoName, iter, next.df,
+              Map("active" -> active.toDouble), fp)
+          }
         }
+        state = next
       }
-      state.release()
-      state = next
     }
 
     if (!callerCached) g.unpersist()

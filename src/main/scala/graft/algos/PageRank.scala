@@ -159,66 +159,67 @@ object PageRank {
 
     var l1 = Double.MaxValue
     var converged = false
-    while (!converged && iter < cfg.maxIter) {
-      iter += 1
-      val tIter = System.nanoTime()
-      // Redistributed mass this superstep; multiplied by the per-vertex
-      // teleport weight (uniform 1/V or personalized).
-      val mass = danglingSum * cfg.alpha + (1.0 - cfg.alpha)
+    CheckpointManager.committing(cfg.checkpoint) {
+      while (!converged && iter < cfg.maxIter) {
+        iter += 1
+        val tIter = System.nanoTime()
+        // Redistributed mass this superstep; multiplied by the per-vertex
+        // teleport weight (uniform 1/V or personalized).
+        val mass = danglingSum * cfg.alpha + (1.0 - cfg.alpha)
 
-      // shuffle_hash hints: without them Catalyst picks sort-merge and
-      // re-SORTS the (cached, unsorted) edge table every superstep —
-      // bandwidth-bound and the dominant iteration cost. Hash-building
-      // the per-partition slice of the small state side streams the
-      // edges unsorted; unlike a broadcast this stays valid when V is
-      // huge, because the build is per co-partition, not per task.
-      val msgs = normEdges
-        .join(state.df.select(col(ID), col(PR)).hint("shuffle_hash"),
-          normEdges(SRC) === col(ID))
-        .select(col(DST), (col(PR) * col("nw")).as("m"))
-        .groupBy(DST)
-        .agg(sum("m").as("m"))
+        // shuffle_hash hints: without them Catalyst picks sort-merge and
+        // re-SORTS the (cached, unsorted) edge table every superstep —
+        // bandwidth-bound and the dominant iteration cost. Hash-building
+        // the per-partition slice of the small state side streams the
+        // edges unsorted; unlike a broadcast this stays valid when V is
+        // huge, because the build is per co-partition, not per task.
+        val msgs = normEdges
+          .join(state.df.select(col(ID), col(PR)).hint("shuffle_hash"),
+            normEdges(SRC) === col(ID))
+          .select(col(DST), (col(PR) * col("nw")).as("m"))
+          .groupBy(DST)
+          .agg(sum("m").as("m"))
 
-      val nextPlan = state.df
-        .join(msgs.hint("shuffle_hash"), state.df(ID) === msgs(DST), "left")
-        .select(
-          state.df(ID),
-          (lit(cfg.alpha) * coalesce(col("m"), lit(0.0))
-            + lit(mass) * state.df(PW)).as(PR),
-          state.df(PR).as(OLD),
-          state.df(DANG),
-          state.df(PW))
-      if (cfg.verbose && iter == 1 &&
-          sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-        nextPlan.explain("formatted")
-      }
-      val next = Lineage.materialize(nextPlan, eager = false)
-
-      val tAgg = System.nanoTime()
-      val Array(dSum, l1Now) = scalars(next.df)
-      danglingSum = dSum
-      l1 = l1Now
-      converged = l1 < cfg.tol
-      if (cfg.verbose) {
-        val gc = java.lang.management.ManagementFactory
-          .getGarbageCollectorMXBeans.stream()
-          .mapToLong(_.getCollectionTime).sum()
-        val tNow = System.nanoTime()
-        println(f"[pagerank] iter=$iter%d total=${(tNow - tIter) / 1e9}%.2f " +
-          f"plan=${(tAgg - tIter) / 1e9}%.2f agg=${(tNow - tAgg) / 1e9}%.2f " +
-          f"l1=$l1%.2e gc_cum_ms=$gc%d")
-      }
-
-      cfg.checkpoint.foreach { cm =>
-        if (converged || iter % cfg.checkpointEvery == 0) {
-          cm.commit(cfg.algoName, iter, next.df,
-            Map("l1_diff" -> l1, "dangling_sum" -> danglingSum,
-              "messages" -> v.toDouble), fp)
+        val nextPlan = state.df
+          .join(msgs.hint("shuffle_hash"), state.df(ID) === msgs(DST), "left")
+          .select(
+            state.df(ID),
+            (lit(cfg.alpha) * coalesce(col("m"), lit(0.0))
+              + lit(mass) * state.df(PW)).as(PR),
+            state.df(PR).as(OLD),
+            state.df(DANG),
+            state.df(PW))
+        if (cfg.verbose && iter == 1 &&
+            sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
+          nextPlan.explain("formatted")
         }
-      }
+        val next = Lineage.materialize(nextPlan, eager = false)
 
-      state.release()
-      state = next
+        val tAgg = System.nanoTime()
+        val Array(dSum, l1Now) = scalars(next.df)
+        danglingSum = dSum
+        l1 = l1Now
+        converged = l1 < cfg.tol
+        if (cfg.verbose) {
+          val gc = java.lang.management.ManagementFactory
+            .getGarbageCollectorMXBeans.stream()
+            .mapToLong(_.getCollectionTime).sum()
+          val tNow = System.nanoTime()
+          println(f"[pagerank] iter=$iter%d total=${(tNow - tIter) / 1e9}%.2f " +
+            f"plan=${(tAgg - tIter) / 1e9}%.2f agg=${(tNow - tAgg) / 1e9}%.2f " +
+            f"l1=$l1%.2e gc_cum_ms=$gc%d")
+        }
+
+        CheckpointManager.release(cfg.checkpoint, state)
+        cfg.checkpoint.foreach { cm =>
+          if (converged || iter % cfg.checkpointEvery == 0) {
+            cm.commit(cfg.algoName, iter, next.df,
+              Map("l1_diff" -> l1, "dangling_sum" -> danglingSum,
+                "messages" -> v.toDouble), fp)
+          }
+        }
+        state = next
+      }
     }
 
     lap("loop-done")

@@ -53,10 +53,11 @@ object Sssp {
     // §2.4; measured 85 stages / 34 MB total shuffle at sf0.1).
     // The chg column is checkpointed too, so a resumed run re-enters
     // with the exact change-frontier of the committed superstep.
-    // Fingerprint = weighted edge set + source (see Bfs): refuses to
-    // resume a checkpoint of a different graph/source.
-    val fp = cfg.checkpoint.map(_.graphFingerprint(
-      g.edges, "sssp", source.toString)).getOrElse("")
+    // Fingerprint = weighted edge set + state format + source (see
+    // Bfs): refuses to resume a checkpoint of a different graph/source,
+    // or one of the reached-only format, which the dense left join
+    // would silently truncate to the reached vertices.
+    val fp = cfg.checkpoint.map(fingerprint(_, g, source)).getOrElse("")
     val resume = cfg.checkpoint.flatMap(cm =>
       cm.latestIteration(cfg.algoName, fp).map(it =>
         (it, cm.restore(cfg.algoName, it).repartition(p, col(ID)))))
@@ -74,49 +75,51 @@ object Sssp {
     var frontier = 1L
     var iter = resume.map(_._1).getOrElse(0)
 
-    while (frontier > 0 && iter < cfg.maxIter) {
-      iter += 1
-      // Relax out-edges of improved vertices; keep the best (distance,
-      // predecessor) candidate per destination — min over struct gives
-      // the deterministic (smallest-distance, then smallest-pred) pick.
-      val cand = g.edges
-        .join(state.df.filter(col("chg"))
-            .select(col(ID), col("distance")).hint("shuffle_hash"),
-          g.edges(SRC) === col(ID))
-        .select(col(DST),
-          struct((col("distance") + col(WEIGHT)).as("d"),
-            col(SRC).as("pred")).as("c"))
-        .groupBy(DST)
-        .agg(min("c").as("c"))
-        .select(col(DST).as("cid"), col("c.d").as("nd"), col("c.pred").as("np"))
+    CheckpointManager.committing(cfg.checkpoint) {
+      while (frontier > 0 && iter < cfg.maxIter) {
+        iter += 1
+        // Relax out-edges of improved vertices; keep the best (distance,
+        // predecessor) candidate per destination — min over struct gives
+        // the deterministic (smallest-distance, then smallest-pred) pick.
+        val cand = g.edges
+          .join(state.df.filter(col("chg"))
+              .select(col(ID), col("distance")).hint("shuffle_hash"),
+            g.edges(SRC) === col(ID))
+          .select(col(DST),
+            struct((col("distance") + col(WEIGHT)).as("d"),
+              col(SRC).as("pred")).as("c"))
+          .groupBy(DST)
+          .agg(min("c").as("c"))
+          .select(col(DST).as("cid"), col("c.d").as("nd"), col("c.pred").as("np"))
 
-      val st = state.df
-      val better = col("nd") <
-        coalesce(st("distance"), lit(Double.MaxValue))
-      val nextPlan = st
-        .join(cand.hint("shuffle_hash"), st(ID) === col("cid"), "left")
-        .select(st(ID),
-          when(better, col("nd")).otherwise(st("distance")).as("distance"),
-          when(better, col("np")).otherwise(st("predecessor"))
-            .as("predecessor"),
-          coalesce(better, lit(false)).as("chg"))
-      // Loop-shape evidence hook (same convention as PageRank's):
-      // the superstep plan, once, for plans/r06.
-      if (iter == 1 && sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-        nextPlan.explain("formatted")
-      }
-      val next = Lineage.materialize(nextPlan, eager = false)
-
-      frontier = next.df.filter(col("chg")).count()
-      cfg.checkpoint.foreach { cm =>
-        if (frontier == 0 || iter % cfg.checkpointEvery == 0) {
-          cm.commit(cfg.algoName, iter, next.df,
-            Map("frontier" -> frontier.toDouble,
-              "iteration" -> iter.toDouble), fp)
+        val st = state.df
+        val better = col("nd") <
+          coalesce(st("distance"), lit(Double.MaxValue))
+        val nextPlan = st
+          .join(cand.hint("shuffle_hash"), st(ID) === col("cid"), "left")
+          .select(st(ID),
+            when(better, col("nd")).otherwise(st("distance")).as("distance"),
+            when(better, col("np")).otherwise(st("predecessor"))
+              .as("predecessor"),
+            coalesce(better, lit(false)).as("chg"))
+        // Loop-shape evidence hook (same convention as PageRank's):
+        // the superstep plan, once, for plans/r06.
+        if (iter == 1 && sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
+          nextPlan.explain("formatted")
         }
+        val next = Lineage.materialize(nextPlan, eager = false)
+
+        frontier = next.df.filter(col("chg")).count()
+        CheckpointManager.release(cfg.checkpoint, state)
+        cfg.checkpoint.foreach { cm =>
+          if (frontier == 0 || iter % cfg.checkpointEvery == 0) {
+            cm.commit(cfg.algoName, iter, next.df,
+              Map("frontier" -> frontier.toDouble,
+                "iteration" -> iter.toDouble), fp)
+          }
+        }
+        state = next
       }
-      state.release()
-      state = next
     }
 
     // Reached vertices only (the dense state's unreached rows carry
@@ -128,6 +131,10 @@ object Sssp {
     if (!callerCached) g.unpersist()
     out.df
   }
+
+  private[graft] def fingerprint(
+      cm: CheckpointManager, g: LinkGraph, source: Long): String =
+    cm.graphFingerprint(g.edges, "sssp", "sssp-dense", source.toString)
 
   /**
    * Drop unreachable rows from a BFS/SSSP result — reference

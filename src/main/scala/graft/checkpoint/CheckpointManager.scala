@@ -1,24 +1,43 @@
 package graft.checkpoint
 
 import java.nio.charset.StandardCharsets
+import java.util.concurrent.{ExecutionException, Future, LinkedBlockingQueue, ThreadPoolExecutor, TimeUnit}
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.json4s._
+import org.json4s.JsonDSL._
+import org.json4s.jackson.JsonMethods.{compact, parse, render}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
+
+import graft.core.Lineage
 
 /**
  * Iceberg-style checkpoint/resume layer: Parquet data files plus a JSON
- * manifest per superstep carrying iteration metrics and per-partition
- * lineage (row counts per partition). The real Iceberg runtime jar is
- * not available offline, so this implements the same snapshot+manifest
- * contract on plain files; swap for Iceberg commits when the jar exists.
+ * manifest per superstep carrying iteration metrics, the state schema,
+ * the row total and the bytes of each data file. The real Iceberg
+ * runtime jar is not available offline, so this implements the same
+ * snapshot+manifest contract on plain files; swap for Iceberg commits
+ * when the jar exists.
  *
  * Layout: {root}/{algo}/iter={n}/data/ (parquet files)
  *         {root}/{algo}/iter={n}/manifest.json   (written last = commit)
  *
- * A superstep directory without manifest.json is an uncommitted torn
- * write and is ignored on resume.
+ * The manifest is written to a temporary name and renamed into place,
+ * so it is either whole or absent. A superstep directory without a
+ * manifest.json that parses is an uncommitted torn write and is
+ * ignored on resume.
+ *
+ * A commit is one Spark job (the write, whose row total is observed on
+ * the write itself) and runs on this manager's commit thread, so it
+ * overlaps the caller's next superstep. At most one commit is in
+ * flight: [[commit]] first waits for the previous one, and [[flush]]
+ * waits for it and rethrows its failure. A superstep loop runs inside
+ * [[CheckpointManager.committing]], so no commit outlives it, and
+ * releases a state through [[CheckpointManager.release]], so no
+ * commit still reads it. Commits are issued from one driver thread.
  */
 final class CheckpointManager(val root: String, spark: SparkSession) {
 
@@ -31,43 +50,87 @@ final class CheckpointManager(val root: String, spark: SparkSession) {
   private def stepDir(algo: String, iter: Int): Path =
     new Path(new Path(root, algo), f"iter=$iter%05d")
 
+  // One daemon thread, retired when idle so an unused manager holds none.
+  private val committer = {
+    val pool = new ThreadPoolExecutor(1, 1, 30L, TimeUnit.SECONDS,
+      new LinkedBlockingQueue[Runnable](), (r: Runnable) => {
+        val t = new Thread(r, "graft-checkpoint-commit")
+        t.setDaemon(true)
+        t
+      })
+    pool.allowCoreThreadTimeOut(true)
+    pool
+  }
+  private var inFlight: Option[Future[_]] = None
+
+  // The caller's job group and description (SparkContext.setJobGroup's
+  // keys, private to Spark): the commit's stages stay attributed to it.
+  private val jobProps =
+    Seq("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
   /**
-   * Commit one superstep: data first, manifest last. Returns the
-   * re-read DataFrame (fresh lineage — this is what breaks logical-plan
-   * growth in iterative algorithms).
+   * Commit one superstep in the background: data first, manifest last.
+   * Waits for (and rethrows the failure of) the previous commit first.
+   * `state` must stay computable until the next [[flush]].
    */
   def commit(
       algo: String,
       iter: Int,
       state: DataFrame,
       metrics: Map[String, Double],
-      fingerprint: String = ""): DataFrame = {
+      fingerprint: String = ""): Unit = {
+    flush()
+    val sc = spark.sparkContext
+    val props = jobProps.map(k => k -> sc.getLocalProperty(k))
+    val task: Runnable = () => {
+      props.foreach { case (k, v) => sc.setLocalProperty(k, v) }
+      write(algo, iter, state, metrics, fingerprint)
+    }
+    inFlight = Some(committer.submit(task))
+  }
+
+  /** Wait for the in-flight commit, if any; rethrow its failure. */
+  def flush(): Unit = inFlight.foreach { f =>
+    inFlight = None
+    try f.get()
+    catch { case e: ExecutionException => throw e.getCause }
+  }
+
+  private def write(
+      algo: String,
+      iter: Int,
+      state: DataFrame,
+      metrics: Map[String, Double],
+      fingerprint: String): Unit = {
     val dir = stepDir(algo, iter)
-    val dataDir = new Path(dir, "data").toString
-    state.write.mode("overwrite").parquet(dataDir)
-
-    // Per-partition lineage: rows per output file of this snapshot.
-    val reread = spark.read.parquet(dataDir)
-    val partCounts = reread
-      .groupBy(input_file_name().as("file"))
-      .agg(count(lit(1)).as("rows"))
-      .collect()
-      .map(r => Json.obj(
-        "file" -> Json.str(r.getString(0)),
-        "rows" -> Json.num(r.getLong(1).toDouble)))
-
-    val manifest = Json.obj(
-      "algo" -> Json.str(algo),
-      "iteration" -> Json.num(iter.toDouble),
-      "fingerprint" -> Json.str(fingerprint),
-      "schema" -> Json.str(state.schema.json),
-      "metrics" -> Json.obj(metrics.toSeq.map { case (k, v) => k -> Json.num(v) }: _*),
-      "partitions" -> Json.arr(partCounts.toIndexedSeq: _*))
+    val dataDir = new Path(dir, "data")
     val mPath = new Path(dir, "manifest.json")
-    val out = fs(mPath).create(mPath, true)
-    try out.write(manifest.getBytes(StandardCharsets.UTF_8))
+    // Re-committing a step: uncommit it before its data is replaced.
+    fs(mPath).delete(mPath, false)
+    val observed = new Observation()
+    state.observe(observed, count(lit(1)).as("rows"))
+      .write.mode("overwrite").parquet(dataDir.toString)
+
+    val files = fs(dataDir).listStatus(dataDir)
+      .filter(_.getPath.getName.startsWith("part-"))
+      .sortBy(_.getPath.getName)
+    val manifest =
+      ("algo" -> algo) ~
+      ("iteration" -> iter) ~
+      ("fingerprint" -> fingerprint) ~
+      ("schema" -> state.schema.json) ~
+      ("rows" -> observed.get("rows").asInstanceOf[Long]) ~
+      // bare NaN/Infinity is invalid JSON
+      ("metrics" -> metrics.map { case (k, v) =>
+        k -> (if (v.isNaN || v.isInfinite) JNull else JDouble(v)) }) ~
+      ("partitions" -> files.toList.map(st =>
+        ("file" -> st.getPath.getName) ~ ("bytes" -> st.getLen)))
+    val tmp = new Path(dir, "manifest.json.tmp")
+    val out = fs(tmp).create(tmp, true)
+    try out.write(compact(render(manifest)).getBytes(StandardCharsets.UTF_8))
     finally out.close()
-    reread
+    if (!fs(tmp).rename(tmp, mPath))
+      throw new java.io.IOException(s"could not commit $mPath")
   }
 
   /** Latest committed iteration for `algo`, if any. When `fingerprint`
@@ -80,24 +143,29 @@ final class CheckpointManager(val root: String, spark: SparkSession) {
     val f = fs(d)
     if (!f.exists(d) || !f.getFileStatus(d).isDirectory) return None
     val iters = f.listStatus(d).toSeq
-      .filter(st => st.getPath.getName.startsWith("iter=") &&
-        f.exists(new Path(st.getPath, "manifest.json")))
-      .map(_.getPath.getName.stripPrefix("iter=").toInt)
-      .filter(it => fingerprint.isEmpty ||
-        manifestFingerprint(algo, it).contains(fingerprint))
+      .map(_.getPath.getName)
+      .filter(_.startsWith("iter="))
+      .map(_.stripPrefix("iter=").toInt)
+      .filter(it => committed(algo, it).exists(m =>
+        fingerprint.isEmpty || (m \ "fingerprint") == JString(fingerprint)))
     if (iters.isEmpty) None else Some(iters.max)
   }
 
-  /** Fingerprint recorded in a committed manifest (None if absent). */
-  def manifestFingerprint(algo: String, iter: Int): Option[String] = {
-    val m = manifestJson(algo, iter)
-    "\"fingerprint\":\"((?:[^\"\\\\]|\\\\.)*)\"".r
-      .findFirstMatchIn(m).map(_.group(1)).filter(_.nonEmpty)
+  /** The manifest of (algo, iter), if one was committed: None when it is
+   * absent or does not parse (a torn write by an in-place writer). */
+  private def committed(algo: String, iter: Int): Option[JValue] = {
+    val mPath = new Path(stepDir(algo, iter), "manifest.json")
+    if (!fs(mPath).exists(mPath)) None
+    else scala.util.Try(parse(manifestJson(algo, iter))).toOption
   }
 
-  /** Re-open the committed state of (algo, iter). */
-  def restore(algo: String, iter: Int): DataFrame =
-    spark.read.parquet(new Path(stepDir(algo, iter), "data").toString)
+  /** Re-open the committed state of (algo, iter), with the schema the
+   * manifest records (no inference job). */
+  def restore(algo: String, iter: Int): DataFrame = {
+    val JString(schema) = parse(manifestJson(algo, iter)) \ "schema": @unchecked
+    spark.read.schema(DataType.fromJson(schema).asInstanceOf[StructType])
+      .parquet(new Path(stepDir(algo, iter), "data").toString)
+  }
 
   /** Order-independent fingerprint of a run's inputs: edge-set hash +
    * row count + caller extras (sources, key config). One aggregation
@@ -130,22 +198,28 @@ final class CheckpointManager(val root: String, spark: SparkSession) {
   }
 }
 
-/** Minimal JSON writer (no external deps in the offline sandbox). */
-private[graft] object Json {
-  def str(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-  def num(d: Double): String =
-    if (d.isNaN || d.isInfinite) "null" // bare NaN/Infinity is invalid JSON
-    else if (d == d.toLong.toDouble) d.toLong.toString
-    else d.toString
-  def obj(fields: (String, String)*): String =
-    fields.map { case (k, v) => str(k) + ":" + v }.mkString("{", ",", "}")
-  def arr(items: String*): String = items.mkString("[", ",", "]")
+object CheckpointManager {
+
+  /** Run a superstep loop that commits through `cm`. No commit outlives
+   * it: on return its last commit is flushed (a failure rethrown); when
+   * `loop` throws, the in-flight commit is still awaited and its
+   * failure is added to the loop's as suppressed. */
+  def committing[T](cm: Option[CheckpointManager])(loop: => T): T = {
+    val out =
+      try loop
+      catch {
+        case e: Throwable =>
+          cm.foreach(m => try m.flush() catch { case c: Throwable => e.addSuppressed(c) })
+          throw e
+      }
+    cm.foreach(_.flush())
+    out
+  }
+
+  /** Release `state` once no commit of `cm` can still be writing it: a
+   * released `localCheckpoint`ed state cannot be recomputed. */
+  def release(cm: Option[CheckpointManager], state: Lineage.Handle): Unit = {
+    cm.foreach(_.flush())
+    state.release()
+  }
 }

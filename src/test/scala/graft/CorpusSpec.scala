@@ -253,7 +253,7 @@ class ResumeSpec extends SparkSpec {
     assert(got.keySet == want.keySet)
     assert(want.forall { case (v, p) => math.abs(got(v) - p) < 1e-12 })
 
-    // Manifest carries metrics + per-partition lineage.
+    // Manifest carries metrics + per-file lineage.
     val manifest = cm2.manifestJson("pagerank", 6)
     assert(manifest.contains("l1_diff") && manifest.contains("partitions"))
   }
@@ -297,6 +297,34 @@ class ResumeSpec extends SparkSpec {
     val cm2 = new graft.checkpoint.CheckpointManager(dir, spark)
     val got = Sssp.run(g, root, Sssp.Config(checkpointEvery = 1,
         checkpoint = Some(cm2)))
+      .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
+    assert(got == want)
+  }
+
+  test("sssp does not resume a checkpoint of the reached-only state format") {
+    import graft.algos.Sssp
+    val s = spark
+    import s.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-sssp-fmt").toString
+    val edges = loadFixture("dolphins")
+    val g = graphOf(edges).symmetrize
+    val root = edges.map(_._1).min
+    val want = Sssp.run(g, root).collect()
+      .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
+
+    // The old format kept reached vertices only, under extras without a
+    // format tag; resumed into the dense loop it would stay truncated.
+    val cm = new graft.checkpoint.CheckpointManager(dir, spark)
+    val oldFp = cm.graphFingerprint(g.edges, "sssp", root.toString)
+    cm.commit("sssp", 1,
+      Seq((root, 0.0, root, true)).toDF("id", "distance", "predecessor", "chg"),
+      Map("frontier" -> 1.0), oldFp)
+    cm.flush()
+    assert(cm.latestIteration("sssp", oldFp).contains(1))
+    assert(cm.latestIteration("sssp", Sssp.fingerprint(cm, g, root)).isEmpty)
+
+    val got = Sssp.run(g, root, Sssp.Config(checkpointEvery = 1000,
+        checkpoint = Some(cm)))
       .collect().map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
     assert(got == want)
   }
