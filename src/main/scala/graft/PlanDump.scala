@@ -10,7 +10,7 @@ import java.nio.file.{Files, Paths}
  * evidence for plans/r06. Iterative algorithms return a
  * Lineage-truncated frame (a flat LogicalRDD scan), so for those the
  * meaningful plan is the superstep body; where an algorithm has an
- * explain hook (e.g. SPARK_GRAFT_EXPLAIN in PageRank) the hook's
+ * explain hook (SPARK_GRAFT_EXPLAIN, see graft.core.Superstep) the hook's
  * stdout complements these files.
  *
  * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <q1>[,<q2>...]

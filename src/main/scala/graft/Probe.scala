@@ -41,7 +41,7 @@ object Probe {
       numPartitions = parts).cached()
     val e = g.numEdges
     val t0 = System.nanoTime()
-    val r = PageRank.run(g, PageRank.Config(verbose = true))
+    val r = PageRank.run(g)
     println(f"[probe] run-returned ${(System.nanoTime() - t0) / 1e9}%.2f")
     r.ranks.count()
     val sec = (System.nanoTime() - t0) / 1e9

@@ -41,7 +41,6 @@ object Bfs {
       maxDepth: Int = Int.MaxValue,
       checkpointEvery: Int = 10,
       checkpoint: Option[CheckpointManager] = None,
-      algoName: String = "bfs",
       // None = auto (direction-optimizing); Some(false)/Some(true)
       // force push-only / pull-only (testing + measurement).
       pull: Option[Boolean] = None)
@@ -148,8 +147,8 @@ object Bfs {
     val fp = cfg.checkpoint.map(_.graphFingerprint(
       edges, "bfs" +: sources.sorted.map(_.toString): _*)).getOrElse("")
     val resume = cfg.checkpoint.flatMap(cm =>
-      cm.latestIteration(cfg.algoName, fp).map(it =>
-        (it.toLong, cm.restore(cfg.algoName, it).repartition(p, col(ID)))))
+      cm.latestIteration("bfs", fp).map(it =>
+        (it.toLong, cm.restore("bfs", it).repartition(p, col(ID)))))
 
     var visited = Lineage.materialize(
       resume.map(_._2).getOrElse(
@@ -222,7 +221,7 @@ object Bfs {
           frontier = nextFrontier
           cfg.checkpoint.foreach { cm =>
             if (committed) {
-              cm.commit(cfg.algoName, depth.toInt, visited.df,
+              cm.commit("bfs", depth.toInt, visited.df,
                 Map("frontier" -> frontierSize.toDouble,
                   "depth" -> depth.toDouble), fp)
             }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -34,8 +34,7 @@ object ConnectedComponents {
   final case class Config(
       maxIter: Int = 200,
       checkpointEvery: Int = 10,
-      checkpoint: Option[CheckpointManager] = None,
-      algoName: String = "wcc")
+      checkpoint: Option[CheckpointManager] = None)
 
   final case class Result(
       components: DataFrame, // columns: id, component
@@ -62,54 +61,32 @@ object ConnectedComponents {
       .select(col(ID), col(ID).as(COMP), lit(true).as(CHANGED))
       .repartition(p, col(ID))
 
-    val fp = cfg.checkpoint.map(_.graphFingerprint(g.edges, "wcc"))
-      .getOrElse("")
-    val resume = cfg.checkpoint
-      .flatMap(cm => cm.latestIteration(cfg.algoName, fp).map(it =>
-        (it, cm.restore(cfg.algoName, it).repartition(p, col(ID)))))
-
-    var state = Lineage.materialize(resume.map(_._2).getOrElse(init), eager = false)
-    var iter = resume.map(_._1).getOrElse(0)
-    var active = 1L
-    var converged = false
-
-    CheckpointManager.committing(cfg.checkpoint) {
-      while (!converged && iter < cfg.maxIter) {
-        iter += 1
+    val r = Superstep.run(g, "wcc", cfg.maxIter, cfg.checkpoint,
+      cfg.checkpointEvery)(
+      init,
+      step = state => {
         // Only improved vertices broadcast their (smaller) label.
         val msgs = edges
-          .join(state.df.filter(col(CHANGED)).select(col(ID), col(COMP))
+          .join(state.filter(col(CHANGED)).select(col(ID), col(COMP))
               .hint("shuffle_hash"),
             edges(SRC) === col(ID))
           .select(col(DST), col(COMP).as("m"))
           .groupBy(DST)
           .agg(min("m").as("m"))
 
-        val next = Lineage.materialize(
-          state.df.join(msgs.hint("shuffle_hash"),
-              state.df(ID) === msgs(DST), "left")
-            .select(
-              state.df(ID),
-              least(state.df(COMP), coalesce(col("m"), state.df(COMP))).as(COMP),
-              (coalesce(col("m"), lit(Long.MaxValue)) < state.df(COMP)).as(CHANGED)),
-          eager = false)
-
-        active = next.df.filter(col(CHANGED)).count()
-        converged = active == 0L
-
-        CheckpointManager.release(cfg.checkpoint, state)
-        cfg.checkpoint.foreach { cm =>
-          if (converged || iter % cfg.checkpointEvery == 0) {
-            cm.commit(cfg.algoName, iter, next.df,
-              Map("active" -> active.toDouble), fp)
-          }
-        }
-        state = next
-      }
-    }
+        state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+          .select(
+            state(ID),
+            least(state(COMP), coalesce(col("m"), state(COMP))).as(COMP),
+            (coalesce(col("m"), lit(Long.MaxValue)) < state(COMP)).as(CHANGED))
+      },
+      check = (next, _) => {
+        val active = next.filter(col(CHANGED)).count()
+        (active == 0L, Map("active" -> active.toDouble))
+      })
 
     if (!callerCached) g.unpersist()
-    Result(state.df.select(col(ID), col(COMP)), iter, converged)
+    Result(r.state.df.select(col(ID), col(COMP)), r.iterations, r.converged)
   }
 
   /** Number of distinct components (reference:

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
 
 /**
@@ -31,53 +31,39 @@ object Eigenvector {
     val verts = Lineage.materialize(
       g.outWeightSums.select(col(ID)).repartition(p, col(ID)), eager = false)
     val v = verts.df.count()
-    if (v == 0) {
-      verts.release()
-      if (!callerCached) g.unpersist()
-      return Result(g.spark.emptyDataFrame, 0, converged = true)
-    }
 
     // State carries UNNORMALIZED sums plus a driver-side norm scalar:
     // the L2 aggregation is then also the action that materializes the
     // superstep (one job per iteration; the L1 convergence check adds
     // a second only when tol > 0 — tol=0 is the fixed-iteration /
     // oracle-parity path). `old` stores the previous NORMALIZED value.
+    // An empty graph converges at once.
     var norm = 1.0
-    var state = Lineage.materialize(
+    val r = Superstep.run(g, "eigenvector", cfg.maxIter)(
       verts.df.select(col(ID), lit(1.0 / v).as("raw"), lit(0.0).as("old")),
-      eager = false)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < cfg.maxIter) {
-      iter += 1
-      val msgs = g.edges
-        .join(state.df.select(col(ID), (col("raw") / norm).as("c"))
-            .hint("shuffle_hash"),
-          g.edges(SRC) === col(ID))
-        .select(col(DST), (col("c") * col(WEIGHT)).as("m"))
-        .groupBy(DST).agg(sum("m").as("m"))
-      val next = Lineage.materialize(
-        state.df.join(msgs.hint("shuffle_hash"),
-            state.df(ID) === msgs(DST), "left")
-          .select(state.df(ID),
+      step = state => {
+        val msgs = g.edges
+          .join(state.select(col(ID), (col("raw") / norm).as("c"))
+              .hint("shuffle_hash"),
+            g.edges(SRC) === col(ID))
+          .select(col(DST), (col("c") * col(WEIGHT)).as("m"))
+          .groupBy(DST).agg(sum("m").as("m"))
+        state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+          .select(state(ID),
             coalesce(col("m"), lit(0.0)).as("raw"),
-            (state.df("raw") / norm).as("old")),
-        eager = false)
-      val l2 = math.sqrt(
-        next.df.agg(sum(col("raw") * col("raw"))).head().getDouble(0))
-      if (cfg.tol > 0.0) {
-        val l1 = next.df.agg(sum(abs(col("raw") / l2 - col("old"))))
-          .head().getDouble(0)
-        converged = l1 < v * cfg.tol
-      }
-      norm = l2
-      state.release()
-      state = next
-    }
+            (state("raw") / norm).as("old"))
+      },
+      check = (next, _) => {
+        val l2 = math.sqrt(Superstep.total(next, col("raw") * col("raw")))
+        val converged = v == 0 || cfg.tol > 0.0 &&
+          Superstep.total(next, abs(col("raw") / l2 - col("old"))) < v * cfg.tol
+        norm = l2
+        (converged, Map.empty)
+      })
 
     verts.release()
     if (!callerCached) g.unpersist()
-    Result(state.df.select(col(ID), (col("raw") / norm).as("eigenvector")),
-      iter, converged)
+    Result(r.state.df.select(col(ID), (col("raw") / norm).as("eigenvector")),
+      r.iterations, r.converged)
   }
 }

@@ -55,7 +55,10 @@ object Hits {
     if (v == 0) {
       verts.release(); rev.unpersist()
       if (!callerCached) g.unpersist()
-      return Result(g.spark.emptyDataFrame, 0, converged = true)
+      val spark = g.spark
+      import spark.implicits._
+      return Result(Seq.empty[(Long, Double, Double)].toDF(ID, "hub", "auth"),
+        0, converged = true)
     }
 
     // State carries UNNORMALIZED sums (hub_raw, auth_raw) plus

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
 
 /**
@@ -36,41 +36,32 @@ object Katz {
 
     val verts = Lineage.materialize(
       g.outWeightSums.select(col(ID)).repartition(p, col(ID)), eager = false)
-    val init = verts.df.select(col(ID), lit(0.0).as("kz"), lit(0.0).as("old"))
-
-    var state = Lineage.materialize(init, eager = false)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < cfg.maxIter) {
-      iter += 1
-      val msgs = g.edges
-        .join(state.df.select(col(ID), col("kz")).hint("shuffle_hash"),
-          g.edges(SRC) === col(ID))
-        .select(col(DST), (col("kz") * col(WEIGHT)).as("m"))
-        .groupBy(DST).agg(sum("m").as("m"))
-      val next = Lineage.materialize(
-        state.df.join(msgs.hint("shuffle_hash"),
-            state.df(ID) === msgs(DST), "left")
-          .select(state.df(ID),
+    val r = Superstep.run(g, "katz", cfg.maxIter)(
+      verts.df.select(col(ID), lit(0.0).as("kz"), lit(0.0).as("old")),
+      step = state => {
+        val msgs = g.edges
+          .join(state.select(col(ID), col("kz")).hint("shuffle_hash"),
+            g.edges(SRC) === col(ID))
+          .select(col(DST), (col("kz") * col(WEIGHT)).as("m"))
+          .groupBy(DST).agg(sum("m").as("m"))
+        state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+          .select(state(ID),
             (lit(cfg.alpha) * coalesce(col("m"), lit(0.0)) + lit(cfg.beta))
               .as("kz"),
-            state.df("kz").as("old")),
-        eager = false)
-      val l1 = next.df.agg(sum(abs(col("kz") - col("old")))).head().getDouble(0)
-      converged = l1 < cfg.tol
-      state.release()
-      state = next
-    }
+            state("kz").as("old"))
+      },
+      check = (next, _) =>
+        (Superstep.total(next, abs(col("kz") - col("old"))) < cfg.tol, Map.empty))
 
+    val state = r.state.df
     val out =
       if (cfg.normalize) {
-        val l2 = math.sqrt(
-          state.df.agg(sum(col("kz") * col("kz"))).head().getDouble(0))
-        state.df.select(col(ID), (col("kz") / l2).as("katz"))
-      } else state.df.select(col(ID), col("kz").as("katz"))
+        val l2 = math.sqrt(Superstep.total(state, col("kz") * col("kz")))
+        state.select(col(ID), (col("kz") / l2).as("katz"))
+      } else state.select(col(ID), col("kz").as("katz"))
 
     verts.release()
     if (!callerCached) g.unpersist()
-    Result(out, iter, converged)
+    Result(out, r.iterations, r.converged)
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -37,8 +37,7 @@ object LabelPropagation {
   final case class Config(
       maxIter: Int = 20,
       checkpointEvery: Int = 10,
-      checkpoint: Option[CheckpointManager] = None,
-      algoName: String = "lpa")
+      checkpoint: Option[CheckpointManager] = None)
 
   final case class Result(
       labels: DataFrame, // columns: id, label
@@ -61,19 +60,11 @@ object LabelPropagation {
       .select(col(ID), col(ID).as(LBL))
       .repartition(p, col(ID))
 
-    val fp = cfg.checkpoint.map(_.graphFingerprint(g.edges, "lpa"))
-      .getOrElse("")
-    val resume = cfg.checkpoint
-      .flatMap(cm => cm.latestIteration(cfg.algoName, fp).map(it =>
-        (it, cm.restore(cfg.algoName, it).repartition(p, col(ID)))))
-
-    var state = Lineage.materialize(resume.map(_._2).getOrElse(init), eager = false)
-    var iter = resume.map(_._1).getOrElse(0)
-    var converged = false
-
-    CheckpointManager.committing(cfg.checkpoint) {
-      while (!converged && iter < cfg.maxIter) {
-        iter += 1
+    // A checkpoint stores the init columns (id, label), not chg.
+    val r = Superstep.run(g, "lpa", cfg.maxIter, cfg.checkpoint,
+      cfg.checkpointEvery)(
+      init,
+      step = state => {
         // Deterministic argmax: max over struct(count, -label) picks the
         // highest count, then (negated) the smallest label.
         // ONE exchange per iteration (the CoreNumber byDst pattern,
@@ -84,7 +75,7 @@ object LabelPropagation {
         // co-partitioned — where the two stacked groupBys otherwise
         // paid a hash(dst, label) exchange AND a hash(dst) exchange.
         val msgs = edges
-          .join(state.df.hint("shuffle_hash"), edges(SRC) === state.df(ID))
+          .join(state.hint("shuffle_hash"), edges(SRC) === state(ID))
           .select(col(DST), col(LBL))
           .repartition(p, col(DST))
           .groupBy(DST, LBL)
@@ -93,31 +84,18 @@ object LabelPropagation {
           .agg(max(struct(col("cnt"), (-col(LBL)).as("neg"))).as("top"))
           .select(col(DST), (-col("top.neg")).as("new_lbl"))
 
-        val next = Lineage.materialize(
-          state.df.join(msgs.hint("shuffle_hash"),
-              state.df(ID) === msgs(DST), "left")
-            .select(
-              state.df(ID),
-              coalesce(col("new_lbl"), state.df(LBL)).as(LBL),
-              (coalesce(col("new_lbl"), state.df(LBL)) =!= state.df(LBL))
-                .as("chg")),
-          eager = false)
-
-        val changed = next.df.filter(col("chg")).count()
-        converged = changed == 0L
-
-        CheckpointManager.release(cfg.checkpoint, state)
-        cfg.checkpoint.foreach { cm =>
-          if (converged || iter % cfg.checkpointEvery == 0) {
-            cm.commit(cfg.algoName, iter, next.df.select(ID, LBL),
-              Map("changed" -> changed.toDouble), fp)
-          }
-        }
-        state = next
-      }
-    }
+        state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+          .select(
+            state(ID),
+            coalesce(col("new_lbl"), state(LBL)).as(LBL),
+            (coalesce(col("new_lbl"), state(LBL)) =!= state(LBL)).as("chg"))
+      },
+      check = (next, _) => {
+        val changed = next.filter(col("chg")).count()
+        (changed == 0L, Map("changed" -> changed.toDouble))
+      })
 
     if (!callerCached) g.unpersist()
-    Result(state.df.select(col(ID), col(LBL)), iter, converged)
+    Result(r.state.df.select(col(ID), col(LBL)), r.iterations, r.converged)
   }
 }

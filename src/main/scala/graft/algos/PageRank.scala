@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
 
 /**
@@ -35,9 +35,9 @@ import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
  *     (`pagerank_impl.cuh:218-246`), never V messages.
  *   - L1 diff and the next dangling-sum come from ONE agg over the
  *     freshly cached state: one shuffle job + one scalar job per iter.
- *   - Lineage is truncated EVERY superstep (see [[graft.core.Lineage]]),
- *     and committed to the resumable checkpoint every `checkpointEvery`
- *     supersteps when a [[CheckpointManager]] is given.
+ *   - The loop is [[graft.core.Superstep]]: lineage is truncated EVERY
+ *     superstep, and committed to the resumable checkpoint every
+ *     `checkpointEvery` supersteps when a [[CheckpointManager]] is given.
  */
 object PageRank {
 
@@ -47,8 +47,6 @@ object PageRank {
       maxIter: Int = 100,
       checkpointEvery: Int = 10,
       checkpoint: Option[CheckpointManager] = None,
-      algoName: String = "pagerank",
-      verbose: Boolean = false,
       // Personalized PageRank: (id, value) rows; the teleport/dangling
       // mass is redistributed proportionally to value/sum(value) over
       // the listed vertices instead of uniformly (reference
@@ -86,19 +84,9 @@ object PageRank {
     // count is V — no separate distinct-vertices pass. Hash-partitioned
     // by id: the state layout, and (via the renamed src join below)
     // co-partitioned with the cached edge table.
-    val tSetup = System.nanoTime()
-    def lap(tag: String): Unit = if (cfg.verbose) {
-      println(f"[pagerank] setup:$tag ${(System.nanoTime() - tSetup) / 1e9}%.2f")
-    }
     val ows = Lineage.materialize(
       g.outWeightSums.repartition(p, col(ID)), eager = false)
     val v = ows.df.count()
-    lap("ows")
-    if (v == 0L) {
-      ows.release()
-      if (!callerCached) g.unpersist()
-      return Result(g.spark.emptyDataFrame, 0, converged = true, 0.0)
-    }
 
     // Pre-normalized edges: (src, dst, nw = w / outw(src)); any vertex
     // appearing as src has outw > 0. The join is co-partitioned on src,
@@ -143,29 +131,19 @@ object PageRank {
       .select(col(ID), col(PR), lit(0.0).as(OLD),
         (col("out_weight") === 0.0).as(DANG), col(PW))
 
-    // Resume from the latest committed superstep, if any — but only
-    // one committed for the SAME graph and config (fingerprint check).
-    val fp = cfg.checkpoint.map(_.graphFingerprint(
-      g.edges, "pagerank", cfg.alpha.toString,
-      cfg.personalization.isDefined.toString)).getOrElse("")
-    val resume = cfg.checkpoint
-      .flatMap(cm => cm.latestIteration(cfg.algoName, fp).map(it =>
-        (it, cm.restore(cfg.algoName, it).repartition(p, col(ID)))))
-
-    var state = Lineage.materialize(resume.map(_._2).getOrElse(init), eager = false)
-    var iter = resume.map(_._1).getOrElse(0)
-    var danglingSum = scalars(state.df)(0)
-    lap("init-state")
-
+    // Dangling sum of the current state: of the init (or resumed) state
+    // on the first superstep, then of each next state from its check.
+    var danglingSum: Option[Double] = None
     var l1 = Double.MaxValue
-    var converged = false
-    CheckpointManager.committing(cfg.checkpoint) {
-      while (!converged && iter < cfg.maxIter) {
-        iter += 1
-        val tIter = System.nanoTime()
+    val r = Superstep.run(g, "pagerank", cfg.maxIter, cfg.checkpoint,
+      cfg.checkpointEvery, Seq(cfg.alpha.toString,
+        cfg.personalization.isDefined.toString))(
+      init,
+      step = state => {
         // Redistributed mass this superstep; multiplied by the per-vertex
         // teleport weight (uniform 1/V or personalized).
-        val mass = danglingSum * cfg.alpha + (1.0 - cfg.alpha)
+        val mass = danglingSum.getOrElse(scalars(state)(0)) * cfg.alpha +
+          (1.0 - cfg.alpha)
 
         // shuffle_hash hints: without them Catalyst picks sort-merge and
         // re-SORTS the (cached, unsorted) edge table every superstep —
@@ -174,61 +152,35 @@ object PageRank {
         // edges unsorted; unlike a broadcast this stays valid when V is
         // huge, because the build is per co-partition, not per task.
         val msgs = normEdges
-          .join(state.df.select(col(ID), col(PR)).hint("shuffle_hash"),
+          .join(state.select(col(ID), col(PR)).hint("shuffle_hash"),
             normEdges(SRC) === col(ID))
           .select(col(DST), (col(PR) * col("nw")).as("m"))
           .groupBy(DST)
           .agg(sum("m").as("m"))
 
-        val nextPlan = state.df
-          .join(msgs.hint("shuffle_hash"), state.df(ID) === msgs(DST), "left")
+        state
+          .join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
           .select(
-            state.df(ID),
+            state(ID),
             (lit(cfg.alpha) * coalesce(col("m"), lit(0.0))
-              + lit(mass) * state.df(PW)).as(PR),
-            state.df(PR).as(OLD),
-            state.df(DANG),
-            state.df(PW))
-        if (cfg.verbose && iter == 1 &&
-            sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-          nextPlan.explain("formatted")
-        }
-        val next = Lineage.materialize(nextPlan, eager = false)
-
-        val tAgg = System.nanoTime()
-        val Array(dSum, l1Now) = scalars(next.df)
-        danglingSum = dSum
+              + lit(mass) * state(PW)).as(PR),
+            state(PR).as(OLD),
+            state(DANG),
+            state(PW))
+      },
+      check = (next, _) => {
+        val Array(dSum, l1Now) = scalars(next)
+        danglingSum = Some(dSum)
         l1 = l1Now
-        converged = l1 < cfg.tol
-        if (cfg.verbose) {
-          val gc = java.lang.management.ManagementFactory
-            .getGarbageCollectorMXBeans.stream()
-            .mapToLong(_.getCollectionTime).sum()
-          val tNow = System.nanoTime()
-          println(f"[pagerank] iter=$iter%d total=${(tNow - tIter) / 1e9}%.2f " +
-            f"plan=${(tAgg - tIter) / 1e9}%.2f agg=${(tNow - tAgg) / 1e9}%.2f " +
-            f"l1=$l1%.2e gc_cum_ms=$gc%d")
-        }
+        (l1 < cfg.tol, Map("l1_diff" -> l1, "dangling_sum" -> dSum,
+          "messages" -> v.toDouble))
+      })
 
-        CheckpointManager.release(cfg.checkpoint, state)
-        cfg.checkpoint.foreach { cm =>
-          if (converged || iter % cfg.checkpointEvery == 0) {
-            cm.commit(cfg.algoName, iter, next.df,
-              Map("l1_diff" -> l1, "dangling_sum" -> danglingSum,
-                "messages" -> v.toDouble), fp)
-          }
-        }
-        state = next
-      }
-    }
-
-    lap("loop-done")
     normEdges.unpersist()
     ows.release()
     if (!callerCached) g.unpersist()
-    lap("unpersist-done")
-    val ranks = state.df.select(col(ID), col(PR).as("pagerank"))
-    Result(ranks, iter, converged, l1)
+    val ranks = r.state.df.select(col(ID), col(PR).as("pagerank"))
+    Result(ranks, r.iterations, r.converged, l1)
   }
 
   /** One pass over cached state: (dangling sum of pr, L1 vs old_pr). */

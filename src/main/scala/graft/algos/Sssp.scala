@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
 
 /**
@@ -29,8 +29,7 @@ object Sssp {
   final case class Config(
       maxIter: Int = 10000,
       checkpointEvery: Int = 10,
-      checkpoint: Option[CheckpointManager] = None,
-      algoName: String = "sssp")
+      checkpoint: Option[CheckpointManager] = None)
 
   def run(g0: LinkGraph, source: Long, cfg: Config = Config()): DataFrame =
     graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, source, cfg))
@@ -57,11 +56,6 @@ object Sssp {
     // Bfs): refuses to resume a checkpoint of a different graph/source,
     // or one of the reached-only format, which the dense left join
     // would silently truncate to the reached vertices.
-    val fp = cfg.checkpoint.map(fingerprint(_, g, source)).getOrElse("")
-    val resume = cfg.checkpoint.flatMap(cm =>
-      cm.latestIteration(cfg.algoName, fp).map(it =>
-        (it, cm.restore(cfg.algoName, it).repartition(p, col(ID)))))
-
     val init = g.vertices.select(col(ID))
       .union(Seq(source).toDF(ID)) // a source outside the edge set
       .distinct()
@@ -70,19 +64,16 @@ object Sssp {
         when(col(ID) === source, lit(0.0)).as("distance"),
         when(col(ID) === source, lit(source)).as("predecessor"),
         (col(ID) === source).as("chg"))
-    var state = Lineage.materialize(
-      resume.map(_._2).getOrElse(init), eager = false)
-    var frontier = 1L
-    var iter = resume.map(_._1).getOrElse(0)
 
-    CheckpointManager.committing(cfg.checkpoint) {
-      while (frontier > 0 && iter < cfg.maxIter) {
-        iter += 1
+    val r = Superstep.run(g, Name, cfg.maxIter, cfg.checkpoint,
+      cfg.checkpointEvery, extras(source))(
+      init,
+      step = st => {
         // Relax out-edges of improved vertices; keep the best (distance,
         // predecessor) candidate per destination — min over struct gives
         // the deterministic (smallest-distance, then smallest-pred) pick.
         val cand = g.edges
-          .join(state.df.filter(col("chg"))
+          .join(st.filter(col("chg"))
               .select(col(ID), col("distance")).hint("shuffle_hash"),
             g.edges(SRC) === col(ID))
           .select(col(DST),
@@ -92,49 +83,37 @@ object Sssp {
           .agg(min("c").as("c"))
           .select(col(DST).as("cid"), col("c.d").as("nd"), col("c.pred").as("np"))
 
-        val st = state.df
         val better = col("nd") <
           coalesce(st("distance"), lit(Double.MaxValue))
-        val nextPlan = st
-          .join(cand.hint("shuffle_hash"), st(ID) === col("cid"), "left")
+        st.join(cand.hint("shuffle_hash"), st(ID) === col("cid"), "left")
           .select(st(ID),
             when(better, col("nd")).otherwise(st("distance")).as("distance"),
             when(better, col("np")).otherwise(st("predecessor"))
               .as("predecessor"),
             coalesce(better, lit(false)).as("chg"))
-        // Loop-shape evidence hook (same convention as PageRank's):
-        // the superstep plan, once, for plans/r06.
-        if (iter == 1 && sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-          nextPlan.explain("formatted")
-        }
-        val next = Lineage.materialize(nextPlan, eager = false)
-
-        frontier = next.df.filter(col("chg")).count()
-        CheckpointManager.release(cfg.checkpoint, state)
-        cfg.checkpoint.foreach { cm =>
-          if (frontier == 0 || iter % cfg.checkpointEvery == 0) {
-            cm.commit(cfg.algoName, iter, next.df,
-              Map("frontier" -> frontier.toDouble,
-                "iteration" -> iter.toDouble), fp)
-          }
-        }
-        state = next
-      }
-    }
+      },
+      check = (next, iter) => {
+        val frontier = next.filter(col("chg")).count()
+        (frontier == 0L, Map("frontier" -> frontier.toDouble,
+          "iteration" -> iter.toDouble))
+      })
 
     // Reached vertices only (the dense state's unreached rows carry
     // null distance) — same output contract as before.
     val out = Lineage.materialize(
-      state.df.filter(col("distance").isNotNull)
+      r.state.df.filter(col("distance").isNotNull)
         .select(col(ID), col("distance"), col("predecessor")))
-    state.release()
+    r.state.release()
     if (!callerCached) g.unpersist()
     out.df
   }
 
+  private val Name = "sssp"
+  private def extras(source: Long) = Seq("sssp-dense", source.toString)
+
   private[graft] def fingerprint(
       cm: CheckpointManager, g: LinkGraph, source: Long): String =
-    cm.graphFingerprint(g.edges, "sssp", "sssp-dense", source.toString)
+    cm.graphFingerprint(g.edges, Name +: extras(source): _*)
 
   /**
    * Drop unreachable rows from a BFS/SSSP result — reference

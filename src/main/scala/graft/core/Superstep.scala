@@ -1,0 +1,87 @@
+package graft.core
+
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.{col, sum}
+
+import graft.checkpoint.CheckpointManager
+import graft.core.LinkGraph.ID
+
+/**
+ * The superstep loop of PageRank, WCC, LPA, SSSP, Katz and Eigenvector.
+ * An algorithm supplies its init state, its superstep plan (`step`,
+ * from the current state to the next) and its convergence `check` on
+ * the next state; this loop owns the rest, in one order:
+ *
+ *   - resume: the latest superstep committed under `name` with this
+ *     run's fingerprint (the edge table plus `name +: extras`) is
+ *     restored, repartitioned by id, in place of `init`;
+ *   - every state is lineage-cut ([[Lineage.materialize]], lazily: the
+ *     check's action fills the cache);
+ *   - at most `maxIter` supersteps, fewer once `check` converges;
+ *   - the previous state is released, then the next one is committed
+ *     (when converged or every `checkpointEvery` supersteps) with the
+ *     check's metrics and the columns of `init`, all inside
+ *     [[CheckpointManager.committing]] — see the flush rule there.
+ *
+ * With SPARK_GRAFT_EXPLAIN set, the plan of superstep 1 is printed
+ * (`explain("formatted")`), the loop-shape evidence of plans/r06.
+ *
+ * Scalars carried between supersteps (PageRank's dangling sum,
+ * Eigenvector's norm) are the algorithm's own vars, set by `check` and
+ * read by `step`. BFS and HITS keep hand-written loops: BFS keeps every
+ * level alive and commits a frame it does not step, HITS materializes
+ * two frames per superstep.
+ */
+object Superstep {
+
+  /** The last state, still cached: the caller releases it, or returns
+   * a frame over it. */
+  final case class Result(state: Lineage.Handle, iterations: Int, converged: Boolean)
+
+  def run(
+      g: LinkGraph,
+      name: String,
+      maxIter: Int,
+      checkpoint: Option[CheckpointManager] = None,
+      checkpointEvery: Int = 1,
+      extras: Seq[String] = Nil)(
+      init: DataFrame,
+      step: DataFrame => DataFrame,
+      check: (DataFrame, Int) => (Boolean, Map[String, Double])): Result = {
+    val fp = checkpoint.map(_.graphFingerprint(g.edges, name +: extras: _*))
+      .getOrElse("")
+    val resume = checkpoint.flatMap(cm => cm.latestIteration(name, fp).map(it =>
+      (it, cm.restore(name, it).repartition(g.numPartitions, col(ID)))))
+    val committed = init.columns.map(col)
+
+    var state = Lineage.materialize(resume.map(_._2).getOrElse(init), eager = false)
+    var iter = resume.map(_._1).getOrElse(0)
+    var converged = false
+    CheckpointManager.committing(checkpoint) {
+      while (!converged && iter < maxIter) {
+        iter += 1
+        val plan = step(state.df)
+        if (iter == 1 && sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
+          plan.explain("formatted")
+        }
+        val next = Lineage.materialize(plan, eager = false)
+        val (done, metrics) = check(next.df, iter)
+        converged = done
+        CheckpointManager.release(checkpoint, state)
+        checkpoint.foreach { cm =>
+          if (converged || iter % checkpointEvery == 0) {
+            cm.commit(name, iter, next.df.select(committed: _*), metrics, fp)
+          }
+        }
+        state = next
+      }
+    }
+    Result(state, iter, converged)
+  }
+
+  /** Sum of `e` over `df`; 0 over no rows, where SQL's sum is null. */
+  def total(df: DataFrame, e: Column): Double = {
+    val r = df.agg(sum(e)).head()
+    if (r.isNullAt(0)) 0.0 else r.getDouble(0)
+  }
+}

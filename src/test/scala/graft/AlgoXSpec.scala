@@ -2,7 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.algos.{Bfs, Coarsen, CoreNumber, Eigenvector, Hits, Katz, Similarity}
+import graft.algos.{Bfs, Coarsen, ConnectedComponents, CoreNumber, Eigenvector, Hits,
+  Katz, LabelPropagation, PageRank, Similarity}
 
 class KatzSpec extends SparkSpec {
   test("katz matches reference-semantics oracle on karate") {
@@ -234,6 +235,23 @@ class SimilaritySpec extends SparkSpec {
       assert(math.abs(jac((u, v)) - j) < 1e-12)
       assert(math.abs(sor((u, v)) - s2) < 1e-12)
       assert(math.abs(ovl((u, v)) - o) < 1e-12)
+    }
+  }
+}
+
+class EmptyGraphSpec extends SparkSpec {
+  test("an empty edge table gives 0 rows with each algorithm's documented columns") {
+    val g = graphOf(Seq.empty)
+    val results = Seq(
+      PageRank.run(g).ranks -> Seq("id", "pagerank"),
+      Katz.run(g).centralities -> Seq("id", "katz"),
+      Eigenvector.run(g).centralities -> Seq("id", "eigenvector"),
+      Hits.run(g).scores -> Seq("id", "hub", "auth"),
+      ConnectedComponents.run(g).components -> Seq("id", "component"),
+      LabelPropagation.run(g).labels -> Seq("id", "label"))
+    results.foreach { case (df, cols) =>
+      assert(df.columns.toSeq == cols)
+      assert(df.count() == 0L, cols.mkString(","))
     }
   }
 }

@@ -202,29 +202,40 @@ class WebGraphPipelineSpec extends SparkSpec {
 class ResumeSpec extends SparkSpec {
 
   test("wcc resumes from checkpoint and matches an uninterrupted run") {
-    import graft.algos.ConnectedComponents
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-wcc").toString
-    val edges = loadFixture("karate-disjoint")
-    val g = graphOf(edges).symmetrize
+    // LPA too: its checkpoint stores (id, label), not its chg column.
+    import graft.algos.{ConnectedComponents, LabelPropagation}
+    import graft.checkpoint.CheckpointManager
+    val g = graphOf(loadFixture("karate-disjoint")).symmetrize
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // (name, committed columns, run(maxIter, checkpoint) = (labels,
+    // iterations, converged))
+    type Run = (Int, Option[CheckpointManager]) => (Map[Long, Long], Int, Boolean)
+    val loops: Seq[(String, Int, Run)] = Seq(
+      ("wcc", 3, (n, cm) => {
+        val r = ConnectedComponents.run(g, ConnectedComponents.Config(
+          maxIter = n, checkpointEvery = 1, checkpoint = cm))
+        (pairs(r.components), r.iterations, r.converged)
+      }),
+      ("lpa", 2, (n, cm) => {
+        val r = LabelPropagation.run(g, LabelPropagation.Config(
+          maxIter = n, checkpointEvery = 1, checkpoint = cm))
+        (pairs(r.labels), r.iterations, r.converged)
+      }))
+    for ((algo, columns, run) <- loops) {
+      val dir = java.nio.file.Files.createTempDirectory(s"graft-ckpt-$algo").toString
+      val full = run(20, None)
+      assert(full._3 && full._2 > 2, algo)
 
-    val full = ConnectedComponents.run(g)
-    val want = full.components.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // Phase 1: stop after 2 supersteps (commit every superstep).
+      val cm1 = new CheckpointManager(dir, spark)
+      run(2, Some(cm1))
+      assert(cm1.latestIteration(algo).contains(2))
+      assert(cm1.restore(algo, 2).columns.length == columns, algo)
 
-    // Phase 1: stop after 2 supersteps (commit every superstep).
-    val cm1 = new graft.checkpoint.CheckpointManager(dir, spark)
-    ConnectedComponents.run(g, ConnectedComponents.Config(maxIter = 2,
-      checkpointEvery = 1, checkpoint = Some(cm1)))
-    assert(cm1.latestIteration("wcc").contains(2))
-
-    // Phase 2: resume and finish; identical labeling.
-    val cm2 = new graft.checkpoint.CheckpointManager(dir, spark)
-    val resumed = ConnectedComponents.run(g,
-      ConnectedComponents.Config(checkpointEvery = 1, checkpoint = Some(cm2)))
-    assert(resumed.converged)
-    val got = resumed.components.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want)
+      // Phase 2: resume and finish; identical labels and superstep count.
+      assert(run(20, Some(new CheckpointManager(dir, spark))) == full, algo)
+    }
   }
 
   test("pagerank resumes from checkpoint and matches an uninterrupted run") {

@@ -47,6 +47,55 @@ class PlanShapeSpec extends SparkSpec {
     g.unpersist()
   }
 
+  test("superstep loops: jobs and exchanges per superstep of PageRank, WCC, LPA, SSSP") {
+    // The real loops, not a hand-built plan: each runs for 2 and then 3
+    // supersteps, and the difference is what ONE superstep starts — its
+    // jobs and its executed Exchanges: the submitted stages other than
+    // each job's result stage (a stage whose shuffle output is reused
+    // is skipped, not submitted).
+    import graft.algos.{ConnectedComponents, LabelPropagation, PageRank, Sssp}
+    val g = graphOf(loadFixture("karate")).symmetrize.cached()
+    g.edges.count()
+    val sc = spark.sparkContext
+    def counts(run: Int => Unit, iters: Int): (Int, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val stages = new java.util.concurrent.atomic.AtomicInteger()
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(
+            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          jobs.incrementAndGet()
+        override def onStageSubmitted(
+            e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+          stages.incrementAndGet()
+      }
+      org.apache.spark.ListenerBusDrain(sc)
+      sc.addSparkListener(l)
+      try { run(iters); org.apache.spark.ListenerBusDrain(sc) }
+      finally sc.removeSparkListener(l)
+      (jobs.get, stages.get - jobs.get)
+    }
+    def perSuperstep(run: Int => Unit): (Int, Int) = {
+      val (j2, x2) = counts(run, 2)
+      val (j3, x3) = counts(run, 3)
+      (j3 - j2, x3 - x2)
+    }
+    val loops: Seq[(String, Int => Unit)] = Seq(
+      "pagerank" -> (n => assert(!PageRank.run(g,
+        PageRank.Config(tol = 0.0, maxIter = n)).converged)),
+      "wcc" -> (n => assert(!ConnectedComponents.run(g,
+        ConnectedComponents.Config(maxIter = n)).converged)),
+      "lpa" -> (n => assert(!LabelPropagation.run(g,
+        LabelPropagation.Config(maxIter = n)).converged)),
+      "sssp" -> (n => Sssp.run(g, 0L, Sssp.Config(maxIter = n))))
+    try {
+      val got = loops.map { case (name, run) => name -> perSuperstep(run) }.toMap
+      // One job per superstep, the convergence aggregate; it runs the
+      // message reduce's exchange and its own single-partition one.
+      assert(got == Map("pagerank" -> (1, 2), "wcc" -> (1, 2),
+        "lpa" -> (1, 2), "sssp" -> (1, 2)))
+    } finally g.unpersist()
+  }
+
   test("neighbor sampling executes no window and no unbounded collect") {
     // The fanout sample must stay a bounded min-k AGGREGATION: a
     // per-src window rank (round-2 implementation) sorts a mega-hub's
