@@ -10,8 +10,7 @@ object IterProbe {
     val g = graft.queries.GraphQueries.chainGraph(spark, sfDir).cached()
     graft.algos.CoreNumber.run(g).count()
     println(s"[iterprobe] core_number iters=${graft.algos.CoreNumber.lastIterations}")
-    graft.algos.TriangleCount.twoCore(g).edges.count()
-    println(s"[iterprobe] two_core rounds=${graft.algos.TriangleCount.lastTwoCoreRounds}")
+    println(s"[iterprobe] two_core rounds=${graft.algos.TriangleCount.twoCore(g).rounds}")
     spark.stop()
   }
 }

@@ -133,19 +133,17 @@ object Betweenness {
 
   /** Returns (id, bc). */
   def run(g0: LinkGraph, cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
 
-  private def runImpl(g0: LinkGraph, cfg: Config): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph, cfg: Config): DataFrame = {
     val p = g.numPartitions
     val spark = g.spark
     val edges = g.edges.select(SRC, DST)
 
     val fw = forwardPhase(g, cfg) match {
       case None =>
-        if (!callerCached) g.unpersist()
-        return spark.emptyDataFrame
+        import spark.implicits._
+        return Seq.empty[(Long, Double)].toDF(ID, "bc")
       case Some(f) => f
     }
     val Forward(visited, depth, kUsed, n, verts) = fw
@@ -229,26 +227,23 @@ object Betweenness {
     if (!bcast) rev.unpersist()
     visited.release()
     verts.release()
-    if (!callerCached) g.unpersist()
     bc.df
   }
 
   /** Edge betweenness: (src, dst, bc) for every ARC of the input edge
    * table (zero-filled), reference `edge_betweenness_centrality`. */
   def runEdges(g0: LinkGraph, cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runEdgesImpl(g0, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runEdgesImpl(_, cfg))
 
-  private def runEdgesImpl(g0: LinkGraph, cfg: Config): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runEdgesImpl(g: LinkGraph, cfg: Config): DataFrame = {
     val p = g.numPartitions
     val spark = g.spark
     val edges = g.edges.select(SRC, DST)
 
     val fw = forwardPhase(g, cfg) match {
       case None =>
-        if (!callerCached) g.unpersist()
-        return spark.emptyDataFrame
+        import spark.implicits._
+        return Seq.empty[(Long, Long, Double)].toDF(SRC, DST, "bc")
       case Some(f) => f
     }
     val Forward(visited, depth, kUsed, n, verts) = fw
@@ -327,7 +322,6 @@ object Betweenness {
     if (!bcast) rev.unpersist()
     visited.release()
     verts.release()
-    if (!callerCached) g.unpersist()
     out.df
   }
 }

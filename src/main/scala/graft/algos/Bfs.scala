@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
 import graft.core.{Lineage, LinkGraph}
@@ -52,7 +51,7 @@ object Bfs {
    * filter_unreachable (`traversal/traveral_wrapper.pyx` sentinel
    * filter) is implicit here: unreached vertices are simply absent. */
   def run(g0: LinkGraph, sources: Seq[Long], cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, sources, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, sources, cfg))
 
   /**
    * One INDEPENDENT traversal per source in a single superstep loop —
@@ -71,9 +70,7 @@ object Bfs {
    */
   def multiSource(
       g0: LinkGraph, sources: Seq[Long], maxDepth: Int = Int.MaxValue): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark) {
-      val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-      val g = if (callerCached) g0 else g0.cached()
+    graft.core.SparkTuning.withGraph(g0) { g =>
       val spark = g.spark
       val p = g.numPartitions
       val edges = g.edges
@@ -114,13 +111,10 @@ object Bfs {
       }
       val out = Lineage.materialize(visited.df)
       frames.foreach(_.release())
-      if (!callerCached) g.unpersist()
       out.df
     }
 
-  private def runImpl(g0: LinkGraph, sources: Seq[Long], cfg: Config): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph, sources: Seq[Long], cfg: Config): DataFrame = {
     val spark = g.spark
     import spark.implicits._
     val p = g.numPartitions
@@ -235,7 +229,6 @@ object Bfs {
     val out = Lineage.materialize(visited.df)
     levels.foreach(_.release())
     if (allVertsInit) allVerts.release()
-    if (!callerCached) g.unpersist()
     out.df
   }
 }

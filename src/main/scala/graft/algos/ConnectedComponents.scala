@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
 import graft.core.{LinkGraph, Superstep}
@@ -45,13 +44,11 @@ object ConnectedComponents {
   private val CHANGED = "changed"
 
   def run(g0: LinkGraph, cfg: Config = Config()): Result =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
 
-  private def runImpl(g0: LinkGraph, cfg: Config): Result = {
+  private def runImpl(g: LinkGraph, cfg: Config): Result = {
     // One upfront cache of the edge table; vertices + the superstep
     // joins all read it (an uncached upstream plan would re-run per use).
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
     val p = g.numPartitions
     val edges = g.edges
 
@@ -85,7 +82,6 @@ object ConnectedComponents {
         (active == 0L, Map("active" -> active.toDouble))
       })
 
-    if (!callerCached) g.unpersist()
     Result(r.state.df.select(col(ID), col(COMP)), r.iterations, r.converged)
   }
 

@@ -61,13 +61,10 @@ object CoreNumber {
       g0: LinkGraph,
       maxIter: Int = 1000,
       degreeType: DegreeType = Out): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(
-      runImpl(g0, maxIter, degreeType))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, maxIter, degreeType))
 
   private def runImpl(
-      g0: LinkGraph, maxIter: Int, degreeType: DegreeType): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+      g: LinkGraph, maxIter: Int, degreeType: DegreeType): DataFrame = {
     val p = g.numPartitions
 
     val simple = g.edges.select(SRC, DST).filter(col(SRC) =!= col(DST))
@@ -216,7 +213,6 @@ object CoreNumber {
       state.df.select(col(ID), col("c").as("core_number")))
     state.release()
     if (degreeType != In) edges.unpersist()
-    if (!callerCached) g.unpersist()
     out.df
   }
 }

@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Lineage, LinkGraph}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
@@ -56,12 +55,13 @@ object Ecg {
       16, 10).cast("long")
 
   /** Full ECG: ensemble votes + final Louvain on the re-weighted graph. */
-  def run(g0: LinkGraph, cfg: Config = Config()): Result = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  def run(g0: LinkGraph, cfg: Config = Config()): Result =
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
+
+  private def runImpl(g: LinkGraph, cfg: Config): Result = {
     val p = g.numPartitions
 
-    val votes = runVotes(g, cfg)
+    val votes = runVotesImpl(g, cfg)
 
     // Final Louvain over the re-weighted (symmetrized) graph.
     val rew = votes.select(col(SRC), col(DST),
@@ -72,16 +72,16 @@ object Ecg {
       LinkGraph(LinkGraph.partitioned(sym, p), directed = false, p).cached(),
       cfg.finalLouvain)
 
-    if (!callerCached) g.unpersist()
     Result(fin.labels, votes.select(SRC, DST, "votes", "ecg_weight"),
       fin.modularity)
   }
 
   /** Ensemble phase only: per-canonical-edge co-membership votes and
    * ECG weights (src, dst, weight, votes, ecg_weight). */
-  def runVotes(g0: LinkGraph, cfg: Config = Config()): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  def runVotes(g0: LinkGraph, cfg: Config = Config()): DataFrame =
+    graft.core.SparkTuning.withGraph(g0)(runVotesImpl(_, cfg))
+
+  private def runVotesImpl(g: LinkGraph, cfg: Config): DataFrame = {
     val p = g.numPartitions
     val edges = g.edges
 
@@ -153,7 +153,6 @@ object Ecg {
             * col("votes") / cfg.ensembleSize))
     members.foreach(_.release())
 
-    if (!callerCached) g.unpersist()
     votes.df
   }
 }

@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
@@ -21,11 +20,9 @@ object Eigenvector {
   final case class Result(centralities: DataFrame, iterations: Int, converged: Boolean)
 
   def run(g0: LinkGraph, cfg: Config = Config()): Result =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
 
-  private def runImpl(g0: LinkGraph, cfg: Config): Result = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph, cfg: Config): Result = {
     val p = g.numPartitions
 
     val verts = Lineage.materialize(
@@ -62,7 +59,6 @@ object Eigenvector {
       })
 
     verts.release()
-    if (!callerCached) g.unpersist()
     Result(r.state.df.select(col(ID), (col("raw") / norm).as("eigenvector")),
       r.iterations, r.converged)
   }

@@ -33,11 +33,9 @@ object Hits {
   final case class Result(scores: DataFrame, iterations: Int, converged: Boolean)
 
   def run(g0: LinkGraph, cfg: Config = Config()): Result =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
 
-  private def runImpl(g0: LinkGraph, cfg: Config): Result = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph, cfg: Config): Result = {
     val p = g.numPartitions
 
     val fwd = g.edges.select(SRC, DST)
@@ -54,7 +52,6 @@ object Hits {
     val v = verts.df.count()
     if (v == 0) {
       verts.release(); rev.unpersist()
-      if (!callerCached) g.unpersist()
       val spark = g.spark
       import spark.implicits._
       return Result(Seq.empty[(Long, Double, Double)].toDF(ID, "hub", "auth"),
@@ -140,7 +137,6 @@ object Hits {
 
     verts.release()
     rev.unpersist()
-    if (!callerCached) g.unpersist()
     Result(out, iter, converged)
   }
 }

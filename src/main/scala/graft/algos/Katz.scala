@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
@@ -27,11 +26,9 @@ object Katz {
   final case class Result(centralities: DataFrame, iterations: Int, converged: Boolean)
 
   def run(g0: LinkGraph, cfg: Config = Config()): Result =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
 
-  private def runImpl(g0: LinkGraph, cfg: Config): Result = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph, cfg: Config): Result = {
     val p = g.numPartitions
 
     val verts = Lineage.materialize(
@@ -61,7 +58,6 @@ object Katz {
       } else state.select(col(ID), col("kz").as("katz"))
 
     verts.release()
-    if (!callerCached) g.unpersist()
     Result(out, r.iterations, r.converged)
   }
 }

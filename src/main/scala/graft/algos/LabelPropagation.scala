@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
 import graft.core.{LinkGraph, Superstep}
@@ -47,11 +46,9 @@ object LabelPropagation {
   private val LBL = "label"
 
   def run(g0: LinkGraph, cfg: Config = Config()): Result =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
 
-  private def runImpl(g0: LinkGraph, cfg: Config): Result = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph, cfg: Config): Result = {
     val p = g.numPartitions
     val edges = g.edges.filter(col(SRC) =!= col(DST))
 
@@ -95,7 +92,6 @@ object LabelPropagation {
         (changed == 0L, Map("changed" -> changed.toDouble))
       })
 
-    if (!callerCached) g.unpersist()
     Result(r.state.df.select(col(ID), col(LBL)), r.iterations, r.converged)
   }
 }

@@ -77,7 +77,7 @@ object Leiden {
 
   private def runImpl(g0: LinkGraph, cfg: Config): Result = {
     val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    if (g0.edges.isEmpty) return Result(g0.spark.emptyDataFrame, -1.0, 0)
+    if (g0.edges.isEmpty) return Result(Louvain.noLabels(g0.spark), -1.0, 0)
     var g = if (callerCached) g0 else g0.cached()
     var gOwned = !callerCached
     var gHandle: Lineage.Handle = null
@@ -148,7 +148,7 @@ object Leiden {
     if (gOwned) g.unpersist()
     if (gHandle != null) gHandle.release()
     Result(
-      if (flat == null) g0.spark.emptyDataFrame else flat.df,
+      if (flat == null) Louvain.noLabels(g0.spark) else flat.df,
       bestModularity, levels, dendro.toSeq)
   }
 }

@@ -1,6 +1,6 @@
 package graft.algos
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -100,7 +100,7 @@ object Louvain {
 
   private def runImpl(g0: LinkGraph, cfg: Config): Result = {
     val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    if (g0.edges.isEmpty) return Result(g0.spark.emptyDataFrame, -1.0, 0)
+    if (g0.edges.isEmpty) return Result(noLabels(g0.spark), -1.0, 0)
     var g = if (callerCached) g0 else g0.cached()
     // Whether the first-level cache behind `g` is ours to drop.
     var gOwned = !callerCached
@@ -165,10 +165,14 @@ object Louvain {
     if (gOwned) g.unpersist()
     if (gHandle != null) gHandle.release()
 
-    val labels =
-      if (flat == null) g0.spark.emptyDataFrame
-      else flat.df
+    val labels = if (flat == null) noLabels(g0.spark) else flat.df
     Result(labels, bestModularity, levels, dendro.toSeq)
+  }
+
+  /** 0 rows with the documented label columns (id, community). */
+  private[algos] def noLabels(spark: SparkSession): DataFrame = {
+    import spark.implicits._
+    Seq.empty[(Long, Long)].toDF(ID, "community")
   }
 
   /** One dendrogram level; returns (labels handle (id, lbl), level Q).

@@ -58,8 +58,6 @@ object Mst {
   /** Rounds taken by the most recent [[forest]] call (oracle sizing). */
   @volatile var lastRounds: Int = 0
 
-  private val debug = sys.env.contains("SPARK_GRAFT_MST_DEBUG")
-
   def forest(g0: LinkGraph, cfg: Config = Config()): DataFrame =
     graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
 
@@ -132,7 +130,6 @@ object Mst {
             col("old")),
         eager = false)
       changed = next.df.filter(col("m") < col("old")).count()
-      if (debug) println(s"[mst] inner iter=$guard changed=$changed")
       lab.release()
       lab = next
     }
@@ -210,8 +207,6 @@ object Mst {
           .select(col("cs").as("x"), col("cd").as("y")),
         eager = false)
       nPairs = ppH.df.count()
-      if (debug) println(s"[mst] round=$it pairs=$nPairs " +
-        f"t=${System.nanoTime() / 1e9}%.1f")
       if (nPairs > 0) {
         pickHandles += picksH
         mstUnion = Some(mstUnion.map(_.union(picksH.df)).getOrElse(picksH.df))

@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Lineage, LinkGraph}
 import graft.core.LinkGraph.{DST, ID, SRC}
@@ -39,8 +38,7 @@ object NeighborSampling {
       seeds: DataFrame,
       fanouts: Seq[Int],
       seed: Long = 42L): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(
-      runImpl(g0, seeds, fanouts, seed))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, seeds, fanouts, seed))
 
   /** Adjacency-list output form — the reference's
    * `sample_neighbors_adjacency_list` (vs the edge-list form above;
@@ -64,12 +62,10 @@ object NeighborSampling {
       .agg(sort_array(collect_list(col(DST))).as("nbrs"))
 
   private def runImpl(
-      g0: LinkGraph,
+      g: LinkGraph,
       seeds: DataFrame,
       fanouts: Seq[Int],
       seed: Long): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
     // Dedupe ONCE into the hop joins' src layout and materialize:
     // left lazy, every hop re-ran the E-sized distinct AND re-exchanged
     // its hash(src, dst) output to hash(src) inside the semi-join —
@@ -119,7 +115,6 @@ object NeighborSampling {
       out.getOrElse(g.spark.emptyDataFrame
         .select(lit(0L).as("hop"), lit(0L).as(SRC), lit(0L).as(DST))))
     scratch.foreach(_.release())
-    if (!callerCached) g.unpersist()
     result.df
   }
 }

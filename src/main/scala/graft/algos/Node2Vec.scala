@@ -3,7 +3,6 @@ package graft.algos
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Lineage, LinkGraph}
 import graft.core.LinkGraph.{DST, SRC, WEIGHT}
@@ -81,23 +80,22 @@ object Node2Vec {
 
   /** node2vec second-order walks. */
   def run(g0: LinkGraph, starts: DataFrame, cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(
-      walk(g0, starts, cfg.length, cfg.seed) { (cand, edges) =>
-        // adjacency check: is the candidate a neighbor of prev?
-        val adjPrev = edges.select(col(SRC).as("ap_src"), col(DST).as("ap_dst"))
-          .withColumn("is_adj", lit(true))
-        val bias = cand
-          .join(adjPrev,
-            cand("prev") === col("ap_src") && cand("nbr") === col("ap_dst"),
-            "left")
-          .select(cand("*"), coalesce(col("is_adj"), lit(false)).as("adj"))
-        val base =
-          when(col("nbr") === col("prev"), lit(1.0 / cfg.p))
-            .when(col("adj"), lit(1.0))
-            .otherwise(lit(1.0 / cfg.q))
-        bias.withColumn("wt",
-          if (cfg.weighted) base * col("ew") else base)
-      })
+    walk(g0, starts, cfg.length, cfg.seed) { (cand, edges) =>
+      // adjacency check: is the candidate a neighbor of prev?
+      val adjPrev = edges.select(col(SRC).as("ap_src"), col(DST).as("ap_dst"))
+        .withColumn("is_adj", lit(true))
+      val bias = cand
+        .join(adjPrev,
+          cand("prev") === col("ap_src") && cand("nbr") === col("ap_dst"),
+          "left")
+        .select(cand("*"), coalesce(col("is_adj"), lit(false)).as("adj"))
+      val base =
+        when(col("nbr") === col("prev"), lit(1.0 / cfg.p))
+          .when(col("adj"), lit(1.0))
+          .otherwise(lit(1.0 / cfg.q))
+      bias.withColumn("wt",
+        if (cfg.weighted) base * col("ew") else base)
+    }
 
   /** First-order biased walks: next ∝ edge weight. */
   def biased(
@@ -105,10 +103,9 @@ object Node2Vec {
       starts: DataFrame,
       length: Int = 4,
       seed: Long = 42L): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(
-      walk(g0, starts, length, seed) { (cand, _) =>
-        cand.withColumn("wt", col("ew"))
-      })
+    walk(g0, starts, length, seed) { (cand, _) =>
+      cand.withColumn("wt", col("ew"))
+    }
 
   /** Shared walk loop; `weigh` maps the candidate frame
    * (start, step, prev, vertex, nbr, ew) to one with a `wt` column. */
@@ -117,37 +114,35 @@ object Node2Vec {
       starts: DataFrame,
       length: Int,
       seed: Long)(
-      weigh: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
-    val edges = g.edges.select(col(SRC), col(DST), col(WEIGHT).as("ew"))
+      weigh: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    graft.core.SparkTuning.withGraph(g0) { g =>
+      val edges = g.edges.select(col(SRC), col(DST), col(WEIGHT).as("ew"))
 
-    var cur = Lineage.materialize(
-      starts.select(col(starts.columns.head).as("start"))
-        .withColumn("step", lit(0L))
-        .withColumn("prev", col("start"))
-        .withColumn("vertex", col("start")),
-      eager = false)
-    val segments = scala.collection.mutable.ArrayBuffer[Lineage.Handle](cur)
-    var out = cur.df.select("start", "step", "vertex")
+      var cur = Lineage.materialize(
+        starts.select(col(starts.columns.head).as("start"))
+          .withColumn("step", lit(0L))
+          .withColumn("prev", col("start"))
+          .withColumn("vertex", col("start")),
+        eager = false)
+      val segments = scala.collection.mutable.ArrayBuffer[Lineage.Handle](cur)
+      var out = cur.df.select("start", "step", "vertex")
 
-    for (step <- 1 to length) {
-      val cand = cur.df
-        .join(edges.hint("shuffle_hash"), cur.df("vertex") === edges(SRC))
-        .select(col("start"), col("prev"), col("vertex"),
-          edges(DST).as("nbr"), col("ew"))
-      val weighted = weigh(cand, edges)
-      val next = Lineage.materialize(selectNext(weighted, step, seed))
-      segments += next
-      out = out.union(next.df.select("start", "step", "vertex"))
-      cur = next
+      for (step <- 1 to length) {
+        val cand = cur.df
+          .join(edges.hint("shuffle_hash"), cur.df("vertex") === edges(SRC))
+          .select(col("start"), col("prev"), col("vertex"),
+            edges(DST).as("nbr"), col("ew"))
+        val weighted = weigh(cand, edges)
+        val next = Lineage.materialize(selectNext(weighted, step, seed))
+        segments += next
+        out = out.union(next.df.select("start", "step", "vertex"))
+        cur = next
+      }
+
+      val result = Lineage.materialize(out)
+      segments.foreach(_.release())
+      result.df
     }
-
-    val result = Lineage.materialize(out)
-    segments.foreach(_.release())
-    if (!callerCached) g.unpersist()
-    result.df
-  }
 
   /** Two-level bucketed cumulative inversion over one step's weighted
    * candidate frame (start, prev, vertex, nbr, ew, wt) → one

@@ -69,15 +69,9 @@ object PageRank {
   private val PW = "pw" // per-vertex teleport weight (1/V when uniform)
 
   def run(g0: LinkGraph, cfg: Config = Config()): Result =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
 
-  private def runImpl(g0: LinkGraph, cfg: Config): Result = {
-    // Cache the edge table up front: vertex set, counts, out-weights and
-    // normalized edges all derive from it — without this, an expensive
-    // upstream plan (e.g. corpus extraction) would re-run per use.
-    // Respect a caller-managed cache (don't re-layout or drop it).
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph, cfg: Config): Result = {
     val p = g.numPartitions
 
     // One-pass out-weight table (id, out_weight) for EVERY vertex; its
@@ -178,7 +172,6 @@ object PageRank {
 
     normEdges.unpersist()
     ows.release()
-    if (!callerCached) g.unpersist()
     val ranks = r.state.df.select(col(ID), col(PR).as("pagerank"))
     Result(ranks, r.iterations, r.converged, l1)
   }

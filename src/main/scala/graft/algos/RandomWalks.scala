@@ -38,11 +38,9 @@ object RandomWalks {
   final case class Config(length: Int = 4, seed: Long = 42L)
 
   def run(g0: LinkGraph, starts: DataFrame, cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, starts, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, starts, cfg))
 
-  private def runImpl(g0: LinkGraph, starts: DataFrame, cfg: Config): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph, starts: DataFrame, cfg: Config): DataFrame = {
     val p = g.numPartitions
 
     val edges = g.edges.select(SRC, DST).distinct()
@@ -93,7 +91,6 @@ object RandomWalks {
     segments.foreach(_.release())
     indexed.unpersist()
     degs.unpersist()
-    if (!callerCached) g.unpersist()
     result.df
   }
 

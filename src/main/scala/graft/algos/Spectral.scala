@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Lineage, LinkGraph}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
@@ -40,20 +39,10 @@ object Spectral {
 
   final case class Config(iterations: Int = 20, seed: Long = 42L)
 
-  private val debug = sys.env.contains("SPARK_GRAFT_SPECTRAL_DEBUG")
+  def fiedlerCut(g0: LinkGraph, cfg: Config = Config()): DataFrame =
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
 
-  def fiedlerCut(g0: LinkGraph, cfg: Config = Config()): DataFrame = {
-    val t0 = System.nanoTime()
-    val out = graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
-    if (debug) println(f"[spectral] fiedlerCut " +
-      f"thread=${Thread.currentThread.getId}%d " +
-      f"sec=${(System.nanoTime() - t0) / 1e9}%.2f")
-    out
-  }
-
-  private def runImpl(g0: LinkGraph, cfg: Config): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph, cfg: Config): DataFrame = {
     val p = g.numPartitions
     val edges = g.edges
 
@@ -110,7 +99,6 @@ object Spectral {
         when(col("x") > 0, 1L).otherwise(0L).as("cluster")))
     yPrev.foreach(_.release())
     deg.release()
-    if (!callerCached) g.unpersist()
     out.df
   }
 
@@ -137,11 +125,9 @@ object Spectral {
    * Returns (id, mod_micro, cluster ∈ {0, 1}).
    */
   def modularityCut(g0: LinkGraph, cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runModImpl(g0, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runModImpl(_, cfg))
 
-  private def runModImpl(g0: LinkGraph, cfg: Config): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runModImpl(g: LinkGraph, cfg: Config): DataFrame = {
     val p = g.numPartitions
     val edges = g.edges
 
@@ -195,7 +181,6 @@ object Spectral {
         when(col("x") > 0, 1L).otherwise(0L).as("cluster")))
     yPrev.foreach(_.release())
     deg.release()
-    if (!callerCached) g.unpersist()
     out.df
   }
 
@@ -207,15 +192,12 @@ object Spectral {
   def modularityMaximization(
       g0: LinkGraph, k: Int, cfg: Config = Config()): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.core.SparkTuning.withoutAqe(g0.spark) {
-      val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-      val g = if (callerCached) g0 else g0.cached()
+    graft.core.SparkTuning.withGraph(g0) { g =>
       val pinned = scala.collection.mutable.ArrayBuffer[LinkGraph]()
       val out = Lineage.materialize(
         clusterRec(g, g.vertices, k, 0L, cfg, pinned,
           (sg, c) => modularityCut(sg, c)))
       pinned.foreach(_.unpersist())
-      if (!callerCached) g.unpersist()
       out.df
     }
   }
@@ -244,9 +226,7 @@ object Spectral {
       cfg: Config = Config(),
       rootCut: Option[DataFrame] = None): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    graft.core.SparkTuning.withoutAqe(g0.spark) {
-      val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-      val g = if (callerCached) g0 else g0.cached()
+    graft.core.SparkTuning.withGraph(g0) { g =>
       // The recursion caches each induced subgraph; all of them must
       // stay pinned until the FINAL frame materializes (the per-level
       // labels are lazy views over them), then be dropped together.
@@ -259,7 +239,6 @@ object Spectral {
             if (rootPending.compareAndSet(true, false)) rootCut.get
             else fiedlerCut(sg, c)))
       pinned.foreach(_.unpersist())
-      if (!callerCached) g.unpersist()
       out.df
     }
   }
@@ -294,7 +273,7 @@ object Spectral {
     // The two sides are independent power iterations over disjoint
     // induced subgraphs — run them CONCURRENTLY (each is superstep-
     // latency-bound; a cached pool bounds threads by the ≤ k leaves,
-    // and the enclosing withoutAqe scope makes the nested ones
+    // and the enclosing withGraph scope makes the nested ones
     // restore-safe). Deterministic: each side is a pure function of
     // its own vertex set and seed.
     val pool = java.util.concurrent.Executors.newCachedThreadPool()

@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.checkpoint.CheckpointManager
 import graft.core.{Lineage, LinkGraph, Superstep}
@@ -32,11 +31,9 @@ object Sssp {
       checkpoint: Option[CheckpointManager] = None)
 
   def run(g0: LinkGraph, source: Long, cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, source, cfg))
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_, source, cfg))
 
-  private def runImpl(g0: LinkGraph, source: Long, cfg: Config): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph, source: Long, cfg: Config): DataFrame = {
     val spark = g.spark
     import spark.implicits._
     val p = g.numPartitions
@@ -104,7 +101,6 @@ object Sssp {
       r.state.df.filter(col("distance").isNotNull)
         .select(col(ID), col("distance"), col("predecessor")))
     r.state.release()
-    if (!callerCached) g.unpersist()
     out.df
   }
 

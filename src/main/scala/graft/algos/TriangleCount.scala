@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.LinkGraph
+import graft.core.{Lineage, LinkGraph}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -44,21 +44,20 @@ object TriangleCount {
   val DefaultBroadcastAdjBytes: Long = 64L << 20
 
   def run(g0: LinkGraph): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0))
+    graft.core.SparkTuning.withGraph(g0)(runImpl)
 
-  private def runImpl(g0: LinkGraph): DataFrame = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
-    val g = if (callerCached) g0 else g0.cached()
+  private def runImpl(g: LinkGraph): DataFrame = {
     val p = g.numPartitions
     val simple = g.withoutSelfLoops.dedupe
 
     // 2-core peel (reference: core_number OUT, k=2 — `:240-241`).
     // twoCore returns already-materialized (cached) edges.
-    val coreEdges = twoCore(simple).edges
+    val core = twoCore(simple)
+    val coreEdges = core.graph.edges
 
     // One oriented-adjacency entry per undirected edge: the cached
     // symmetric row count / 2 sizes the broadcast decision.
-    val bcast = lastTwoCoreEdges * 8L < DefaultBroadcastAdjBytes
+    val bcast = core.rows * 8L < DefaultBroadcastAdjBytes
 
     // Orient low→high by (degree, id); each undirected edge kept once.
     // Materialized ONCE (hash-partitioned by src so the adjacency
@@ -70,7 +69,7 @@ object TriangleCount {
     val degB = if (bcast) broadcast(deg) else deg
     val dSrc = degB.select(col(ID).as(SRC), col("d").as("ds"))
     val dDst = degB.select(col(ID).as(DST), col("d").as("dd"))
-    val orientedH = graft.core.Lineage.materialize(
+    val orientedH = Lineage.materialize(
       coreEdges
         .join(dSrc, Seq(SRC)).join(dDst, Seq(DST))
         .filter(col("ds") < col("dd") ||
@@ -109,13 +108,13 @@ object TriangleCount {
         .select(explode(col("tri")).as(ID), lit(1L).as("c")))
     val counts = credits.groupBy(ID).agg(sum("c").as("triangles"))
 
-    val out = graft.core.Lineage.materialize(
+    val out = Lineage.materialize(
       g.vertices.join(counts, Seq(ID), "left")
         .select(col(ID), coalesce(col("triangles"), lit(0L)).as("triangles")))
     withInter.unpersist()
     adj.unpersist()
     orientedH.release()
-    if (!callerCached) g.unpersist()
+    core.cache.release()
     out.df
   }
 
@@ -123,22 +122,22 @@ object TriangleCount {
   def total(perVertex: DataFrame): Long =
     perVertex.agg((sum("triangles") / 3).cast("long")).head().getLong(0)
 
+  /** A [[twoCore]] peel: the induced subgraph, its symmetric edge rows
+   * (free — the peel counts every round; they size [[run]]'s
+   * broadcast-vs-shuffle adjacency decision), the peel rounds taken
+   * (oracle sizing) and the cache behind the subgraph's edges, which
+   * the caller releases. */
+  final case class TwoCore(
+      graph: LinkGraph, rows: Long, rounds: Int, cache: Lineage.Handle)
+
   /**
    * 2-core: iteratively peel vertices with degree < 2 (reference core
    * number peeling, `/root/reference/cpp/src/cores/core_number_impl.cuh:86-328`,
    * restricted to k=2 which is all triangle counting needs). Returns
    * the induced subgraph on the 2-core.
    */
-  /** Peel rounds taken by the most recent [[twoCore]] (oracle sizing). */
-  @volatile var lastTwoCoreRounds: Int = 0
-
-  /** Symmetric edge rows surviving the most recent [[twoCore]] — free
-   * (the peel loop counts every round) and sizes [[run]]'s
-   * broadcast-vs-shuffle adjacency decision. */
-  @volatile var lastTwoCoreEdges: Long = 0L
-
-  def twoCore(g: LinkGraph, maxIter: Int = 100): LinkGraph = {
-    var cur = graft.core.Lineage.materialize(g.edges, eager = false)
+  def twoCore(g: LinkGraph, maxIter: Int = 100): TwoCore = {
+    var cur = Lineage.materialize(g.edges, eager = false)
     var n = cur.df.count()
     var changed = true
     var it = 0
@@ -157,15 +156,13 @@ object TriangleCount {
       val pruned = cur.df
         .join(if (bcastKeep) broadcast(keepS) else keepS, Seq(SRC), "left_semi")
         .join(if (bcastKeep) broadcast(keepD) else keepD, Seq(DST), "left_semi")
-      val next = graft.core.Lineage.materialize(pruned, eager = false)
+      val next = Lineage.materialize(pruned, eager = false)
       val m = next.df.count()
       changed = m < n
       n = m
       cur.release()
       cur = next
     }
-    lastTwoCoreRounds = it
-    lastTwoCoreEdges = n
-    LinkGraph(cur.df, g.directed, g.numPartitions)
+    TwoCore(LinkGraph(cur.df, g.directed, g.numPartitions), n, it, cur)
   }
 }

@@ -25,17 +25,8 @@ import org.apache.spark.storage.StorageLevel
  */
 object Lineage {
 
-  private val debug = sys.env.contains("SPARK_GRAFT_LINEAGE_DEBUG")
-
   final case class Handle(df: DataFrame, private val rdd: RDD[InternalRow]) {
-    def release(): Unit = {
-      if (debug) {
-        val at = Thread.currentThread.getStackTrace
-          .drop(2).find(_.getClassName.startsWith("graft"))
-        println(s"[lineage] release rdd=${rdd.id} at $at")
-      }
-      rdd.unpersist(blocking = false); ()
-    }
+    def release(): Unit = { rdd.unpersist(blocking = false); () }
   }
 
   /** Compute + cache `df`; return a plan-truncated equivalent. With
@@ -46,11 +37,6 @@ object Lineage {
       level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
       eager: Boolean = true): Handle = {
     val (out, rdd) = SqlInternals.truncate(df, level, eager)
-    if (debug) {
-      val at = Thread.currentThread.getStackTrace
-        .drop(2).find(_.getClassName.startsWith("graft"))
-      println(s"[lineage] materialize rdd=${rdd.id} eager=$eager at $at")
-    }
     Handle(out, rdd)
   }
 }

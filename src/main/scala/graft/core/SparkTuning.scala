@@ -1,6 +1,7 @@
 package graft.core
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.storage.StorageLevel
 
 /**
  * Session tuning scoped to the iterative (Pregel-style) algorithms.
@@ -26,6 +27,25 @@ object SparkTuning {
       case None => spark.conf.unset(key)
     }
   }
+
+  /**
+   * The one entry scope of the algorithms that read their input graph
+   * more than once: AQE off ([[withoutAqe]]), then `g0` cached through
+   * [[LinkGraph.cached]] unless the caller already persisted its edges
+   * (a caller-managed cache is neither re-laid-out nor dropped), then
+   * `f` on that graph. The copy cached here is released when `f`
+   * returns or throws. Like the reference's non-owning `graph_view_t`,
+   * `f` borrows the graph and never decides its lifetime; an uncached
+   * upstream plan (e.g. corpus extraction) would otherwise re-run for
+   * every read.
+   */
+  def withGraph[T](g0: LinkGraph)(f: LinkGraph => T): T =
+    withoutAqe(g0.spark) {
+      val owned = g0.edges.storageLevel == StorageLevel.NONE
+      val g = if (owned) g0.cached() else g0
+      try f(g)
+      finally if (owned) g.unpersist()
+    }
 
   /**
    * Run `f` with `spark.sql.shuffle.partitions` scoped to `n` —

@@ -106,9 +106,22 @@ class TriangleCountSpec extends SparkSpec {
     val edges = Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 3L, 1.0))
     val g = graphOf(edges).symmetrize
     val core = TriangleCount.twoCore(g)
-    assert(core.edges.count() == 0L)
+    assert(core.graph.edges.count() == 0L && core.rows == 0L)
+    core.cache.release()
     val counts = TriangleCount.run(g).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(counts.values.forall(_ == 0L))
+  }
+
+  test("run on a caller-cached graph keeps only the result's own cache") {
+    val g = graphOf(loadFixture("karate")).symmetrize.cached()
+    g.edges.count()
+    val sc = spark.sparkContext
+    // Ids, not a count: the context cleaner may drop older RDDs meanwhile.
+    val before = sc.getPersistentRDDs.keySet
+    val out = TriangleCount.run(g)
+    assert((sc.getPersistentRDDs.keySet -- before).size == 1)
+    assert(TriangleCount.total(out) == 45L)
+    g.unpersist()
   }
 }

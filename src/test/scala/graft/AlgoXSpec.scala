@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.algos.{Bfs, Coarsen, ConnectedComponents, CoreNumber, Eigenvector, Hits,
-  Katz, LabelPropagation, PageRank, Similarity}
+import graft.algos.{Betweenness, Bfs, Coarsen, ConnectedComponents, CoreNumber,
+  Eigenvector, Hits, Katz, LabelPropagation, Leiden, Louvain, PageRank, Similarity}
 
 class KatzSpec extends SparkSpec {
   test("katz matches reference-semantics oracle on karate") {
@@ -248,7 +248,11 @@ class EmptyGraphSpec extends SparkSpec {
       Eigenvector.run(g).centralities -> Seq("id", "eigenvector"),
       Hits.run(g).scores -> Seq("id", "hub", "auth"),
       ConnectedComponents.run(g).components -> Seq("id", "component"),
-      LabelPropagation.run(g).labels -> Seq("id", "label"))
+      LabelPropagation.run(g).labels -> Seq("id", "label"),
+      Betweenness.run(g) -> Seq("id", "bc"),
+      Betweenness.runEdges(g) -> Seq("src", "dst", "bc"),
+      Louvain.run(g).labels -> Seq("id", "community"),
+      Leiden.run(g).labels -> Seq("id", "community"))
     results.foreach { case (df, cols) =>
       assert(df.columns.toSeq == cols)
       assert(df.count() == 0L, cols.mkString(","))
