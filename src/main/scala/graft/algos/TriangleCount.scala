@@ -8,21 +8,35 @@ import graft.core.{Lineage, LinkGraph}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
- * Exact per-vertex triangle counting, reproducing the reference's
- * pipeline (`/root/reference/cpp/src/community/triangle_count_impl.cuh:146-443`):
+ * Exact per-vertex triangle counting after the reference's pipeline
+ * (`/root/reference/cpp/src/community/triangle_count_impl.cuh:146-443`),
+ * in a fixed number of Spark jobs however the graph is shaped:
  *
- *   1. drop self-loops (`:193-226`);
- *   2. prune to the 2-core — only 2-core vertices can be in a triangle
- *      (`:228-293`, via core_number with degree_type OUT, k=2);
- *   3. orient each undirected edge low→high by (degree, id) lexicographic
- *      so every edge survives exactly once (`:86-98`);
- *   4. for each oriented edge (u,v): intersect oriented neighbor lists,
- *      credit u, v, and every intersection vertex w
- *      (`transform_reduce_dst_nbr_intersection_of_e_endpoints_by_v.cuh`,
- *      op at `triangle_count_impl.cuh:100-113`);
- *   5. reduce per vertex; vertices outside the 2-core count 0.
+ *   1. drop self-loops and multi-edges (`:193-226`);
+ *   2. one degree table of that simple graph; its sum is |E|, which
+ *      sizes the broadcast-or-shuffle choice below;
+ *   3. orient each edge low→high by (degree, id) (`:86-98`), dropping
+ *      in the same joins every edge with an endpoint of degree < 2 —
+ *      the first round of the reference's 2-core prune (`:228-293`).
+ *      Later rounds would only drop edges that close no triangle, and
+ *      any total order finds each triangle exactly once, so the counts
+ *      do not depend on them;
+ *   4. group the oriented edges into adjacency lists N+(u); for every
+ *      oriented edge (u, v), intersect N+(u) with N+(v)
+ *      (`transform_reduce_dst_nbr_intersection_of_e_endpoints_by_v.cuh`)
+ *      and credit u, v and each shared neighbour from one generator
+ *      (op at `triangle_count_impl.cuh:100-113`);
+ *   5. reduce per vertex; every other vertex counts 0.
  *
- * Expects an undirected (symmetrized, deduped) graph.
+ * Jobs per call: the degree sum (which caches the degree table), one
+ * broadcast of the degree table read by both orientation joins, one
+ * broadcast of the cached adjacency for the intersect join, and the
+ * result. Past the 64 MB adjacency bound nothing is broadcast: the
+ * `src`-side degree join stays co-partitioned with the edges, the
+ * adjacency is laid out by its id, and only the `dst` side of each
+ * join is exchanged.
+ *
+ * Expects an undirected (symmetrized) graph.
  *
  * Scale: the low→high orientation bounds every oriented adjacency list
  * by O(sqrt(E)) — the classic arboricity argument — so the
@@ -32,89 +46,55 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  */
 object TriangleCount {
 
-  /** Broadcast the oriented adjacency when its estimated size is under
-   * this many bytes (entries × 8B plus per-row overhead). The oriented
-   * adjacency has exactly one entry per undirected edge, so this is a
-   * |E|-driven bound: under it, BOTH intersect joins become broadcast
-   * hash joins and the per-edge neighbor arrays never cross an
-   * exchange (measured at sf0.1: the duplicated (src, dst, nu) rows
-   * were the dominant shuffle — ~1 GB/round-trip for a 10 MB
-   * adjacency). Past the bound the original co-partitioned shuffle
-   * plan runs unchanged — the 100 TB posture does not regress. */
+  /** Broadcast the degree table and the oriented adjacency when 8
+   * bytes per symmetric edge row (twice the adjacency's entries) come
+   * to less than this; the orientation and intersect joins are then
+   * broadcast hash joins and the per-edge neighbour arrays never cross
+   * an exchange. */
   val DefaultBroadcastAdjBytes: Long = 64L << 20
 
   def run(g0: LinkGraph): DataFrame =
-    graft.core.SparkTuning.withGraph(g0)(runImpl)
+    graft.core.SparkTuning.withGraph(g0)(runImpl(_))
 
-  private def runImpl(g: LinkGraph): DataFrame = {
-    val p = g.numPartitions
-    val simple = g.withoutSelfLoops.dedupe
+  /** `adjBytes` replaces [[DefaultBroadcastAdjBytes]] so tests can force
+   * the shuffled plan on small inputs. */
+  private[graft] def runImpl(
+      g: LinkGraph, adjBytes: Long = DefaultBroadcastAdjBytes): DataFrame = {
+    val simple = g.withoutSelfLoops.dedupe.edges
+    val deg = simple.groupBy(col(SRC).as(ID)).agg(count(lit(1)).as("d"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    val rows = deg.agg(coalesce(sum("d"), lit(0L))).head().getLong(0)
+    val bcast = rows * 8L < adjBytes
+    def small(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
 
-    // 2-core peel (reference: core_number OUT, k=2 — `:240-241`).
-    // twoCore returns already-materialized (cached) edges.
-    val core = twoCore(simple)
-    val coreEdges = core.graph.edges
-
-    // One oriented-adjacency entry per undirected edge: the cached
-    // symmetric row count / 2 sizes the broadcast decision.
-    val bcast = core.rows * 8L < DefaultBroadcastAdjBytes
-
-    // Orient low→high by (degree, id); each undirected edge kept once.
-    // Materialized ONCE (hash-partitioned by src so the adjacency
-    // groupBy is exchange-free): it feeds both the adjacency build and
-    // the intersect probe side, and as a live plan it re-ran the
-    // degree joins per consumer action.
-    val deg = LinkGraph(coreEdges, directed = false, p).outDegrees
-      .select(col(ID), col("out_degree").as("d"))
-    val degB = if (bcast) broadcast(deg) else deg
-    val dSrc = degB.select(col(ID).as(SRC), col("d").as("ds"))
-    val dDst = degB.select(col(ID).as(DST), col("d").as("dd"))
-    val orientedH = Lineage.materialize(
-      coreEdges
-        .join(dSrc, Seq(SRC)).join(dDst, Seq(DST))
-        .filter(col("ds") < col("dd") ||
-          (col("ds") === col("dd") && col(SRC) < col(DST)))
-        .select(SRC, DST)
-        .repartition(p, col(SRC)),
-      eager = false)
-    val oriented = orientedH.df
-
-    // Oriented adjacency arrays, sorted for a merge-style intersect.
-    val adj0 = oriented
+    val kept = small(deg.filter(col("d") >= 2))
+    val adj = simple
+      .join(kept.select(col(ID).as(SRC), col("d").as("ds")), Seq(SRC))
+      .join(kept.select(col(ID).as(DST), col("d").as("dd")), Seq(DST))
+      .filter(col("ds") < col("dd") ||
+        (col("ds") === col("dd") && col(SRC) < col(DST)))
       .groupBy(col(SRC).as(ID))
-      .agg(sort_array(collect_list(col(DST))).as("nbrs"))
-    val adj = (if (bcast) adj0 else adj0.repartition(p, col(ID)))
+      .agg(collect_list(col(DST)).as("nbrs"))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
-    val adjB = if (bcast) broadcast(adj) else adj
-    val adjU = adjB.select(col(ID).as(SRC), col("nbrs").as("nu"))
-    val adjV = adjB.select(col(ID).as(DST), col("nbrs").as("nv"))
-    // Inner join: if v has no oriented out-edges the intersection is
-    // empty and the edge contributes nothing.
-    val withInter = oriented
-      .join(adjU, Seq(SRC))
-      .join(adjV, Seq(DST))
-      .select(col(SRC), col(DST),
-        array_intersect(col("nu"), col("nv")).as("tri"))
-      .filter(size(col("tri")) > 0)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // Credit src, dst, and each shared neighbor; reduce per vertex.
-    val credits = withInter
-      .select(col(SRC).as(ID), size(col("tri")).cast("long").as("c"))
-      .union(withInter
-        .select(col(DST).as(ID), size(col("tri")).cast("long").as("c")))
-      .union(withInter
-        .select(explode(col("tri")).as(ID), lit(1L).as("c")))
-    val counts = credits.groupBy(ID).agg(sum("c").as("triangles"))
+    // Every oriented edge (u, v) with N+(u), joined to N+(v).
+    val tri = adj
+      .select(col(ID).as(SRC), explode(col("nbrs")).as(DST), col("nbrs").as("nu"))
+      .join(small(adj).select(col(ID).as(DST), col("nbrs").as("nv")), Seq(DST))
+      .select(col(SRC), col(DST), array_intersect(col("nu"), col("nv")).as("w"))
+      .filter(size(col("w")) > 0)
+    // One generator: u and v once per closing vertex, then each w.
+    val n = size(col("w"))
+    val counts = tri
+      .select(explode(concat(
+        array_repeat(col(SRC), n), array_repeat(col(DST), n), col("w"))).as(ID))
+      .groupBy(ID).agg(count(lit(1)).as("triangles"))
 
     val out = Lineage.materialize(
       g.vertices.join(counts, Seq(ID), "left")
         .select(col(ID), coalesce(col("triangles"), lit(0L)).as("triangles")))
-    withInter.unpersist()
     adj.unpersist()
-    orientedH.release()
-    core.cache.release()
+    deg.unpersist()
     out.df
   }
 
@@ -122,19 +102,17 @@ object TriangleCount {
   def total(perVertex: DataFrame): Long =
     perVertex.agg((sum("triangles") / 3).cast("long")).head().getLong(0)
 
-  /** A [[twoCore]] peel: the induced subgraph, its symmetric edge rows
-   * (free — the peel counts every round; they size [[run]]'s
-   * broadcast-vs-shuffle adjacency decision), the peel rounds taken
-   * (oracle sizing) and the cache behind the subgraph's edges, which
-   * the caller releases. */
+  /** A [[twoCore]] peel: the induced subgraph, its symmetric edge rows,
+   * the peel rounds taken (oracle sizing) and the cache behind the
+   * subgraph's edges, which the caller releases. */
   final case class TwoCore(
       graph: LinkGraph, rows: Long, rounds: Int, cache: Lineage.Handle)
 
   /**
    * 2-core: iteratively peel vertices with degree < 2 (reference core
    * number peeling, `/root/reference/cpp/src/cores/core_number_impl.cuh:86-328`,
-   * restricted to k=2 which is all triangle counting needs). Returns
-   * the induced subgraph on the 2-core.
+   * restricted to k=2). Returns the induced subgraph on the 2-core.
+   * [[run]] does not need it (see step 3 there); q_core2 does.
    */
   def twoCore(g: LinkGraph, maxIter: Int = 100): TwoCore = {
     var cur = Lineage.materialize(g.edges, eager = false)

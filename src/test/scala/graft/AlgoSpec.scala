@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+
 import graft.algos.{ConnectedComponents, LabelPropagation, TriangleCount}
+import graft.core.{LinkGraph, SparkTuning}
 
 class WccSpec extends SparkSpec {
 
@@ -71,10 +74,11 @@ class LpaSpec extends SparkSpec {
 
 class TriangleCountSpec extends SparkSpec {
 
-  private def check(fixture: String): Unit = {
+  private def check(
+      fixture: String, run: LinkGraph => DataFrame = TriangleCount.run): Unit = {
     val edges = loadFixture(fixture)
     val g = graphOf(edges).symmetrize
-    val got = TriangleCount.run(g).collect()
+    val got = run(g).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val vertices = edges.flatMap(e => Seq(e._1, e._2)).distinct
     val want = RefOracles.triangles(edges, vertices)
@@ -99,6 +103,19 @@ class TriangleCountSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val vertices = edges.flatMap(e => Seq(e._1, e._2)).distinct
     assert(got == RefOracles.triangles(edges, vertices))
+  }
+
+  test("shuffled plan past the adjacency bound: exact on karate, dolphins, multi-edges, self-loops") {
+    // Nothing broadcast: the bound is forced to 0 and Spark's own
+    // size-based broadcast, which these small inputs would pass, is off.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def shuffled(g: LinkGraph): DataFrame = {
+      spark.conf.set(key, "-1")
+      try SparkTuning.withGraph(g)(TriangleCount.runImpl(_, adjBytes = 0L))
+      finally spark.conf.unset(key)
+    }
+    Seq("karate", "dolphins", "karate_multi_edge", "karate_s_loop")
+      .foreach(check(_, shuffled))
   }
 
   test("two-core prunes trees entirely") {

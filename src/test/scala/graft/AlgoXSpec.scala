@@ -3,7 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.algos.{Betweenness, Bfs, Coarsen, ConnectedComponents, CoreNumber,
-  Eigenvector, Hits, Katz, LabelPropagation, Leiden, Louvain, PageRank, Similarity}
+  Eigenvector, Hits, Katz, LabelPropagation, Leiden, Louvain, PageRank, Similarity,
+  TriangleCount}
 
 class KatzSpec extends SparkSpec {
   test("katz matches reference-semantics oracle on karate") {
@@ -252,7 +253,8 @@ class EmptyGraphSpec extends SparkSpec {
       Betweenness.run(g) -> Seq("id", "bc"),
       Betweenness.runEdges(g) -> Seq("src", "dst", "bc"),
       Louvain.run(g).labels -> Seq("id", "community"),
-      Leiden.run(g).labels -> Seq("id", "community"))
+      Leiden.run(g).labels -> Seq("id", "community"),
+      TriangleCount.run(g) -> Seq("id", "triangles"))
     results.foreach { case (df, cols) =>
       assert(df.columns.toSeq == cols)
       assert(df.count() == 0L, cols.mkString(","))

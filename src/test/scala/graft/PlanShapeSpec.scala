@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -21,6 +25,24 @@ class PlanShapeSpec extends SparkSpec {
     df.queryExecution.executedPlan.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
     }.length
+
+  /** `run`'s result, the jobs it starts and the number of stages it
+   * submits, read by a SparkListener that sees every event of the call. */
+  private def listen[T](run: => T): (T, Seq[SparkListenerJobStart], Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    val out = try { val r = run; ListenerBusDrain(sc); r }
+    finally sc.removeSparkListener(l)
+    (out, jobs.asScala.toSeq, stages.get)
+  }
 
   private def cachedGraph(): LinkGraph = {
     val edges = loadFixture("karate")
@@ -56,23 +78,9 @@ class PlanShapeSpec extends SparkSpec {
     import graft.algos.{ConnectedComponents, LabelPropagation, PageRank, Sssp}
     val g = graphOf(loadFixture("karate")).symmetrize.cached()
     g.edges.count()
-    val sc = spark.sparkContext
     def counts(run: Int => Unit, iters: Int): (Int, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val stages = new java.util.concurrent.atomic.AtomicInteger()
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          jobs.incrementAndGet()
-        override def onStageSubmitted(
-            e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-          stages.incrementAndGet()
-      }
-      org.apache.spark.ListenerBusDrain(sc)
-      sc.addSparkListener(l)
-      try { run(iters); org.apache.spark.ListenerBusDrain(sc) }
-      finally sc.removeSparkListener(l)
-      (jobs.get, stages.get - jobs.get)
+      val (_, jobs, stages) = listen(run(iters))
+      (jobs.size, stages - jobs.size)
     }
     def perSuperstep(run: Int => Unit): (Int, Int) = {
       val (j2, x2) = counts(run, 2)
@@ -94,6 +102,35 @@ class PlanShapeSpec extends SparkSpec {
       assert(got == Map("pagerank" -> (1, 2), "wcc" -> (1, 2),
         "lpa" -> (1, 2), "sssp" -> (1, 2)))
     } finally g.unpersist()
+  }
+
+  test("triangle count: a fixed number of jobs, each broadcast side built once") {
+    // Under the adjacency bound: the degree sum, one broadcast each of
+    // the degree table and the adjacency, and the result. Every
+    // executed BroadcastExchange runs one build job, tagged with its
+    // runId; a reused exchange runs none. Past the bound (with Spark's
+    // size-based broadcast off as well): the degree sum and the result.
+    import graft.algos.TriangleCount
+    val g = graphOf(loadFixture("karate")).symmetrize.cached()
+    g.edges.count()
+    def shape(adjBytes: Long): (Int, Int) = {
+      val (out, jobs, _) = listen(
+        graft.core.SparkTuning.withGraph(g)(TriangleCount.runImpl(_, adjBytes)))
+      assert(TriangleCount.total(out) == 45L)
+      val builds = jobs.flatMap(j =>
+        Option(j.properties.getProperty("spark.job.tags")).toSeq
+          .flatMap(_.split(",")).filter(_.startsWith("broadcast exchange")))
+      (jobs.size, builds.distinct.size)
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    try {
+      assert(shape(TriangleCount.DefaultBroadcastAdjBytes) == (4, 2))
+      spark.conf.set(key, "-1")
+      assert(shape(0L) == (2, 0))
+    } finally {
+      spark.conf.unset(key)
+      g.unpersist()
+    }
   }
 
   test("neighbor sampling executes no window and no unbounded collect") {

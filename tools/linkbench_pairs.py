@@ -14,6 +14,11 @@ change's median is worse than the parent's by more than the metric's
 bound. A gain is claimable when the change wins at
 least nine tenths of the pairs and the gap exceeds the parent's IQR.
 
+With `--trace 1 --layer <name>[,<name>...]` the runs are traced instead,
+and the report is each side's median of `<name>.{s,jobs,stages,tasks,task_s}`
+for each named layer: the layer-by-layer evidence that an optimization
+made its layer cheaper and left the others alone.
+
 `--parent-dir` is any checkout of the parent (a `git worktree` works);
 when it does not exist it is exported from `--parent-rev` with
 `git archive`. Both sides are built before the first pair, so no timed
@@ -51,10 +56,13 @@ def build(side_dir):
                    cwd=side_dir, check=True, stdout=subprocess.DEVNULL)
 
 
-def run_once(side_dir, workload, seed, seconds):
-    """The result line of one untraced run, or None when the run failed."""
+LAYER_METRICS = ("s", "jobs", "stages", "tasks", "task_s")
+
+
+def run_once(side_dir, workload, seed, seconds, trace):
+    """The result line of one run, or None when the run failed."""
     cmd = [sys.executable, os.path.join("linkbench", "run.py"), "--workload", workload,
-           "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
+           "--seed", str(seed), "--seconds", str(seconds), "--trace", str(trace)]
     out = subprocess.run(cmd, cwd=side_dir, stdout=subprocess.PIPE, stderr=subprocess.DEVNULL)
     lines = [l for l in out.stdout.decode(errors="replace").splitlines()
              if l.startswith('{"correct"')]
@@ -99,23 +107,37 @@ def main():
     p.add_argument("--seeds", required=True, help="e.g. 101-110 or 3,5,7")
     p.add_argument("--parent-dir", required=True)
     p.add_argument("--parent-rev", default="HEAD")
+    p.add_argument("--trace", type=int, choices=(0, 1), default=0)
+    p.add_argument("--layer", help="with --trace 1: the layers to report, e.g. triangles,wcc")
     a = p.parse_args()
+    if (a.trace == 1) != (a.layer is not None):
+        p.error("--layer goes with --trace 1, and --trace 1 needs --layer")
+
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        bench = json.load(f)
+    seconds = bench["run_seconds"]
+    if a.trace:
+        metrics = [{"name": f"{layer}.{m}"}
+                   for layer in a.layer.split(",") for m in LAYER_METRICS]
+        known = {m["name"] for m in bench["per_layer"]}
+        missing = [m["name"] for m in metrics if m["name"] not in known]
+        if missing:
+            sys.exit(f"not per-layer metrics of BENCHMARK.json: {', '.join(missing)}")
+    else:
+        metrics = bench["end_to_end"]
 
     if not os.path.isdir(a.parent_dir):
         export_parent(a.parent_rev, a.parent_dir)
     sides = {"parent": os.path.abspath(a.parent_dir), "change": ROOT}
     for d in sides.values():
         build(d)
-    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
-        bench = json.load(f)
-    metrics, seconds = bench["end_to_end"], bench["run_seconds"]
 
     pairs, runs = [], []
     for i, seed in enumerate(parse_seeds(a.seeds)):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
         got = {}
         for side in order:
-            got[side] = run_once(sides[side], a.workload, seed, seconds)
+            got[side] = run_once(sides[side], a.workload, seed, seconds, a.trace)
             runs.append({"seed": seed, "side": side, "result": got[side]})
         row = []
         for side in ("parent", "change"):
@@ -130,6 +152,22 @@ def main():
     if not pairs:
         sys.exit("no pair completed")
     print(f"\n{a.workload}: {len(pairs)} complete pairs")
+    if a.trace:
+        print(f"{'metric':<20} {'parent median':>14} {'change median':>14}")
+        for m in metrics:
+            name = m["name"]
+            med = [statistics.median(pair[i]["metrics"][name]["value"] for pair in pairs)
+                   for i in (0, 1)]
+            print(f"{name:<20} {med[0]:>14.3f} {med[1]:>14.3f}")
+    else:
+        print_claims(metrics, pairs)
+    failed = {side: sum(r["result"] is None or r["result"]["failed"] > 0 for r in runs
+                        if r["side"] == side) for side in sides}
+    print(f"runs with a failure or a failed check: parent {failed['parent']}, "
+          f"change {failed['change']}")
+
+
+def print_claims(metrics, pairs):
     print(f"{'metric':<12} {'parent q1/med/q3':>26} {'change q1/med/q3':>26} "
           f"{'wins':>6} {'gap':>8} {'p.IQR':>8}  claim  bound")
     for m in metrics:
@@ -138,10 +176,6 @@ def main():
               f"{s['wins']:>3}/{s['pairs']:<2} {s['gap']:>8.3f} {s['parent_iqr']:>8.3f}  "
               f"{'yes' if s['gain_claimable'] else 'no':<5}  "
               f"{'ok' if s['within_bound'] else 'WORSE'} ({s['bound']:.0%})")
-    failed = {side: sum(r["result"] is None or r["result"]["failed"] > 0 for r in runs
-                        if r["side"] == side) for side in sides}
-    print(f"runs with a failure or a failed check: parent {failed['parent']}, "
-          f"change {failed['change']}")
 
 
 if __name__ == "__main__":
