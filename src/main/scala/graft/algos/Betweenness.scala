@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, SparkTuning}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -89,7 +89,7 @@ object Betweenness {
     // per-level repartition disappears — the message reduce's partial
     // aggregation is the only exchange per level. Past the bound the
     // original shuffle plan runs unchanged.
-    val bcast = kUsed * n * 48L < (64L << 20)
+    val bcast = kUsed * n * 48L < SparkTuning.BroadcastBytes
 
     var frontier = Lineage.materialize(
       sources.select(col("s"), col("s").as("v"), lit(0L).as("dist"),
@@ -154,7 +154,7 @@ object Betweenness {
     // then streams the CACHED edge table in place — no rev
     // repartition/persist at all) and the term reduce's partial
     // aggregation is the level's only exchange.
-    val bcast = kUsed * n * 48L < (64L << 20)
+    val bcast = kUsed * n * 48L < SparkTuning.BroadcastBytes
     var level = Lineage.materialize(
       visited.df.filter(col("dist") === depth)
         .select(col("s"), col("v"), col("sigma"), lit(0.0).as("delta")))
@@ -249,7 +249,7 @@ object Betweenness {
     val Forward(visited, depth, kUsed, n, verts) = fw
 
     // Same k·n broadcast bound as [[runImpl]]'s backward phase.
-    val bcast = kUsed * n * 48L < (64L << 20)
+    val bcast = kUsed * n * 48L < SparkTuning.BroadcastBytes
     var level = Lineage.materialize(
       visited.df.filter(col("dist") === depth)
         .select(col("s"), col("v"), col("sigma"), lit(0.0).as("delta")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -52,11 +52,6 @@ object CoreNumber {
   case object Out extends DegreeType
   case object InOut extends DegreeType
 
-  /** Supersteps taken by the most recent [[run]] on this driver —
-   * instrumentation for benchmarks and for sizing the fixed-iteration
-   * SQL oracle (which must exceed the engine's fixpoint). */
-  @volatile var lastIterations: Int = 0
-
   def run(
       g0: LinkGraph,
       maxIter: Int = 1000,
@@ -102,14 +97,6 @@ object CoreNumber {
     val universe = g.edges.select(col(SRC).as(ID))
       .union(g.edges.select(col(DST).as(ID))).distinct()
     val degs = edges.groupBy(col(DST).as(ID)).agg(count(lit(1)).as("c"))
-    var state = Lineage.materialize(
-      universe
-        .join(degs, Seq(ID), "left")
-        .select(col(ID), least(coalesce(col("c"), lit(0L)), lit(cap)).as("c"),
-          lit(true).as("chg"))
-        .repartition(p, col(ID)),
-      eager = false)
-
     val nVerts = universe.count()
 
     // When the delivery table is small, the full-histogram exchange
@@ -123,95 +110,102 @@ object CoreNumber {
     // of O(E), and runs unchanged.
     val smallGraph = eRows < 1000000L
 
-    var iter = 0
-    var changed = nVerts // first round: everything is dirty
-    while (changed > 0 && iter < maxIter) {
-      iter += 1
-      // Neighbor-value stream (dst, c): the edges⋈state join is
-      // co-partitioned (edges by src, state by id) — zero exchange.
-      val joined = edges
-        .join(state.df.hint("shuffle_hash"), edges(SRC) === state.df(ID))
-        .select(col(DST), col("c"), col("chg"))
+    // Set by each check: the supersteps done, the vertices whose value
+    // changed in the last one (the first superstep finds everything
+    // dirty) and the round's dirty-set cache, released there.
+    var rounds = 0
+    var changed = nVerts
+    var dirtyCache: Option[DataFrame] = None
+    val r = Superstep.run(g, "core_number", maxIter)(
+      universe
+        .join(degs, Seq(ID), "left")
+        .select(col(ID), least(coalesce(col("c"), lit(0L)), lit(cap)).as("c"),
+          lit(true).as("chg"))
+        .repartition(p, col(ID)),
+      step = state => {
+        // Neighbor-value stream (dst, c): the edges⋈state join is
+        // co-partitioned (edges by src, state by id) — zero exchange.
+        val joined = edges
+          .join(state.hint("shuffle_hash"), edges(SRC) === state(ID))
+          .select(col(DST), col("c"), col("chg"))
 
-      // Convergence-tail frontier: h(v) can only change if some
-      // neighbor's c changed last round. Once the changed set is small
-      // (< 10% of V — measured best at sf0.1 vs 2%, 25%), restrict the
-      // histogram to the dirty dsts — tail rounds then cost
-      // O(frontier), not O(E).
-      val frontierMode = !smallGraph && iter > 1 && changed < nVerts / 10
-      var dirtyCache: Option[DataFrame] = None
-      val stream =
-        if (frontierMode) {
-          val dirtyPlan = edges
-            .join(state.df.filter(col("chg")).select(col(ID))
-                .hint("shuffle_hash"),
-              edges(SRC) === col(ID))
-            .select(col(DST)).distinct()
-          // The changed-vertex gate does NOT bound the dirty set — one
-          // changed mega-hub dirties every neighbor, approaching |V|.
-          // When |V| itself is broadcastable the bound is free (dirty
-          // ⊆ V) and the dirty set goes straight into a broadcast
-          // semi-join: no persist, no sizing count — one driver round
-          // trip per tail round instead of two. Only past 1M vertices
-          // is the materialize + count + decide machinery needed.
-          if (nVerts <= 1000000) {
-            joined.join(broadcast(dirtyPlan), Seq(DST), "left_semi")
-          } else {
-            val dirty = dirtyPlan.persist(StorageLevel.MEMORY_AND_DISK)
-            dirtyCache = Some(dirty)
-            val dirtyN = dirty.count()
-            if (dirtyN <= 1000000)
-              joined.join(broadcast(dirty), Seq(DST), "left_semi")
-            else
-              joined.join(dirty.hint("shuffle_hash"), Seq(DST), "left_semi")
-          }
-        } else joined
+        // Convergence-tail frontier: h(v) can only change if some
+        // neighbor's c changed last round. Once the changed set is
+        // small (< 10% of V — measured best at sf0.1 vs 2%, 25%),
+        // restrict the histogram to the dirty dsts — tail rounds then
+        // cost O(frontier), not O(E).
+        val frontierMode = !smallGraph && rounds > 0 && changed < nVerts / 10
+        val stream =
+          if (frontierMode) {
+            val dirtyPlan = edges
+              .join(state.filter(col("chg")).select(col(ID))
+                  .hint("shuffle_hash"),
+                edges(SRC) === col(ID))
+              .select(col(DST)).distinct()
+            // The changed-vertex gate does NOT bound the dirty set — one
+            // changed mega-hub dirties every neighbor, approaching |V|.
+            // When |V| itself is broadcastable the bound is free (dirty
+            // ⊆ V) and the dirty set goes straight into a broadcast
+            // semi-join: no persist, no sizing count — one driver round
+            // trip per tail round instead of two. Only past 1M vertices
+            // is the materialize + count + decide machinery needed.
+            if (nVerts <= 1000000) {
+              joined.join(broadcast(dirtyPlan), Seq(DST), "left_semi")
+            } else {
+              val dirty = dirtyPlan.persist(StorageLevel.MEMORY_AND_DISK)
+              dirtyCache = Some(dirty)
+              val dirtyN = dirty.count()
+              if (dirtyN <= 1000000)
+                joined.join(broadcast(dirty), Seq(DST), "left_semi")
+              else
+                joined.join(dirty.hint("shuffle_hash"), Seq(DST), "left_semi")
+            }
+          } else joined
 
-      // ONE exchange per round: hash by dst; both the (dst, c)
-      // histogram and the per-dst fold then aggregate exchange-free
-      // (HashPartitioning(dst) satisfies clustering for both), and the
-      // state-update join is dst≡id co-partitioned. (Measured: letting
-      // groupBy(dst, v) partial-aggregate map-side instead costs TWO
-      // exchanges and is ~25% slower at sf0.1 — the early rounds'
-      // degree-valued histograms barely combine.)
-      val byDst = stream.select(col(DST), col("c").as("v"))
-        .repartition(p, col(DST))
-      val hist = byDst
-        .groupBy(col(DST), col("v"))
-        .agg(count(lit(1)).as("cnt"))
-      // h = max over descending values v of min(v, suffix count),
-      // folded over the ≤ cap+1 histogram rows.
-      val h = hist
-        .groupBy(DST)
-        .agg(sort_array(collect_list(struct(col("v"), col("cnt"))),
-          asc = false).as("hist"))
-        .select(col(DST),
-          aggregate(
-            col("hist"),
-            struct(lit(0L).as("cum"), lit(0L).as("h")),
-            (acc, x) => struct(
-              (acc("cum") + x("cnt")).as("cum"),
-              greatest(acc("h"),
-                least(x("v"), acc("cum") + x("cnt"))).as("h")),
-            acc => acc("h")).as("h"))
+        // ONE exchange per round: hash by dst; both the (dst, c)
+        // histogram and the per-dst fold then aggregate exchange-free
+        // (HashPartitioning(dst) satisfies clustering for both), and the
+        // state-update join is dst≡id co-partitioned. (Measured: letting
+        // groupBy(dst, v) partial-aggregate map-side instead costs TWO
+        // exchanges and is ~25% slower at sf0.1 — the early rounds'
+        // degree-valued histograms barely combine.)
+        val byDst = stream.select(col(DST), col("c").as("v"))
+          .repartition(p, col(DST))
+        val hist = byDst
+          .groupBy(col(DST), col("v"))
+          .agg(count(lit(1)).as("cnt"))
+        // h = max over descending values v of min(v, suffix count),
+        // folded over the ≤ cap+1 histogram rows.
+        val h = hist
+          .groupBy(DST)
+          .agg(sort_array(collect_list(struct(col("v"), col("cnt"))),
+            asc = false).as("hist"))
+          .select(col(DST),
+            aggregate(
+              col("hist"),
+              struct(lit(0L).as("cum"), lit(0L).as("h")),
+              (acc, x) => struct(
+                (acc("cum") + x("cnt")).as("cum"),
+                greatest(acc("h"),
+                  least(x("v"), acc("cum") + x("cnt"))).as("h")),
+              acc => acc("h")).as("h"))
 
-      val next = Lineage.materialize(
-        state.df.join(h.hint("shuffle_hash"),
-            state.df(ID) === h(DST), "left")
-          .select(state.df(ID),
-            least(state.df("c"), coalesce(col("h"), state.df("c"))).as("c"),
-            (coalesce(col("h"), state.df("c")) < state.df("c")).as("chg")),
-        eager = false)
-      changed = next.df.filter(col("chg")).count()
-      dirtyCache.foreach(_.unpersist())
-      state.release()
-      state = next
-    }
+        state.join(h.hint("shuffle_hash"), state(ID) === h(DST), "left")
+          .select(state(ID),
+            least(state("c"), coalesce(col("h"), state("c"))).as("c"),
+            (coalesce(col("h"), state("c")) < state("c")).as("chg"))
+      },
+      check = (next, iter) => {
+        changed = next.filter(col("chg")).count()
+        rounds = iter
+        dirtyCache.foreach(_.unpersist())
+        dirtyCache = None
+        (changed == 0, Map.empty)
+      })
 
-    lastIterations = iter
     val out = Lineage.materialize(
-      state.df.select(col(ID), col("c").as("core_number")))
-    state.release()
+      r.state.df.select(col(ID), col("c").as("core_number")))
+    r.state.release()
     if (degreeType != In) edges.unpersist()
     out.df
   }

@@ -36,10 +36,6 @@ import graft.core.LinkGraph.ID
  */
 object ExtractPaths {
 
-  /** Doubling rounds taken by the most recent call (spec telemetry:
-   * a 1000-hop chain must finish in 10, not 1000). */
-  @volatile var lastRounds: Int = 0
-
   def fromPredecessors(
       traversal: DataFrame, // (id, distance, predecessor)
       destinations: DataFrame): DataFrame = {
@@ -67,7 +63,6 @@ object ExtractPaths {
     val rounds =
       if (maxPos <= 0L) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(maxPos)
-    lastRounds = rounds
 
     // J_0: one predecessor hop; the root maps to itself (saturation),
     // which keeps every composition total.

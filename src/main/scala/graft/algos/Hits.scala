@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -21,7 +21,8 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  * Physical: TWO cached edge layouts — forward partitioned by src for
  * the auth gather, reversed partitioned by dst for the hub gather —
  * the analog of the reference storing the transposed graph; both
- * superstep joins stay co-partitioned.
+ * superstep joins stay co-partitioned. The loop is
+ * [[graft.core.Superstep]]; the max-norms are its carried scalars.
  */
 object Hits {
 
@@ -59,72 +60,62 @@ object Hits {
     }
 
     // State carries UNNORMALIZED sums (hub_raw, auth_raw) plus
-    // driver-side max-norm scalars: the max aggregation is then also
-    // the action that materializes the superstep — one job per
-    // iteration (plus the L1 check only when tol > 0; tol=0 is the
-    // fixed-iteration / oracle-parity path). prev_hub stores the
-    // previous NORMALIZED hub for the L1 diff.
+    // driver-side max-norm scalars, set by the check: the max
+    // aggregation is then also the action that materializes the
+    // superstep — one job per iteration (plus the L1 check only when
+    // tol > 0; tol=0 is the fixed-iteration / oracle-parity path).
+    // prev_hub stores the previous NORMALIZED hub for the L1 diff.
     var hubNorm = 1.0
     var authNorm = 1.0
-    var state = Lineage.materialize(
+    // The superstep's auth gather, released by its check.
+    var authRawH: Lineage.Handle = null
+    val r = Superstep.run(g, "hits", cfg.maxIter)(
       verts.df.select(col(ID), lit(1.0 / v).as("hub_raw"),
         lit(0.0).as("auth_raw")),
-      eager = false)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < cfg.maxIter) {
-      iter += 1
-      // auth_raw(v) = sum of hub(u) over in-edges (hub normalized lazily).
-      // Materialized: the frame feeds BOTH the hub gather and the state
-      // join below — left as a view, its whole subtree (edge join +
-      // reduce) would execute twice inside the superstep job.
-      val authRawH = Lineage.materialize(
-        fwd
-          .join(state.df.select(col(ID), (col("hub_raw") / hubNorm).as("hub"))
-              .hint("shuffle_hash"),
-            fwd(SRC) === col(ID))
-          .select(col(DST).as(ID), col("hub").as("m"))
-          .groupBy(ID).agg(sum("m").as("auth_in")),
-        eager = false)
-      val authRaw = authRawH.df
-      // hub_raw(u) = sum of auth_raw(v) over out-edges (gather via rev)
-      val hubRaw = rev
-        .join(authRaw.hint("shuffle_hash"), rev(DST) === authRaw(ID))
-        .select(rev(SRC).as(ID), col("auth_in").as("m"))
-        .groupBy(ID).agg(sum("m").as("hub_in"))
+      step = state => {
+        // auth_raw(v) = sum of hub(u) over in-edges (hub normalized
+        // lazily). Materialized: the frame feeds BOTH the hub gather
+        // and the state join below — left as a view, its whole subtree
+        // (edge join + reduce) would execute twice inside the
+        // superstep job.
+        authRawH = Lineage.materialize(
+          fwd
+            .join(state.select(col(ID), (col("hub_raw") / hubNorm).as("hub"))
+                .hint("shuffle_hash"),
+              fwd(SRC) === col(ID))
+            .select(col(DST).as(ID), col("hub").as("m"))
+            .groupBy(ID).agg(sum("m").as("auth_in")),
+          eager = false)
+        val authRaw = authRawH.df
+        // hub_raw(u) = sum of auth_raw(v) over out-edges (gather via rev)
+        val hubRaw = rev
+          .join(authRaw.hint("shuffle_hash"), rev(DST) === authRaw(ID))
+          .select(rev(SRC).as(ID), col("auth_in").as("m"))
+          .groupBy(ID).agg(sum("m").as("hub_in"))
 
-      val nextPlan = state.df
-        .join(authRaw.withColumnRenamed(ID, "va").hint("shuffle_hash"),
-          state.df(ID) === col("va"), "left")
-        .join(hubRaw.withColumnRenamed(ID, "vh").hint("shuffle_hash"),
-          state.df(ID) === col("vh"), "left")
-        .select(state.df(ID),
-          coalesce(col("hub_in"), lit(0.0)).as("hub_raw"),
-          coalesce(col("auth_in"), lit(0.0)).as("auth_raw"),
-          (state.df("hub_raw") / hubNorm).as("prev_hub"))
-      // Loop-shape evidence hook: the full-iteration plan (auth gather
-      // + hub gather over rev + state update), once.
-      if (iter == 1 && sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-        nextPlan.explain("formatted")
-      }
-      val next = Lineage.materialize(nextPlan, eager = false)
-
-      val m = next.df.agg(max("hub_raw"), max("auth_raw")).head()
-      val (hubMax, authMax) = (m.getDouble(0), m.getDouble(1))
-      if (cfg.tol > 0.0) {
-        val l1 = next.df
+        state
+          .join(authRaw.withColumnRenamed(ID, "va").hint("shuffle_hash"),
+            state(ID) === col("va"), "left")
+          .join(hubRaw.withColumnRenamed(ID, "vh").hint("shuffle_hash"),
+            state(ID) === col("vh"), "left")
+          .select(state(ID),
+            coalesce(col("hub_in"), lit(0.0)).as("hub_raw"),
+            coalesce(col("auth_in"), lit(0.0)).as("auth_raw"),
+            (state("hub_raw") / hubNorm).as("prev_hub"))
+      },
+      check = (next, _) => {
+        val m = next.agg(max("hub_raw"), max("auth_raw")).head()
+        val (hubMax, authMax) = (m.getDouble(0), m.getDouble(1))
+        val converged = cfg.tol > 0.0 && next
           .agg(sum(abs(col("hub_raw") / hubMax - col("prev_hub"))))
-          .head().getDouble(0)
-        converged = l1 < cfg.tol
-      }
-      hubNorm = hubMax
-      authNorm = authMax
-      authRawH.release()
-      state.release()
-      state = next
-    }
+          .head().getDouble(0) < cfg.tol
+        hubNorm = hubMax
+        authNorm = authMax
+        authRawH.release()
+        (converged, Map.empty)
+      })
 
-    val normalized = state.df.select(col(ID),
+    val normalized = r.state.df.select(col(ID),
       (col("hub_raw") / hubNorm).as("hub"),
       (col("auth_raw") / authNorm).as("auth"))
     val out =
@@ -137,6 +128,6 @@ object Hits {
 
     verts.release()
     rev.unpersist()
-    Result(out, iter, converged)
+    Result(out, r.iterations, r.converged)
   }
 }

@@ -50,9 +50,6 @@ object Hungarian {
   final case class Result(
       assignments: DataFrame, totalCost: Double, rounds: Int)
 
-  /** Jacobi rounds taken by the most recent [[assign]] call. */
-  @volatile var lastRounds: Int = 0
-
   private val W = "vertex"
   private val J = "assignment"
 
@@ -149,7 +146,11 @@ object Hungarian {
         Some(deduped.join(keep, Seq(W, J), "left_semi").cache())
       } else None
     val work = prunedOpt.getOrElse(deduped)
-    val m = prunedOpt.map(_.select(J).distinct().count()).getOrElse(m0)
+    // The pruned table's own job universe and rows, in one job.
+    val (m, workEdges) = prunedOpt.map { t =>
+      val r = t.agg(countDistinct(col(J)), count(lit(1))).head()
+      (r.getLong(0), r.getLong(1))
+    }.getOrElse((m0, edges0))
 
     val dummyBase = math.min(minW, 0L) - 1
     val padded =
@@ -158,13 +159,14 @@ object Hungarian {
         .crossJoin(spark.range(m - n0).select((lit(dummyBase) - col("id")).as(W)))
         .select(col(W), col(J), lit(0.0).as("cost"))
         .unionByName(work)
-    val paddedEdges = edges0 + (m - n0) * m
-    val result =
+    val paddedEdges = workEdges + (m - n0) * m
+    // Both paths return a materialized frame (driver rows, or a counted
+    // cache), so the prune is read for the last time once they return.
+    try {
       if (paddedEdges <= localThreshold)
         assignLocal(spark, padded, maxRounds, dummyBase)
       else assignDistributed(spark, padded, maxRounds, dummyBase)
-    prunedOpt.foreach(_.unpersist())
-    result
+    } finally prunedOpt.foreach(_.unpersist())
   }
 
   /** Integer micro-benefit: b = -round(cost*1e6) * (n+1). The final
@@ -244,7 +246,6 @@ object Hungarian {
       }
       if (eps == 1L) phaseDone = true else eps = math.max(1L, eps / 4)
     }
-    lastRounds = rounds
 
     val chosen = workers.indices
       .filter(wi => workers(wi) > dummyBase)
@@ -334,7 +335,6 @@ object Hungarian {
       }
       if (eps == 1L) phaseDone = true else eps = math.max(1L, eps / 4)
     }
-    lastRounds = rounds
 
     val chosen = asg.df.join(
         edges.df.select(col(W), col(J), col("cost")), Seq(W, J))

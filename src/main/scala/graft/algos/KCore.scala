@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{LinkGraph, SparkTuning, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -29,57 +28,56 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  */
 object KCore {
 
-  /** Peel rounds taken by the most recent [[subgraph]] call (used to
+  /** A [[subgraph]] result: the k-core and the peel rounds taken (they
    * size the unrolled SQL oracle). */
-  @volatile var lastRounds: Int = 0
+  final case class Result(graph: LinkGraph, rounds: Int)
 
-  /** Iterative peel. `degreeType` (reference `algorithms.hpp:1636`):
-   * Out counts src-side edges (= total degree on a symmetric table —
-   * the undirected default), In counts dst-side, InOut both. Every
-   * vertex of the graph must survive the typed-degree test; edges keep
-   * only surviving endpoints. */
+  /** Iterative peel on [[Superstep]]. `degreeType` (reference
+   * `algorithms.hpp:1636`): Out counts src-side edges (= total degree
+   * on a symmetric table — the undirected default), In counts
+   * dst-side, InOut both. Every vertex of the graph must survive the
+   * typed-degree test; edges keep only surviving endpoints. */
   def subgraph(
       g: LinkGraph,
       k: Int,
       maxIter: Int = 100,
-      degreeType: CoreNumber.DegreeType = CoreNumber.Out): LinkGraph = {
+      degreeType: CoreNumber.DegreeType = CoreNumber.Out): Result = {
     require(k >= 1, s"k must be >= 1, got $k")
-    var cur = Lineage.materialize(
-      g.edges.filter(col(SRC) =!= col(DST)), eager = false)
-    var n = cur.df.count()
-    var changed = n > 0
-    var it = 0
-    while (changed && n > 0 && it < maxIter) {
-      it += 1
-      val degStream = degreeType match {
-        case CoreNumber.Out => cur.df.select(col(SRC).as(ID))
-        case CoreNumber.In => cur.df.select(col(DST).as(ID))
-        case CoreNumber.InOut => cur.df.select(col(SRC).as(ID))
-          .union(cur.df.select(col(DST).as(ID)))
-      }
-      val keep = degStream.groupBy(ID).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k)
-        .select(ID)
-      // The survivor set is bounded by V <= 2·(edge rows): broadcast
-      // it into BOTH semi-joins when it fits (guide §3.1) — the
-      // dst-side semi-join otherwise re-exchanges the whole edge
-      // table every peel round (its layout is hash(src)). Past the
-      // bound the shuffled semi-joins run as before.
-      val bcastKeep = n * 64L < (64L << 20)
-      val keepS = keep.withColumnRenamed(ID, SRC)
-      val keepD = keep.withColumnRenamed(ID, DST)
-      val pruned = cur.df
-        .join(if (bcastKeep) broadcast(keepS) else keepS, Seq(SRC), "left_semi")
-        .join(if (bcastKeep) broadcast(keepD) else keepD, Seq(DST), "left_semi")
-      val next = Lineage.materialize(pruned, eager = false)
-      val m = next.df.count()
-      changed = m < n
-      n = m
-      cur.release()
-      cur = next
-    }
-    lastRounds = it
-    LinkGraph(cur.df, g.directed, g.numPartitions)
+    // Edge rows of the current state: counted by the first step, then
+    // by each check, whose count also fills the next state's cache.
+    var rows = -1L
+    val r = Superstep.run(g, "kcore", maxIter)(
+      g.edges.filter(col(SRC) =!= col(DST)),
+      step = cur => {
+        if (rows < 0) rows = cur.count()
+        val degStream = degreeType match {
+          case CoreNumber.Out => cur.select(col(SRC).as(ID))
+          case CoreNumber.In => cur.select(col(DST).as(ID))
+          case CoreNumber.InOut => cur.select(col(SRC).as(ID))
+            .union(cur.select(col(DST).as(ID)))
+        }
+        val keep = degStream.groupBy(ID).agg(count(lit(1)).as("d"))
+          .filter(col("d") >= k)
+          .select(ID)
+        // The survivor set is bounded by V <= 2·(edge rows): broadcast
+        // it into BOTH semi-joins when it fits (guide §3.1) — the
+        // dst-side semi-join otherwise re-exchanges the whole edge
+        // table every peel round (its layout is hash(src)). Past the
+        // bound the shuffled semi-joins run as before.
+        val bcastKeep = rows * 64L < SparkTuning.BroadcastBytes
+        val keepS = keep.withColumnRenamed(ID, SRC)
+        val keepD = keep.withColumnRenamed(ID, DST)
+        cur
+          .join(if (bcastKeep) broadcast(keepS) else keepS, Seq(SRC), "left_semi")
+          .join(if (bcastKeep) broadcast(keepD) else keepD, Seq(DST), "left_semi")
+      },
+      check = (next, _) => {
+        val m = next.count()
+        val done = m == rows || m == 0
+        rows = m
+        (done, Map.empty)
+      })
+    Result(LinkGraph(r.state.df, g.directed, g.numPartitions), r.iterations)
   }
 
   /** One-shot k-core given core numbers (id, core_number): keep edges

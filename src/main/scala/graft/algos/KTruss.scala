@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{LinkGraph, SparkTuning, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -45,9 +45,9 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  */
 object KTruss {
 
-  /** Peel rounds taken by the most recent [[subgraph]] call (used to
-   * size the unrolled SQL oracle). */
-  @volatile var lastRounds: Int = 0
+  /** A [[subgraph]] result: the surviving canonical edges and the peel
+   * rounds taken (they size the unrolled SQL oracle). */
+  final case class Result(edges: DataFrame, rounds: Int)
 
   /** Adjacency rows wider than this take the hub (wedge-join) path.
    * 64Ki longs ≈ 512 KiB per row — far under task memory, far over
@@ -58,117 +58,113 @@ object KTruss {
       g0: LinkGraph,
       k: Int,
       maxIter: Int = 100,
-      maxAdjWidth: Int = DefaultMaxAdjWidth): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(
-      runImpl(g0, k, maxIter, maxAdjWidth))
+      maxAdjWidth: Int = DefaultMaxAdjWidth): Result =
+    SparkTuning.withoutAqe(g0.spark)(runImpl(g0, k, maxIter, maxAdjWidth))
 
   private def runImpl(
-      g0: LinkGraph, k: Int, maxIter: Int, maxAdjWidth: Int): DataFrame = {
+      g0: LinkGraph, k: Int, maxIter: Int, maxAdjWidth: Int): Result = {
     require(k >= 2, s"k must be >= 2, got $k")
     val p = g0.numPartitions
     val minSupport = k - 2
 
-    var cur = Lineage.materialize(
+    // Canonical edge rows of the current state: counted by the first
+    // step, then by each check, whose count also fills the next
+    // state's cache.
+    var n = -1L
+    // The round's adjacency and degree caches, released by its check.
+    var lowAdj: DataFrame = null
+    var deg: DataFrame = null
+    // Every edge is in >= 0 triangles: the 2-truss is the whole
+    // (self-loop-free) graph, no peeling needed.
+    val r = Superstep.run(g0, "ktruss", if (minSupport == 0) 0 else maxIter)(
       g0.edges.filter(col(SRC) =!= col(DST))
         .select(least(col(SRC), col(DST)).as(SRC),
           greatest(col(SRC), col(DST)).as(DST))
         .distinct()
         .repartition(p, col(SRC)),
-      eager = false)
+      step = cur => {
+        if (n < 0) n = cur.count()
+        val sym = cur.union(cur.select(col(DST).as(SRC), col(SRC).as(DST)))
 
-    // Every edge is in >= 0 triangles: the 2-truss is the whole
-    // (self-loop-free) graph, no peeling needed.
-    if (minSupport == 0) { lastRounds = 0; return cur.df }
+        // Broadcast the round's adjacency when it fits: the intersect
+        // joins otherwise duplicate each neighbor array once per
+        // incident edge through an exchange — at sf0.1 that was
+        // ~400 MB shuffled per peel round for a ~20 MB adjacency. `n`
+        // is the previous round's canonical edge count, so the
+        // estimate (2n entries x 8 B) is known before any new job
+        // runs; past the bound the co-partitioned shuffle plan below is
+        // unchanged. Under the bound the hub split is moot — the widest
+        // possible adjacency row is bounded by the whole
+        // (broadcastable) adjacency — so the degree table, the width
+        // semi-join and the per-round hub-existence action are skipped
+        // outright.
+        val bcastAdj = 2L * n * 8L < SparkTuning.BroadcastBytes
 
-    var n = cur.df.count()
-    var changed = n > 0
-    var it = 0
+        deg =
+          if (bcastAdj) null
+          else sym.groupBy(col(SRC).as(ID)).agg(count(lit(1)).as("d"))
+            .persist(StorageLevel.MEMORY_AND_DISK)
 
-    while (changed && n > 0 && it < maxIter) {
-      it += 1
-      val sym = cur.df
-        .union(cur.df.select(col(DST).as(SRC), col(SRC).as(DST)))
-
-      // Broadcast the round's adjacency when it fits (same bound and
-      // rationale as TriangleCount.DefaultBroadcastAdjBytes): the
-      // intersect joins otherwise duplicate each neighbor array once
-      // per incident edge through an exchange — at sf0.1 that was
-      // ~400 MB shuffled per peel round for a ~20 MB adjacency. `n` is
-      // the previous round's canonical edge count, so the estimate
-      // (2n entries x 8 B) is known before any new job runs; past the
-      // bound the co-partitioned shuffle plan below is unchanged.
-      // Under the bound the hub split is moot — the widest possible
-      // adjacency row is bounded by the whole (broadcastable)
-      // adjacency — so the degree table, the width semi-join and the
-      // per-round hub-existence action are skipped outright.
-      val bcastAdj = 2L * n * 8L < TriangleCount.DefaultBroadcastAdjBytes
-
-      val deg =
-        if (bcastAdj) null
-        else sym.groupBy(col(SRC).as(ID)).agg(count(lit(1)).as("d"))
+        // ---- normal path: bounded adjacency arrays ----
+        val lowAdj0 = (if (bcastAdj) sym
+          else sym.join(deg.filter(col("d") <= maxAdjWidth).select(ID)
+            .withColumnRenamed(ID, SRC), Seq(SRC), "left_semi"))
+          .groupBy(col(SRC).as(ID))
+          .agg(sort_array(collect_list(col(DST))).as("nbrs"))
+        lowAdj = (if (bcastAdj) lowAdj0
+          else lowAdj0.repartition(p, col(ID)))
           .persist(StorageLevel.MEMORY_AND_DISK)
+        // Fill the cache before the two broadcast builds start: each
+        // build otherwise re-runs the whole adjacency aggregation.
+        if (bcastAdj) lowAdj.count()
+        val lowAdjB = if (bcastAdj) broadcast(lowAdj) else lowAdj
+        val adjU = lowAdjB.select(col(ID).as(SRC), col("nbrs").as("nu"))
+        val adjV = lowAdjB.select(col(ID).as(DST), col("nbrs").as("nv"))
+        val lowSurvivors = cur
+          .join(adjU, Seq(SRC))
+          .join(adjV, Seq(DST))
+          .filter(size(array_intersect(col("nu"), col("nv"))) >= minSupport)
+          .select(SRC, DST)
 
-      // ---- normal path: bounded adjacency arrays ----
-      val lowAdj0 = (if (bcastAdj) sym
-        else sym.join(deg.filter(col("d") <= maxAdjWidth).select(ID)
-          .withColumnRenamed(ID, SRC), Seq(SRC), "left_semi"))
-        .groupBy(col(SRC).as(ID))
-        .agg(sort_array(collect_list(col(DST))).as("nbrs"))
-      val lowAdj = (if (bcastAdj) lowAdj0
-        else lowAdj0.repartition(p, col(ID)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      // Fill the cache before the two broadcast builds start: each
-      // build otherwise re-runs the whole adjacency aggregation.
-      if (bcastAdj) lowAdj.count()
-      val lowAdjB = if (bcastAdj) broadcast(lowAdj) else lowAdj
-      val adjU = lowAdjB.select(col(ID).as(SRC), col("nbrs").as("nu"))
-      val adjV = lowAdjB.select(col(ID).as(DST), col("nbrs").as("nv"))
-      val lowSurvivors = cur.df
-        .join(adjU, Seq(SRC))
-        .join(adjV, Seq(DST))
-        .filter(size(array_intersect(col("nu"), col("nv"))) >= minSupport)
-        .select(SRC, DST)
-
-      // ---- hub path: edges with an over-cap endpoint (rare) ----
-      val hubSurvivors: DataFrame = if (bcastAdj) null else {
-        val hubV = deg.filter(col("d") > maxAdjWidth)
-        val degS = deg.select(col(ID).as(SRC), col("d").as("ds"))
-        val degD = deg.select(col(ID).as(DST), col("d").as("dd"))
-        val hubEdges = cur.df
-          .join(degS, Seq(SRC)).join(degD, Seq(DST))
-          .filter(col("ds") > maxAdjWidth || col("dd") > maxAdjWidth)
-        if (hubV.isEmpty) null else {
-          // Probe from the lower-degree endpoint: min(deg) wedge rows
-          // per edge.
-          val probes = hubEdges.select(
-            when(col("ds") <= col("dd"), col(SRC)).otherwise(col(DST))
-              .as("probe"),
-            when(col("ds") <= col("dd"), col(DST)).otherwise(col(SRC))
-              .as("other"))
-          val n1 = sym.select(col(SRC).as("probe"), col(DST).as("w"))
-          val n2 = sym.select(col(SRC).as("other"), col(DST).as("w"))
-          probes.join(n1, Seq("probe")).join(n2, Seq("other", "w"))
-            .groupBy("probe", "other").agg(count(lit(1)).as("sup"))
-            .filter(col("sup") >= minSupport)
-            .select(least(col("probe"), col("other")).as(SRC),
-              greatest(col("probe"), col("other")).as(DST))
+        // ---- hub path: edges with an over-cap endpoint (rare) ----
+        val hubSurvivors: DataFrame = if (bcastAdj) null else {
+          val hubV = deg.filter(col("d") > maxAdjWidth)
+          val degS = deg.select(col(ID).as(SRC), col("d").as("ds"))
+          val degD = deg.select(col(ID).as(DST), col("d").as("dd"))
+          val hubEdges = cur
+            .join(degS, Seq(SRC)).join(degD, Seq(DST))
+            .filter(col("ds") > maxAdjWidth || col("dd") > maxAdjWidth)
+          if (hubV.isEmpty) null else {
+            // Probe from the lower-degree endpoint: min(deg) wedge rows
+            // per edge.
+            val probes = hubEdges.select(
+              when(col("ds") <= col("dd"), col(SRC)).otherwise(col(DST))
+                .as("probe"),
+              when(col("ds") <= col("dd"), col(DST)).otherwise(col(SRC))
+                .as("other"))
+            val n1 = sym.select(col(SRC).as("probe"), col(DST).as("w"))
+            val n2 = sym.select(col(SRC).as("other"), col(DST).as("w"))
+            probes.join(n1, Seq("probe")).join(n2, Seq("other", "w"))
+              .groupBy("probe", "other").agg(count(lit(1)).as("sup"))
+              .filter(col("sup") >= minSupport)
+              .select(least(col("probe"), col("other")).as(SRC),
+                greatest(col("probe"), col("other")).as(DST))
+          }
         }
-      }
 
-      val survivors =
-        if (hubSurvivors == null) lowSurvivors
-        else lowSurvivors.union(hubSurvivors)
-      val next = Lineage.materialize(
-        survivors.repartition(p, col(SRC)), eager = false)
-      val m = next.df.count()
-      lowAdj.unpersist()
-      if (deg != null) deg.unpersist()
-      changed = m < n
-      n = m
-      cur.release()
-      cur = next
-    }
-    lastRounds = it
-    cur.df
+        val survivors =
+          if (hubSurvivors == null) lowSurvivors
+          else lowSurvivors.union(hubSurvivors)
+        survivors.repartition(p, col(SRC))
+      },
+      check = (next, _) => {
+        val m = next.count()
+        lowAdj.unpersist()
+        if (deg != null) deg.unpersist()
+        val done = m == n || m == 0
+        n = m
+        (done, Map.empty)
+      })
+    Result(r.state.df, r.iterations)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, SparkTuning}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
 
 /**
@@ -200,7 +200,7 @@ object Louvain {
     // exchanges per inner iteration. Past the bound (V too big to
     // broadcast) the original shuffle plan runs unchanged.
     val vCount = vw.df.count()
-    val bcastV = vCount * 32L < (64L << 20)
+    val bcastV = vCount * 32L < SparkTuning.BroadcastBytes
 
     var labels = Lineage.materialize(
       vw.df.select(col(ID), col(ID).as("lbl")), eager = false)

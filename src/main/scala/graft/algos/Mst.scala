@@ -3,7 +3,7 @@ package graft.algos
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, SparkTuning}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
 
 /**
@@ -55,21 +55,23 @@ object Mst {
       // distributed pointer-jump path (spec coverage).
       mergeCollectThreshold: Long = 1L << 20)
 
-  /** Rounds taken by the most recent [[forest]] call (oracle sizing). */
-  @volatile var lastRounds: Int = 0
+  /** The forest's canonical edges (src, dst, weight) and the Borůvka
+   * rounds taken (they size the unrolled SQL oracle). */
+  final case class Result(forest: DataFrame, rounds: Int)
 
-  def forest(g0: LinkGraph, cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
+  def forest(g0: LinkGraph, cfg: Config = Config()): Result =
+    SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
 
   /** MAXIMUM spanning forest — the reference's wrapper negates the
    * weights around the minimum call and negates them back
    * (`python/cugraph/cugraph/tree/minimum_spanning_tree.py:44-52`);
    * the (−w, src, dst) pick key keeps the forest unique. */
-  def maximumForest(g0: LinkGraph, cfg: Config = Config()): DataFrame = {
+  def maximumForest(g0: LinkGraph, cfg: Config = Config()): Result = {
     val neg = g0.copy(edges = g0.edges.select(
       col(SRC), col(DST), (-col(WEIGHT)).as(WEIGHT)))
-    forest(neg, cfg)
-      .select(col(SRC), col(DST), (-col(WEIGHT)).as(WEIGHT))
+    val r = forest(neg, cfg)
+    r.copy(forest = r.forest
+      .select(col(SRC), col(DST), (-col(WEIGHT)).as(WEIGHT)))
   }
 
   /** Driver union-find over collected component pairs, representative
@@ -136,7 +138,7 @@ object Mst {
     (lab.df.select(col("c"), col("m")), lab)
   }
 
-  private def runImpl(g0: LinkGraph, cfg: Config): DataFrame = {
+  private def runImpl(g0: LinkGraph, cfg: Config): Result = {
     val p = g0.numPartitions
     val spark = g0.spark
     import spark.implicits._
@@ -171,7 +173,7 @@ object Mst {
     // every Borůvka round. One count up front; past the bound the
     // co-partitioned shuffle joins below run unchanged.
     val nV = comp.df.count()
-    val bcastComp = nV * 24L < (64L << 20)
+    val bcastComp = nV * 24L < SparkTuning.BroadcastBytes
 
     while (nPairs > 0 && it < cfg.maxIter) {
       it += 1
@@ -247,7 +249,6 @@ object Mst {
       ppH.release()
       crossH.release()
     }
-    lastRounds = it
     comp.release()
     canon.release()
     val out = mstUnion.map { u =>
@@ -257,6 +258,6 @@ object Mst {
     }.getOrElse {
       spark.emptyDataset[(Long, Long, Double)].toDF(SRC, DST, WEIGHT)
     }
-    out
+    Result(out, it)
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, SparkTuning}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -119,7 +119,7 @@ object Scc {
       // repartition (nothing downstream needs its layout — every
       // consumer broadcasts it). Past the bound the original
       // co-partitioned shuffle plan runs unchanged.
-      val bcast = remaining * 32L < (64L << 20)
+      val bcast = remaining * 32L < SparkTuning.BroadcastBytes
       val fTab = f.df.select(col(ID), col("f"))
       val fsJ = fTab.withColumnRenamed(ID, SRC).withColumnRenamed("f", "fs")
       val fdJ = fTab.withColumnRenamed(ID, DST).withColumnRenamed("f", "fd")

@@ -36,9 +36,6 @@ import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
  */
 object TraversedCost {
 
-  /** Doubling rounds of the most recent call (spec telemetry). */
-  @volatile var lastRounds: Int = 0
-
   /**
    * @param traversal (id, distance, predecessor) from Bfs/Sssp
    * @param weightedEdges (src, dst, weight) — already symmetrized if the
@@ -56,7 +53,6 @@ object TraversedCost {
     val rounds =
       if (maxDepth <= 0L) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(maxDepth)
-    lastRounds = rounds
 
     // J_0: one predecessor hop, costed from the weighted edge table
     // (tree edges come from the same graph, so the join is total; a

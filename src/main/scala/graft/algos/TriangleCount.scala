@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, SparkTuning}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -46,20 +46,17 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  */
 object TriangleCount {
 
-  /** Broadcast the degree table and the oriented adjacency when 8
-   * bytes per symmetric edge row (twice the adjacency's entries) come
-   * to less than this; the orientation and intersect joins are then
-   * broadcast hash joins and the per-edge neighbour arrays never cross
-   * an exchange. */
-  val DefaultBroadcastAdjBytes: Long = 64L << 20
-
   def run(g0: LinkGraph): DataFrame =
-    graft.core.SparkTuning.withGraph(g0)(runImpl(_))
+    SparkTuning.withGraph(g0)(runImpl(_))
 
-  /** `adjBytes` replaces [[DefaultBroadcastAdjBytes]] so tests can force
-   * the shuffled plan on small inputs. */
+  /** The degree table and the oriented adjacency are broadcast when 8
+   * bytes per symmetric edge row (twice the adjacency's entries) come
+   * to less than `adjBytes`; the orientation and intersect joins are
+   * then broadcast hash joins and the per-edge neighbour arrays never
+   * cross an exchange. Tests pass a smaller `adjBytes` to force the
+   * shuffled plan on small inputs. */
   private[graft] def runImpl(
-      g: LinkGraph, adjBytes: Long = DefaultBroadcastAdjBytes): DataFrame = {
+      g: LinkGraph, adjBytes: Long = SparkTuning.BroadcastBytes): DataFrame = {
     val simple = g.withoutSelfLoops.dedupe.edges
     val deg = simple.groupBy(col(SRC).as(ID)).agg(count(lit(1)).as("d"))
       .persist(StorageLevel.MEMORY_AND_DISK)
@@ -101,46 +98,4 @@ object TriangleCount {
   /** Total triangle count = sum(per-vertex) / 3. */
   def total(perVertex: DataFrame): Long =
     perVertex.agg((sum("triangles") / 3).cast("long")).head().getLong(0)
-
-  /** A [[twoCore]] peel: the induced subgraph, its symmetric edge rows,
-   * the peel rounds taken (oracle sizing) and the cache behind the
-   * subgraph's edges, which the caller releases. */
-  final case class TwoCore(
-      graph: LinkGraph, rows: Long, rounds: Int, cache: Lineage.Handle)
-
-  /**
-   * 2-core: iteratively peel vertices with degree < 2 (reference core
-   * number peeling, `/root/reference/cpp/src/cores/core_number_impl.cuh:86-328`,
-   * restricted to k=2). Returns the induced subgraph on the 2-core.
-   * [[run]] does not need it (see step 3 there); q_core2 does.
-   */
-  def twoCore(g: LinkGraph, maxIter: Int = 100): TwoCore = {
-    var cur = Lineage.materialize(g.edges, eager = false)
-    var n = cur.df.count()
-    var changed = true
-    var it = 0
-    while (changed && n > 0 && it < maxIter) {
-      it += 1
-      val keep = cur.df.groupBy(col(SRC).as(ID)).agg(count(lit(1)).as("d"))
-        .filter(col("d") >= 2)
-        .select(ID)
-      // Survivors ⊆ V ≤ symmetric edge rows: broadcast into both
-      // semi-joins when that fits — the dst-side semi-join otherwise
-      // re-exchanges the whole hash(src) edge table every peel round
-      // (the KCore.subgraph fix, same bound). Shuffled past the bound.
-      val bcastKeep = n * 32L < (64L << 20)
-      val keepS = keep.withColumnRenamed(ID, SRC)
-      val keepD = keep.withColumnRenamed(ID, DST)
-      val pruned = cur.df
-        .join(if (bcastKeep) broadcast(keepS) else keepS, Seq(SRC), "left_semi")
-        .join(if (bcastKeep) broadcast(keepD) else keepD, Seq(DST), "left_semi")
-      val next = Lineage.materialize(pruned, eager = false)
-      val m = next.df.count()
-      changed = m < n
-      n = m
-      cur.release()
-      cur = next
-    }
-    TwoCore(LinkGraph(cur.df, g.directed, g.numPartitions), n, it, cur)
-  }
 }

@@ -17,6 +17,12 @@ import org.apache.spark.storage.StorageLevel
  */
 object SparkTuning {
 
+  /** The broadcast bound of every "broadcast if it fits, else shuffle"
+   * join the algorithms choose themselves: a side is broadcast when
+   * its row count times the caller's per-row width comes to less than
+   * this. */
+  val BroadcastBytes: Long = 64L << 20
+
   def withoutAqe[T](spark: SparkSession)(f: => T): T = {
     val key = "spark.sql.adaptive.enabled"
     val prev = spark.conf.getOption(key)

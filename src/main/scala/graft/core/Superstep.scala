@@ -7,10 +7,11 @@ import graft.checkpoint.CheckpointManager
 import graft.core.LinkGraph.ID
 
 /**
- * The superstep loop of PageRank, WCC, LPA, SSSP, Katz and Eigenvector.
- * An algorithm supplies its init state, its superstep plan (`step`,
- * from the current state to the next) and its convergence `check` on
- * the next state; this loop owns the rest, in one order:
+ * The superstep loop of PageRank, WCC, LPA, SSSP, Katz, Eigenvector,
+ * HITS, core number and the k-core and k-truss peels. An algorithm
+ * supplies its init state, its superstep plan (`step`, from the
+ * current state to the next) and its convergence `check` on the next
+ * state; this loop owns the rest, in one order:
  *
  *   - resume: the latest superstep committed under `name` with this
  *     run's fingerprint (the edge table plus `name +: extras`) is
@@ -27,10 +28,21 @@ import graft.core.LinkGraph.ID
  * (`explain("formatted")`), the loop-shape evidence of plans/r06.
  *
  * Scalars carried between supersteps (PageRank's dangling sum,
- * Eigenvector's norm) are the algorithm's own vars, set by `check` and
- * read by `step`. BFS and HITS keep hand-written loops: BFS keeps every
- * level alive and commits a frame it does not step, HITS materializes
- * two frames per superstep.
+ * Eigenvector's and HITS's norms, the peels' previous row count) are
+ * the algorithm's own vars, set by `check` and read by `step`; so are
+ * a superstep's side caches (HITS's auth gather, the k-truss
+ * adjacency), which `check` releases once the next state is counted.
+ *
+ * Five iterative algorithms keep hand-written loops, because their
+ * loop is not one state stepped to the next:
+ *   - BFS keeps every level alive and commits a frame it does not step;
+ *     moved here its plans would change;
+ *   - Betweenness steps two frames forward (the frontier and the
+ *     visited set), then walks the kept levels backward;
+ *   - MST's Borůvka rounds step two frames (components and the picked
+ *     forest) and run a nested pointer-jump loop past a size bound;
+ *   - Louvain and Leiden nest a local-moving loop inside a level loop
+ *     that coarsens the graph between levels.
  */
 object Superstep {
 

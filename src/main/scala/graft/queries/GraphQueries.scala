@@ -410,9 +410,12 @@ object GraphQueries {
     }),
 
     "q_core2" -> ((s, dir) => {
-      // Vertices surviving the 2-core peel of the chain graph.
-      val core = TriangleCount.twoCore(chainGraph(s, dir)).graph
-      core.edges.select(col(SRC).as(ID)).distinct()
+      // Vertices surviving the 2-core peel of the chain graph (which
+      // has no self-loops for the peel to drop).
+      val r = KCore.subgraph(chainGraph(s, dir), 2)
+      require(r.rounds <= 10, s"q_core2 took ${r.rounds} peel rounds > " +
+        "the 10 the SQL oracle unrolls")
+      r.graph.edges.select(col(SRC).as(ID)).distinct()
     }),
 
     "q_katz" -> ((s, dir) => {
@@ -563,8 +566,10 @@ object GraphQueries {
 
     "q_kcore" -> ((s, dir) => {
       // Generic k-core (k=3) of the dense graph; canonical edge list.
-      KCore.subgraph(allGraph(s, dir), 3)
-        .edges.filter(col(SRC) < col(DST)).select(SRC, DST)
+      val r = KCore.subgraph(allGraph(s, dir), 3)
+      require(r.rounds <= 10, s"q_kcore took ${r.rounds} peel rounds > " +
+        "the 10 the SQL oracle unrolls")
+      r.graph.edges.filter(col(SRC) < col(DST)).select(SRC, DST)
     }),
 
     "q_scc" -> ((s, dir) => {
@@ -584,10 +589,14 @@ object GraphQueries {
         s.sessionState.conf.numShufflePartitions)).components
     }),
 
-    "q_ktruss" -> ((s, dir) =>
+    "q_ktruss" -> ((s, dir) => {
       // 4-truss of the dense graph (every surviving edge in >= 2
       // triangles within the subgraph); canonical edge list.
-      KTruss.subgraph(allGraph(s, dir), 4)),
+      val r = KTruss.subgraph(allGraph(s, dir), 4)
+      require(r.rounds <= 6, s"q_ktruss took ${r.rounds} peel rounds > " +
+        "the 6 the SQL oracle unrolls")
+      r.edges
+    }),
 
     "q_spectral_k" -> ((s, dir) =>
       // Recursive Fiedler bisection to k=4 leaves (reference
@@ -849,14 +858,14 @@ object GraphQueries {
     "q_mst_max" -> ((s, dir) => {
       // Maximum spanning forest (reference maximum_spanning_tree:
       // negate-weights wrapper around the minimum call).
-      val f = Mst.maximumForest(weightedChainGraph(s, dir))
+      val r = Mst.maximumForest(weightedChainGraph(s, dir))
       // mstSql unrolls exactly 12 Borůvka rounds; if the GATE corpus
       // (not just a fixture) ever needs more, fail the engine side
       // loudly instead of silently drifting past a truncated oracle.
-      require(Mst.lastRounds <= 12,
-        s"q_mst_max took ${Mst.lastRounds} Borůvka rounds > the 12 the " +
+      require(r.rounds <= 12,
+        s"q_mst_max took ${r.rounds} Borůvka rounds > the 12 the " +
           "SQL oracle unrolls; raise mstSql(rounds)")
-      f
+      r.forest
     }),
 
     "q_mst" -> ((s, dir) => {
@@ -864,11 +873,11 @@ object GraphQueries {
       // graph (reference minimum_spanning_tree, algorithms.hpp:743);
       // the (weight, src, dst) pick key makes the forest unique, so
       // the oracle's unrolled Borůvka produces the identical edge set.
-      val f = Mst.forest(weightedChainGraph(s, dir))
-      require(Mst.lastRounds <= 12,
-        s"q_mst took ${Mst.lastRounds} Borůvka rounds > the 12 the " +
+      val r = Mst.forest(weightedChainGraph(s, dir))
+      require(r.rounds <= 12,
+        s"q_mst took ${r.rounds} Borůvka rounds > the 12 the " +
           "SQL oracle unrolls; raise mstSql(rounds)")
-      f
+      r.forest
     }),
 
     "q_extract_paths" -> ((s, dir) => {
@@ -1333,7 +1342,7 @@ object GraphQueries {
     // H-index iteration mirroring the engine exactly (init c = degree,
     // c' = min(c, h-index of neighbor values)); 30 fixed rounds —
     // monotone convergence makes extra rounds no-ops, and the engine
-    // fixpoint at sf0.01 is 14 supersteps (IterProbe).
+    // fixpoint at sf0.01 is 14 supersteps.
     "q_core_number" -> s"""${recChain},
       |verts AS (SELECT DISTINCT src AS v FROM edges),
       |deg AS (SELECT src AS v, count(*) AS d FROM edges GROUP BY src),

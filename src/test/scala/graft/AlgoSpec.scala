@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 
-import graft.algos.{ConnectedComponents, LabelPropagation, TriangleCount}
+import graft.algos.{ConnectedComponents, KCore, LabelPropagation, TriangleCount}
 import graft.core.{LinkGraph, SparkTuning}
 
 class WccSpec extends SparkSpec {
@@ -122,9 +122,7 @@ class TriangleCountSpec extends SparkSpec {
     // path 0-1-2-3 has no 2-core
     val edges = Seq((0L, 1L, 1.0), (1L, 2L, 1.0), (2L, 3L, 1.0))
     val g = graphOf(edges).symmetrize
-    val core = TriangleCount.twoCore(g)
-    assert(core.graph.edges.count() == 0L && core.rows == 0L)
-    core.cache.release()
+    assert(KCore.subgraph(g, 2).graph.edges.count() == 0L)
     val counts = TriangleCount.run(g).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(counts.values.forall(_ == 0L))

@@ -135,7 +135,7 @@ class CoreNumberSpec extends SparkSpec {
       cur
     }
     def got(k: Int, t: CoreNumber.DegreeType): Set[(Long, Long)] =
-      KCore.subgraph(g, k, degreeType = t).edges
+      KCore.subgraph(g, k, degreeType = t).graph.edges
         .select("src", "dst").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got(1, CoreNumber.Out) == peel(1, (v, e) => e.count(_._1 == v)))

@@ -162,18 +162,19 @@ class KCoreSpec extends SparkSpec {
   test("3-core of karate matches host peel, and converges fast") {
     val edges = undirected("karate")
     val g = graphOf(edges.toSeq.map(e => (e._1, e._2, 1.0)))
-    val got = KCore.subgraph(g, 3).edges
+    val r = KCore.subgraph(g, 3)
+    val got = r.graph.edges
       .select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1)))
       .toSet
     assert(got == RefOraclesY.kCore(edges, 3))
-    assert(KCore.lastRounds <= 10) // oracle unroll bound
+    assert(r.rounds <= 10) // oracle unroll bound
   }
 
   test("k-core from core numbers equals the peel (karate, dolphins)") {
     for (name <- Seq("karate", "dolphins"); k <- Seq(2, 3, 4)) {
       val edges = undirected(name)
       val g = graphOf(edges.toSeq.map(e => (e._1, e._2, 1.0)))
-      val peel = KCore.subgraph(g, k).edges
+      val peel = KCore.subgraph(g, k).graph.edges
         .select("src", "dst").collect().map(r => (r.getLong(0), r.getLong(1)))
         .toSet
       val viaCores = KCore.fromCoreNumbers(g, CoreNumber.run(g), k).edges
@@ -189,10 +190,11 @@ class KTrussSpec extends SparkSpec {
     val edges = loadFixture("karate").map(e => (e._1, e._2)).toSet
     val g = graphOf(edges.toSeq.map(e => (e._1, e._2, 1.0)))
     for (k <- Seq(3, 4, 5)) {
-      val got = KTruss.subgraph(g, k)
+      val r = KTruss.subgraph(g, k)
+      val got = r.edges
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == RefOraclesY.kTruss(edges, k), s"k=$k")
-      assert(KTruss.lastRounds <= 6) // oracle unroll bound
+      assert(r.rounds <= 6) // oracle unroll bound
     }
   }
 
@@ -203,7 +205,7 @@ class KTrussSpec extends SparkSpec {
     val edges = loadFixture("karate").map(e => (e._1, e._2)).toSet
     val g = graphOf(edges.toSeq.map(e => (e._1, e._2, 1.0)))
     for (k <- Seq(3, 4)) {
-      val got = KTruss.subgraph(g, k, maxAdjWidth = 8)
+      val got = KTruss.subgraph(g, k, maxAdjWidth = 8).edges
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got == RefOraclesY.kTruss(edges, k), s"k=$k hub path")
     }

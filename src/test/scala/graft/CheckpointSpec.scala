@@ -3,11 +3,7 @@ package graft
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Paths}
 
-import scala.collection.mutable
-
 import org.apache.hadoop.fs.Path
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.json4s._
 import org.json4s.jackson.JsonMethods.parse
@@ -20,20 +16,9 @@ import graft.checkpoint.CheckpointManager
 class CheckpointSpec extends SparkSpec {
 
   /** Job groups of the jobs `f` starts, in start order. */
-  private def jobGroups(f: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    ListenerBusDrain(sc)
-    val groups = mutable.ArrayBuffer[String]()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = groups.synchronized {
-        groups += Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
-      }
-    }
-    sc.addSparkListener(l)
-    try { f; ListenerBusDrain(sc) }
-    finally sc.removeSparkListener(l)
-    groups.synchronized(groups.toList)
-  }
+  private def jobGroups(f: => Unit): Seq[String] =
+    listen(f)._2.map(e =>
+      Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
 
   private def state(): DataFrame =
     spark.range(0, 1000, 1, 3).selectExpr("id", "id % 7 AS label")

@@ -94,14 +94,29 @@ class HungarianSpec extends SparkSpec {
     val js = (20L until 27L).toSeq
     val rows = for (w <- ws; j <- js) yield (w, j, (rng.nextInt(500) + 1).toDouble)
     val local = Hungarian.assign(df(rows))
-    val localRounds = Hungarian.lastRounds
     val dist = Hungarian.assign(df(rows), localThreshold = 0)
-    assert(Hungarian.lastRounds == localRounds,
+    assert(dist.rounds == local.rounds,
       "distributed Jacobi evolution must match the local rounds")
     val a = local.assignments.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     val b = dist.assignments.collect().map(x => (x.getLong(0), x.getLong(1))).toSet
     assert(a == b)
     assert(math.abs(local.totalCost - dist.totalCost) < 1e-9)
+  }
+
+  test("a pruned instance is sized by its pruned rows: small ones run locally") {
+    // 4 workers x 40 jobs, worker w's job j costing (j - 200 + w) % 40 + 1:
+    // the prune keeps each worker's 4 cheapest jobs, 16 rows over 7
+    // jobs, padded to 16 + 3·7 = 37 rows, under the 100-row local
+    // threshold. Counting the 160 unpruned rows instead (160 + 21)
+    // sends it to the distributed auction, which starts jobs every
+    // round. Each worker has its own cost-1 job: the optimum is 4.
+    val rows = for (w <- 0L until 4L; j <- 200L until 240L)
+      yield (w, j, ((j - 200 + w) % 40 + 1).toDouble)
+    val (r, jobs, _) = listen(Hungarian.assign(df(rows), localThreshold = 100))
+    assert(jobs.size < 30, s"${jobs.size} jobs")
+    assert(r.totalCost == 4.0)
+    assert(r.assignments.collect().map(x => (x.getLong(0), x.getLong(1))).toSet ==
+      Set((0L, 200L), (1L, 239L), (2L, 238L), (3L, 237L)))
   }
 
   test("more workers than jobs is rejected") {

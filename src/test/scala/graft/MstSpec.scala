@@ -35,17 +35,19 @@ class MstSpec extends SparkSpec {
   }
 
   private def gotForest(edges: Seq[(Long, Long, Double)])
-      : Set[(Long, Long, Double)] =
-    Mst.forest(graphOf(edges)).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+      : (Set[(Long, Long, Double)], Int) = {
+    val r = Mst.forest(graphOf(edges))
+    (r.forest.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet, r.rounds)
+  }
 
   test("mst on karate (unit weights -> lexicographic) matches Kruskal") {
     val edges = loadFixture("karate")
-    val got = gotForest(edges)
+    val (got, rounds) = gotForest(edges)
     val want = kruskal(edges)
     assert(got == want)
     assert(got.size == edges.flatMap(e => Seq(e._1, e._2)).distinct.size - 1)
-    assert(Mst.lastRounds <= 12)
+    assert(rounds <= 12)
   }
 
   test("mst with distinct weights matches Kruskal; forest on disjoint") {
@@ -56,7 +58,7 @@ class MstSpec extends SparkSpec {
       (10L, 11L, 5.0), (11L, 12L, 6.0), (12L, 10L, 0.5)).flatMap {
       case (u, v, w) => Seq((u, v, w), (v, u, w))
     }
-    val got = gotForest(edges)
+    val (got, _) = gotForest(edges)
     val want = kruskal(edges)
     assert(got == want)
     // spanning forest: V - #components edges (7 vertices, 2 components)
@@ -74,10 +76,10 @@ class MstSpec extends SparkSpec {
       Seq((i, i + 1, w), (i + 1, i, w))
     }
     val viaJump = Mst.forest(graphOf(edges),
-        Mst.Config(mergeCollectThreshold = 0L)).collect()
+        Mst.Config(mergeCollectThreshold = 0L)).forest.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(viaJump == kruskal(edges))
-    assert(viaJump == gotForest(edges))
+    assert(viaJump == gotForest(edges)._1)
   }
 
   test("maximum spanning forest = Kruskal on negated weights") {
@@ -86,7 +88,7 @@ class MstSpec extends SparkSpec {
       (3L, 0L, 7.0)).flatMap { case (u, v, w) =>
       Seq((u, v, w), (v, u, w))
     }
-    val got = Mst.maximumForest(graphOf(edges)).collect()
+    val got = Mst.maximumForest(graphOf(edges)).forest.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val want = kruskal(edges.map { case (u, v, w) => (u, v, -w) })
       .map { case (u, v, w) => (u, v, -w) }
@@ -133,15 +135,15 @@ class ExtractPathsSpec extends SparkSpec {
     // Predecessor tree of a pure path 0->1->...->1000, built directly
     // (no BFS needed): pointer doubling must finish in
     // ceil(log2(1001)) = 10 rounds where the old one-hop walk took
-    // 1000 supersteps.
+    // 1000 supersteps, each starting a job of its own.
     import spark.implicits._
     val trav = (0L to 1000L)
       .map(v => (v, v, math.max(0L, v - 1L)))
       .toDF("id", "distance", "predecessor")
-    val rows = ExtractPaths.fromPredecessors(
+    val (rows, jobs, _) = listen(ExtractPaths.fromPredecessors(
       trav, Seq(1000L).toDF("destination")).collect()
-      .map(r => (r.getLong(1), r.getLong(2)))
-    assert(ExtractPaths.lastRounds == 10)
+      .map(r => (r.getLong(1), r.getLong(2))))
+    assert(jobs.size < 100, s"${jobs.size} jobs")
     assert(rows.length == 1001)
     assert(rows.sortBy(_._1).map(_._2).toSeq == (0L to 1000L))
   }

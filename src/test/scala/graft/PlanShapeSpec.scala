@@ -1,9 +1,5 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -25,24 +21,6 @@ class PlanShapeSpec extends SparkSpec {
     df.queryExecution.executedPlan.collect {
       case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeLike => e
     }.length
-
-  /** `run`'s result, the jobs it starts and the number of stages it
-   * submits, read by a SparkListener that sees every event of the call. */
-  private def listen[T](run: => T): (T, Seq[SparkListenerJobStart], Int) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
-    val stages = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
-      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
-        stages.incrementAndGet()
-    }
-    ListenerBusDrain(sc)
-    sc.addSparkListener(l)
-    val out = try { val r = run; ListenerBusDrain(sc); r }
-    finally sc.removeSparkListener(l)
-    (out, jobs.asScala.toSeq, stages.get)
-  }
 
   private def cachedGraph(): LinkGraph = {
     val edges = loadFixture("karate")
@@ -75,7 +53,8 @@ class PlanShapeSpec extends SparkSpec {
     // jobs and its executed Exchanges: the submitted stages other than
     // each job's result stage (a stage whose shuffle output is reused
     // is skipped, not submitted).
-    import graft.algos.{ConnectedComponents, LabelPropagation, PageRank, Sssp}
+    import graft.algos.{ConnectedComponents, CoreNumber, Hits, KCore, KTruss,
+      LabelPropagation, PageRank, Sssp}
     val g = graphOf(loadFixture("karate")).symmetrize.cached()
     g.edges.count()
     def counts(run: Int => Unit, iters: Int): (Int, Int) = {
@@ -94,13 +73,27 @@ class PlanShapeSpec extends SparkSpec {
         ConnectedComponents.Config(maxIter = n)).converged)),
       "lpa" -> (n => assert(!LabelPropagation.run(g,
         LabelPropagation.Config(maxIter = n)).converged)),
-      "sssp" -> (n => Sssp.run(g, 0L, Sssp.Config(maxIter = n))))
+      "sssp" -> (n => Sssp.run(g, 0L, Sssp.Config(maxIter = n))),
+      // Karate takes 3 core-number supersteps, 4 rounds of the 4-core
+      // peel and 3 of the 5-truss peel, so every run stops at `n`.
+      "hits" -> (n => assert(!Hits.run(g,
+        Hits.Config(tol = 0.0, maxIter = n)).converged)),
+      "core_number" -> (n => CoreNumber.run(g, maxIter = n)),
+      "kcore" -> (n => KCore.subgraph(g, 4, maxIter = n)),
+      "ktruss" -> (n => KTruss.subgraph(g, 5, maxIter = n)))
     try {
       val got = loops.map { case (name, run) => name -> perSuperstep(run) }.toMap
       // One job per superstep, the convergence aggregate; it runs the
-      // message reduce's exchange and its own single-partition one.
+      // message reduce's exchange and its own single-partition one
+      // (HITS reduces twice: the auth and the hub gathers). The peels
+      // start more: the k-truss adjacency count and its two broadcast
+      // builds; the k-core survivor set's two builds, under the
+      // session's AQE, which KCore.subgraph leaves on and which runs
+      // every exchange as a job of its own.
       assert(got == Map("pagerank" -> (1, 2), "wcc" -> (1, 2),
-        "lpa" -> (1, 2), "sssp" -> (1, 2)))
+        "lpa" -> (1, 2), "sssp" -> (1, 2),
+        "hits" -> (1, 3), "core_number" -> (1, 2),
+        "kcore" -> (4, 0), "ktruss" -> (4, 5)))
     } finally g.unpersist()
   }
 
@@ -124,7 +117,7 @@ class PlanShapeSpec extends SparkSpec {
     }
     val key = "spark.sql.autoBroadcastJoinThreshold"
     try {
-      assert(shape(TriangleCount.DefaultBroadcastAdjBytes) == (4, 2))
+      assert(shape(graft.core.SparkTuning.BroadcastBytes) == (4, 2))
       spark.conf.set(key, "-1")
       assert(shape(0L) == (2, 0))
     } finally {

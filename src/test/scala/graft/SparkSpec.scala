@@ -1,5 +1,9 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -35,6 +39,25 @@ abstract class SparkSpec extends AnyFunSuite {
       (p(0).toLong, p(1).toLong, if (p.length > 2) p(2).toDouble else 1.0)
     }.toList
     finally src.close()
+  }
+
+  /** `run`'s result, the jobs it starts (in start order) and the number
+   * of stages it submits, read by a SparkListener that sees every event
+   * of the call. */
+  def listen[T](run: => T): (T, Seq[SparkListenerJobStart], Int) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val stages = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.add(e)
+      override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit =
+        stages.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    val out = try { val r = run; ListenerBusDrain(sc); r }
+    finally sc.removeSparkListener(l)
+    (out, jobs.asScala.toSeq, stages.get)
   }
 
   def graphOf(edges: Seq[(Long, Long, Double)], parts: Int = 4): LinkGraph = {
