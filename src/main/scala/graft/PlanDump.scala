@@ -9,9 +9,8 @@ import java.nio.file.{Files, Paths}
  * `<outDir>/<query>_<tag>.txt` — the judge-checkable before/after
  * evidence for plans/r06. Iterative algorithms return a
  * Lineage-truncated frame (a flat LogicalRDD scan), so for those the
- * meaningful plan is the superstep body; where an algorithm has an
- * explain hook (SPARK_GRAFT_EXPLAIN, see graft.core.Superstep) the hook's
- * stdout complements these files.
+ * meaningful plan is the superstep body, whose jobs and exchanges per
+ * superstep `PlanShapeSpec` ("superstep loops") pins.
  *
  * Usage: runMain graft.PlanDump <sfDir> <outDir> <tag> <q1>[,<q2>...]
  */

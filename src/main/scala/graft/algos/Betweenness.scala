@@ -187,15 +187,10 @@ object Betweenness {
           (col("sv") / col("sw") * (lit(1.0) + col("dw"))).as("t"))
         .groupBy(col("s"), col("v"))
         .agg(sum("t").as("delta"))
-      val nextLevelPlan = vAtD
+      val nextLevel = Lineage.materialize(vAtD
         .join(if (bcast) broadcast(terms) else terms, Seq("s", "v"), "left")
         .select(col("s"), col("v"), col("sigma"),
-          coalesce(col("delta"), lit(0.0)).as("delta"))
-      // Loop-shape evidence hook: the first backward level's plan.
-      if (d == depth - 1 && sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-        nextLevelPlan.explain("formatted")
-      }
-      val nextLevel = Lineage.materialize(nextLevelPlan)
+          coalesce(col("delta"), lit(0.0)).as("delta")))
       acc += nextLevel
       level = nextLevel
       d -= 1

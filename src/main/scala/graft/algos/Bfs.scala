@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.CheckpointManager
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, SparkTuning, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -33,6 +33,11 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  * unvisited residue (both already tracked); both directions produce
  * IDENTICAL frontiers and min-predecessors, so results do not depend
  * on the heuristic (pinned by the push/pull parity spec).
+ *
+ * Both entry points run on [[Superstep]]. The state is the visited
+ * frame; superstep d expands its rows at distance d - 1 (the frontier)
+ * into level d and returns visited ∪ level d, and the check counts
+ * level d, converging when it is empty.
  */
 object Bfs {
 
@@ -51,7 +56,7 @@ object Bfs {
    * filter_unreachable (`traversal/traveral_wrapper.pyx` sentinel
    * filter) is implicit here: unreached vertices are simply absent. */
   def run(g0: LinkGraph, sources: Seq[Long], cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withGraph(g0)(runImpl(_, sources, cfg))
+    SparkTuning.withGraph(g0)(runImpl(_, sources, cfg))
 
   /**
    * One INDEPENDENT traversal per source in a single superstep loop —
@@ -70,49 +75,38 @@ object Bfs {
    */
   def multiSource(
       g0: LinkGraph, sources: Seq[Long], maxDepth: Int = Int.MaxValue): DataFrame =
-    graft.core.SparkTuning.withGraph(g0) { g =>
+    SparkTuning.withGraph(g0) { g =>
       val spark = g.spark
       val p = g.numPartitions
       val edges = g.edges
       import spark.implicits._
 
-      var visited = Lineage.materialize(
+      Superstep.run(g, "ms_bfs", maxDepth)(
         sources.map(s => (s, s, 0L, s))
           .toDF("source", ID, "distance", "predecessor")
           .repartition(p, col(ID)),
-        eager = false)
-      var frontier = visited
-      var depth = 0L
-      var frontierSize = frontier.df.count()
-      val frames = scala.collection.mutable.ArrayBuffer[Lineage.Handle](visited)
-      while (frontierSize > 0 && depth < maxDepth) {
-        depth += 1
-        val expanded = edges
-          .join(frontier.df.select(col("source"), col(ID)).hint("shuffle_hash"),
-            edges(SRC) === col(ID))
-          .select(col("source"), col(DST), edges(SRC).as("pred"))
-          .groupBy("source", DST).agg(min("pred").as("predecessor"))
-          .join(visited.df.select(col("source"), col(ID).as(DST)),
-            Seq("source", DST), "left_anti")
-        val nextFrontier = Lineage.materialize(
-          expanded.select(col("source"), col(DST).as(ID),
-            lit(depth).as("distance"), col("predecessor"))
-            .repartition(p, col(ID)),
-          eager = false)
-        frontierSize = nextFrontier.df.count()
-        if (frontierSize > 0) {
-          val newVisited = Lineage.materialize(
-            visited.df.union(nextFrontier.df), eager = false)
-          frames += nextFrontier
-          frames += newVisited
-          visited = newVisited
-          frontier = nextFrontier
-        } else nextFrontier.release()
-      }
-      val out = Lineage.materialize(visited.df)
-      frames.foreach(_.release())
-      out.df
+        step = (visited, depth) => {
+          val frontier = visited.filter(col("distance") === depth - 1)
+          val expanded = edges
+            .join(frontier.select(col("source"), col(ID)).hint("shuffle_hash"),
+              edges(SRC) === col(ID))
+            .select(col("source"), col(DST), edges(SRC).as("pred"))
+            .groupBy("source", DST).agg(min("pred").as("predecessor"))
+            .join(visited.select(col("source"), col(ID).as(DST)),
+              Seq("source", DST), "left_anti")
+          visited.union(expanded
+            .select(col("source"), col(DST).as(ID),
+              lit(depth.toLong).as("distance"), col("predecessor"))
+            .repartition(p, col(ID)))
+        },
+        check = (next, depth) => (levelRows(next, depth) == 0, Map.empty)
+      ).state.df
     }
+
+  /** Rows of the level a superstep added: those at its distance. Their
+   * count also fills the cache of the visited frame they are in. */
+  private def levelRows(visited: DataFrame, depth: Int): Long =
+    visited.filter(col("distance") === depth).count()
 
   private def runImpl(g: LinkGraph, sources: Seq[Long], cfg: Config): DataFrame = {
     val spark = g.spark
@@ -124,8 +118,8 @@ object Bfs {
     // Vertex universe, needed only on the pull side (unvisited
     // residue). Lazy: a push-only run never pays for it — and the
     // release at the end is gated on allVertsInit so a run that never
-    // forced the lazy val (maxDepth = 0, immediately-empty frontier)
-    // doesn't materialize the frame solely to release it.
+    // forced the lazy val (maxDepth = 0, or push forced) doesn't
+    // materialize the frame solely to release it.
     var allVertsInit = false
     lazy val allVerts = {
       allVertsInit = true
@@ -133,35 +127,25 @@ object Bfs {
     }
     lazy val nVerts = allVerts.df.count()
 
-    // Resume from the latest committed level: the frontier is exactly
-    // the rows at the checkpoint's max distance.
-    // Fingerprint = edge set + sorted sources: a checkpoint root
-    // reused for a different graph or source set is ignored, not
-    // silently resumed into wrong distances.
-    val fp = cfg.checkpoint.map(_.graphFingerprint(
-      edges, "bfs" +: sources.sorted.map(_.toString): _*)).getOrElse("")
-    val resume = cfg.checkpoint.flatMap(cm =>
-      cm.latestIteration("bfs", fp).map(it =>
-        (it.toLong, cm.restore("bfs", it).repartition(p, col(ID)))))
-
-    var visited = Lineage.materialize(
-      resume.map(_._2).getOrElse(
-        sources.map(s => (s, 0L, s)).toDF(ID, "distance", "predecessor")
-          .repartition(p, col(ID))),
-      eager = false)
-    var depth = resume.map(_._1).getOrElse(0L)
-    var frontier =
-      if (resume.isEmpty) visited
-      else Lineage.materialize(
-        visited.df.filter(col("distance") === depth), eager = false)
-    var frontierSize = frontier.df.count()
-    var visitedCount = if (resume.isEmpty) frontierSize else visited.df.count()
-
-    val levels = scala.collection.mutable.ArrayBuffer[Lineage.Handle](visited)
-    if (frontier ne visited) levels += frontier
-    CheckpointManager.committing(cfg.checkpoint) {
-      while (frontierSize > 0 && depth < cfg.maxDepth) {
-        depth += 1
+    // The auto direction's counts: the visited rows and the last
+    // level's, counted from the state by the first step (after a
+    // resume too), then advanced by each check.
+    var visitedCount = -1L
+    var frontierSize = -1L
+    // Fingerprint extras = sorted sources: a checkpoint root reused for
+    // a different graph or source set is ignored, not silently resumed
+    // into wrong distances.
+    val r = Superstep.run(g, "bfs", cfg.maxDepth, cfg.checkpoint,
+      cfg.checkpointEvery, sources.sorted.map(_.toString))(
+      sources.map(s => (s, 0L, s)).toDF(ID, "distance", "predecessor")
+        .repartition(p, col(ID)),
+      step = (visited, depth) => {
+        // The frontier is the previous level: the rows at its distance.
+        val frontier = visited.filter(col("distance") === depth - 1)
+        if (visitedCount < 0) {
+          visitedCount = visited.count()
+          frontierSize = if (depth == 1) visitedCount else frontier.count()
+        }
         val doPull = cfg.pull.getOrElse {
           // Auto: pull once the frontier outnumbers the unvisited
           // residue (cheap proxy for edge-out vs edge-in volume).
@@ -170,20 +154,20 @@ object Bfs {
         val expanded =
           if (doPull) {
             val unvisited = allVerts.df
-              .join(visited.df.select(ID), Seq(ID), "left_anti")
+              .join(visited.select(ID), Seq(ID), "left_anti")
             edges
               .join(unvisited.withColumnRenamed(ID, DST).hint("shuffle_hash"),
                 Seq(DST), "left_semi")
-              .join(frontier.df.select(col(ID).as(SRC)).hint("shuffle_hash"),
+              .join(frontier.select(col(ID).as(SRC)).hint("shuffle_hash"),
                 Seq(SRC))
               .groupBy(DST).agg(min(SRC).as("predecessor"))
           } else {
             edges
-              .join(frontier.df.select(col(ID)).hint("shuffle_hash"),
+              .join(frontier.select(col(ID)).hint("shuffle_hash"),
                 edges(SRC) === col(ID))
               .select(col(DST), edges(SRC).as("pred"))
               .groupBy(DST).agg(min("pred").as("predecessor"))
-              .join(visited.df.select(col(ID)).withColumnRenamed(ID, DST),
+              .join(visited.select(col(ID)).withColumnRenamed(ID, DST),
                 Seq(DST), "left_anti")
           }
         // Both branches end in groupBy(DST), so the level is already
@@ -192,43 +176,21 @@ object Bfs {
         // redundant V-sized exchange per level (guide §2.4) — the next
         // push join is co-partitioned either way. Kept when the widths
         // differ (caller-managed layouts).
-        val body = expanded
-          .select(col(DST).as(ID), lit(depth).as("distance"),
+        val level = expanded
+          .select(col(DST).as(ID), lit(depth.toLong).as("distance"),
             col("predecessor"))
-        val nextFrontier = Lineage.materialize(
-          if (p == spark.sessionState.conf.numShufflePartitions) body
-          else body.repartition(p, col(ID)),
-          eager = false)
-        frontierSize = nextFrontier.df.count()
-        if (frontierSize > 0) {
-          visitedCount += frontierSize
-          // A level to be committed is cached before the commit starts,
-          // so the background write and the next level's join both read
-          // the cache instead of computing the level at the same time.
-          val committed = depth % cfg.checkpointEvery == 0
-          val newVisited = Lineage.materialize(
-            visited.df.union(nextFrontier.df),
-            eager = committed && cfg.checkpoint.isDefined)
-          levels += nextFrontier
-          levels += newVisited
-          visited = newVisited
-          frontier = nextFrontier
-          cfg.checkpoint.foreach { cm =>
-            if (committed) {
-              cm.commit("bfs", depth.toInt, visited.df,
-                Map("frontier" -> frontierSize.toDouble,
-                  "depth" -> depth.toDouble), fp)
-            }
-          }
-        } else {
-          nextFrontier.release()
-        }
-      }
-    }
+        visited.union(
+          if (p == spark.sessionState.conf.numShufflePartitions) level
+          else level.repartition(p, col(ID)))
+      },
+      check = (next, depth) => {
+        frontierSize = levelRows(next, depth)
+        visitedCount += frontierSize
+        (frontierSize == 0, Map("frontier" -> frontierSize.toDouble,
+          "depth" -> depth.toDouble))
+      })
 
-    val out = Lineage.materialize(visited.df)
-    levels.foreach(_.release())
     if (allVertsInit) allVerts.release()
-    out.df
+    r.state.df
   }
 }

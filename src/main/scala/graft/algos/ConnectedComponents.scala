@@ -61,7 +61,7 @@ object ConnectedComponents {
     val r = Superstep.run(g, "wcc", cfg.maxIter, cfg.checkpoint,
       cfg.checkpointEvery)(
       init,
-      step = state => {
+      step = (state, _) => {
         // Only improved vertices broadcast their (smaller) label.
         val msgs = edges
           .join(state.filter(col(CHANGED)).select(col(ID), col(COMP))

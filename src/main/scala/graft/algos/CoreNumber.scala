@@ -110,10 +110,9 @@ object CoreNumber {
     // of O(E), and runs unchanged.
     val smallGraph = eRows < 1000000L
 
-    // Set by each check: the supersteps done, the vertices whose value
-    // changed in the last one (the first superstep finds everything
-    // dirty) and the round's dirty-set cache, released there.
-    var rounds = 0
+    // Set by each check: the vertices whose value changed in the last
+    // superstep (the first superstep finds everything dirty) and the
+    // round's dirty-set cache, released there.
     var changed = nVerts
     var dirtyCache: Option[DataFrame] = None
     val r = Superstep.run(g, "core_number", maxIter)(
@@ -122,7 +121,7 @@ object CoreNumber {
         .select(col(ID), least(coalesce(col("c"), lit(0L)), lit(cap)).as("c"),
           lit(true).as("chg"))
         .repartition(p, col(ID)),
-      step = state => {
+      step = (state, iter) => {
         // Neighbor-value stream (dst, c): the edges⋈state join is
         // co-partitioned (edges by src, state by id) — zero exchange.
         val joined = edges
@@ -134,7 +133,7 @@ object CoreNumber {
         // small (< 10% of V — measured best at sf0.1 vs 2%, 25%),
         // restrict the histogram to the dirty dsts — tail rounds then
         // cost O(frontier), not O(E).
-        val frontierMode = !smallGraph && rounds > 0 && changed < nVerts / 10
+        val frontierMode = !smallGraph && iter > 1 && changed < nVerts / 10
         val stream =
           if (frontierMode) {
             val dirtyPlan = edges
@@ -195,9 +194,8 @@ object CoreNumber {
             least(state("c"), coalesce(col("h"), state("c"))).as("c"),
             (coalesce(col("h"), state("c")) < state("c")).as("chg"))
       },
-      check = (next, iter) => {
+      check = (next, _) => {
         changed = next.filter(col("chg")).count()
-        rounds = iter
         dirtyCache.foreach(_.unpersist())
         dirtyCache = None
         (changed == 0, Map.empty)

@@ -38,7 +38,7 @@ object Eigenvector {
     var norm = 1.0
     val r = Superstep.run(g, "eigenvector", cfg.maxIter)(
       verts.df.select(col(ID), lit(1.0 / v).as("raw"), lit(0.0).as("old")),
-      step = state => {
+      step = (state, _) => {
         val msgs = g.edges
           .join(state.select(col(ID), (col("raw") / norm).as("c"))
               .hint("shuffle_hash"),

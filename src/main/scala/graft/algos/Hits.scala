@@ -72,7 +72,7 @@ object Hits {
     val r = Superstep.run(g, "hits", cfg.maxIter)(
       verts.df.select(col(ID), lit(1.0 / v).as("hub_raw"),
         lit(0.0).as("auth_raw")),
-      step = state => {
+      step = (state, _) => {
         // auth_raw(v) = sum of hub(u) over in-edges (hub normalized
         // lazily). Materialized: the frame feeds BOTH the hub gather
         // and the state join below — left as a view, its whole subtree

@@ -32,7 +32,7 @@ object KCore {
    * size the unrolled SQL oracle). */
   final case class Result(graph: LinkGraph, rounds: Int)
 
-  /** Iterative peel on [[Superstep]]. `degreeType` (reference
+  /** Iterative peel on [[Superstep]], with AQE off. `degreeType` (reference
    * `algorithms.hpp:1636`): Out counts src-side edges (= total degree
    * on a symmetric table — the undirected default), In counts
    * dst-side, InOut both. Every vertex of the graph must survive the
@@ -41,44 +41,45 @@ object KCore {
       g: LinkGraph,
       k: Int,
       maxIter: Int = 100,
-      degreeType: CoreNumber.DegreeType = CoreNumber.Out): Result = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    // Edge rows of the current state: counted by the first step, then
-    // by each check, whose count also fills the next state's cache.
-    var rows = -1L
-    val r = Superstep.run(g, "kcore", maxIter)(
-      g.edges.filter(col(SRC) =!= col(DST)),
-      step = cur => {
-        if (rows < 0) rows = cur.count()
-        val degStream = degreeType match {
-          case CoreNumber.Out => cur.select(col(SRC).as(ID))
-          case CoreNumber.In => cur.select(col(DST).as(ID))
-          case CoreNumber.InOut => cur.select(col(SRC).as(ID))
-            .union(cur.select(col(DST).as(ID)))
-        }
-        val keep = degStream.groupBy(ID).agg(count(lit(1)).as("d"))
-          .filter(col("d") >= k)
-          .select(ID)
-        // The survivor set is bounded by V <= 2·(edge rows): broadcast
-        // it into BOTH semi-joins when it fits (guide §3.1) — the
-        // dst-side semi-join otherwise re-exchanges the whole edge
-        // table every peel round (its layout is hash(src)). Past the
-        // bound the shuffled semi-joins run as before.
-        val bcastKeep = rows * 64L < SparkTuning.BroadcastBytes
-        val keepS = keep.withColumnRenamed(ID, SRC)
-        val keepD = keep.withColumnRenamed(ID, DST)
-        cur
-          .join(if (bcastKeep) broadcast(keepS) else keepS, Seq(SRC), "left_semi")
-          .join(if (bcastKeep) broadcast(keepD) else keepD, Seq(DST), "left_semi")
-      },
-      check = (next, _) => {
-        val m = next.count()
-        val done = m == rows || m == 0
-        rows = m
-        (done, Map.empty)
-      })
-    Result(LinkGraph(r.state.df, g.directed, g.numPartitions), r.iterations)
-  }
+      degreeType: CoreNumber.DegreeType = CoreNumber.Out): Result =
+    SparkTuning.withoutAqe(g.spark) {
+      require(k >= 1, s"k must be >= 1, got $k")
+      // Edge rows of the current state: counted by the first step, then
+      // by each check, whose count also fills the next state's cache.
+      var rows = -1L
+      val r = Superstep.run(g, "kcore", maxIter)(
+        g.edges.filter(col(SRC) =!= col(DST)),
+        step = (cur, _) => {
+          if (rows < 0) rows = cur.count()
+          val degStream = degreeType match {
+            case CoreNumber.Out => cur.select(col(SRC).as(ID))
+            case CoreNumber.In => cur.select(col(DST).as(ID))
+            case CoreNumber.InOut => cur.select(col(SRC).as(ID))
+              .union(cur.select(col(DST).as(ID)))
+          }
+          val keep = degStream.groupBy(ID).agg(count(lit(1)).as("d"))
+            .filter(col("d") >= k)
+            .select(ID)
+          // The survivor set is bounded by V <= 2·(edge rows): broadcast
+          // it into BOTH semi-joins when it fits (guide §3.1) — the
+          // dst-side semi-join otherwise re-exchanges the whole edge
+          // table every peel round (its layout is hash(src)). Past the
+          // bound the shuffled semi-joins run as before.
+          val bcastKeep = rows * 64L < SparkTuning.BroadcastBytes
+          val keepS = keep.withColumnRenamed(ID, SRC)
+          val keepD = keep.withColumnRenamed(ID, DST)
+          cur
+            .join(if (bcastKeep) broadcast(keepS) else keepS, Seq(SRC), "left_semi")
+            .join(if (bcastKeep) broadcast(keepD) else keepD, Seq(DST), "left_semi")
+        },
+        check = (next, _) => {
+          val m = next.count()
+          val done = m == rows || m == 0
+          rows = m
+          (done, Map.empty)
+        })
+      Result(LinkGraph(r.state.df, g.directed, g.numPartitions), r.iterations)
+    }
 
   /** One-shot k-core given core numbers (id, core_number): keep edges
    * whose both endpoints have core_number >= k. */

@@ -82,7 +82,7 @@ object KTruss {
           greatest(col(SRC), col(DST)).as(DST))
         .distinct()
         .repartition(p, col(SRC)),
-      step = cur => {
+      step = (cur, _) => {
         if (n < 0) n = cur.count()
         val sym = cur.union(cur.select(col(DST).as(SRC), col(SRC).as(DST)))
 

@@ -35,7 +35,7 @@ object Katz {
       g.outWeightSums.select(col(ID)).repartition(p, col(ID)), eager = false)
     val r = Superstep.run(g, "katz", cfg.maxIter)(
       verts.df.select(col(ID), lit(0.0).as("kz"), lit(0.0).as("old")),
-      step = state => {
+      step = (state, _) => {
         val msgs = g.edges
           .join(state.select(col(ID), col("kz")).hint("shuffle_hash"),
             g.edges(SRC) === col(ID))

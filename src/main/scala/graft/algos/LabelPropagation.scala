@@ -61,7 +61,7 @@ object LabelPropagation {
     val r = Superstep.run(g, "lpa", cfg.maxIter, cfg.checkpoint,
       cfg.checkpointEvery)(
       init,
-      step = state => {
+      step = (state, _) => {
         // Deterministic argmax: max over struct(count, -label) picks the
         // highest count, then (negated) the smallest label.
         // ONE exchange per iteration (the CoreNumber byDst pattern,

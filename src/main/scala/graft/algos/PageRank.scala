@@ -133,7 +133,7 @@ object PageRank {
       cfg.checkpointEvery, Seq(cfg.alpha.toString,
         cfg.personalization.isDefined.toString))(
       init,
-      step = state => {
+      step = (state, _) => {
         // Redistributed mass this superstep; multiplied by the per-vertex
         // teleport weight (uniform 1/V or personalized).
         val mass = danglingSum.getOrElse(scalars(state)(0)) * cfg.alpha +

@@ -65,7 +65,7 @@ object Sssp {
     val r = Superstep.run(g, Name, cfg.maxIter, cfg.checkpoint,
       cfg.checkpointEvery, extras(source))(
       init,
-      step = st => {
+      step = (st, _) => {
         // Relax out-edges of improved vertices; keep the best (distance,
         // predecessor) candidate per destination — min over struct gives
         // the deterministic (smallest-distance, then smallest-pred) pick.

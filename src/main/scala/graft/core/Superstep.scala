@@ -8,14 +8,16 @@ import graft.core.LinkGraph.ID
 
 /**
  * The superstep loop of PageRank, WCC, LPA, SSSP, Katz, Eigenvector,
- * HITS, core number and the k-core and k-truss peels. An algorithm
- * supplies its init state, its superstep plan (`step`, from the
- * current state to the next) and its convergence `check` on the next
- * state; this loop owns the rest, in one order:
+ * HITS, core number, BFS (one traversal and `multiSource`) and the
+ * k-core and k-truss peels. An algorithm supplies its init state, its
+ * superstep plan (`step`, from the current state and the number of
+ * the superstep it computes to the next state) and its convergence
+ * `check` on the next state; this loop owns the rest, in one order:
  *
  *   - resume: the latest superstep committed under `name` with this
  *     run's fingerprint (the edge table plus `name +: extras`) is
- *     restored, repartitioned by id, in place of `init`;
+ *     restored, repartitioned by id, in place of `init`; the numbering
+ *     goes on from it;
  *   - every state is lineage-cut ([[Lineage.materialize]], lazily: the
  *     check's action fills the cache);
  *   - at most `maxIter` supersteps, fewer once `check` converges;
@@ -24,19 +26,15 @@ import graft.core.LinkGraph.ID
  *     check's metrics and the columns of `init`, all inside
  *     [[CheckpointManager.committing]] — see the flush rule there.
  *
- * With SPARK_GRAFT_EXPLAIN set, the plan of superstep 1 is printed
- * (`explain("formatted")`), the loop-shape evidence of plans/r06.
- *
  * Scalars carried between supersteps (PageRank's dangling sum,
- * Eigenvector's and HITS's norms, the peels' previous row count) are
- * the algorithm's own vars, set by `check` and read by `step`; so are
- * a superstep's side caches (HITS's auth gather, the k-truss
- * adjacency), which `check` releases once the next state is counted.
+ * Eigenvector's and HITS's norms, the peels' previous row count, BFS's
+ * visited and frontier counts) are the algorithm's own vars, set by
+ * `check` and read by `step`; so are a superstep's side caches (HITS's
+ * auth gather, the k-truss adjacency), which `check` releases once the
+ * next state is counted.
  *
- * Five iterative algorithms keep hand-written loops, because their
+ * Four iterative algorithms keep hand-written loops, because their
  * loop is not one state stepped to the next:
- *   - BFS keeps every level alive and commits a frame it does not step;
- *     moved here its plans would change;
  *   - Betweenness steps two frames forward (the frontier and the
  *     visited set), then walks the kept levels backward;
  *   - MST's Borůvka rounds step two frames (components and the picked
@@ -58,7 +56,7 @@ object Superstep {
       checkpointEvery: Int = 1,
       extras: Seq[String] = Nil)(
       init: DataFrame,
-      step: DataFrame => DataFrame,
+      step: (DataFrame, Int) => DataFrame,
       check: (DataFrame, Int) => (Boolean, Map[String, Double])): Result = {
     val fp = checkpoint.map(_.graphFingerprint(g.edges, name +: extras: _*))
       .getOrElse("")
@@ -72,11 +70,7 @@ object Superstep {
     CheckpointManager.committing(checkpoint) {
       while (!converged && iter < maxIter) {
         iter += 1
-        val plan = step(state.df)
-        if (iter == 1 && sys.env.contains("SPARK_GRAFT_EXPLAIN")) {
-          plan.explain("formatted")
-        }
-        val next = Lineage.materialize(plan, eager = false)
+        val next = Lineage.materialize(step(state.df, iter), eager = false)
         val (done, metrics) = check(next.df, iter)
         converged = done
         CheckpointManager.release(checkpoint, state)

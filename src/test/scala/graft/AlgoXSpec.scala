@@ -178,6 +178,28 @@ class BfsSpec extends SparkSpec {
       assert(auto == push, s"$fx auto vs push")
     }
   }
+
+  test("bfs on a caller-cached graph keeps only the result's own cache") {
+    val g = graphOf(loadFixture("karate")).symmetrize.cached()
+    g.edges.count()
+    val sc = spark.sparkContext
+    val dir = java.nio.file.Files.createTempDirectory("graft-bfs-cache").toString
+    val cm = new graft.checkpoint.CheckpointManager(dir, spark)
+    // Karate is connected: every vertex is reached from every source.
+    val calls: Seq[(String, () => org.apache.spark.sql.DataFrame, Long)] = Seq(
+      ("push", () => Bfs.run(g, Seq(0L), Bfs.Config(pull = Some(false))), 34L),
+      ("pull", () => Bfs.run(g, Seq(0L), Bfs.Config(pull = Some(true))), 34L),
+      ("checkpointed", () => Bfs.run(g, Seq(0L),
+        Bfs.Config(checkpointEvery = 1, checkpoint = Some(cm))), 34L),
+      ("multiSource", () => Bfs.multiSource(g, Seq(0L, 33L)), 68L))
+    try calls.foreach { case (name, call, rows) =>
+      // Ids, not a count: the context cleaner may drop older RDDs meanwhile.
+      val before = sc.getPersistentRDDs.keySet.toSet
+      val out = call()
+      assert((sc.getPersistentRDDs.keySet.toSet -- before).size == 1, name)
+      assert(out.count() == rows, name)
+    } finally g.unpersist()
+  }
 }
 
 class EgonetSpec extends SparkSpec {

@@ -53,8 +53,8 @@ class PlanShapeSpec extends SparkSpec {
     // jobs and its executed Exchanges: the submitted stages other than
     // each job's result stage (a stage whose shuffle output is reused
     // is skipped, not submitted).
-    import graft.algos.{ConnectedComponents, CoreNumber, Hits, KCore, KTruss,
-      LabelPropagation, PageRank, Sssp}
+    import graft.algos.{Bfs, ConnectedComponents, CoreNumber, Hits, KCore,
+      KTruss, LabelPropagation, PageRank, Sssp}
     val g = graphOf(loadFixture("karate")).symmetrize.cached()
     g.edges.count()
     def counts(run: Int => Unit, iters: Int): (Int, Int) = {
@@ -80,20 +80,29 @@ class PlanShapeSpec extends SparkSpec {
         Hits.Config(tol = 0.0, maxIter = n)).converged)),
       "core_number" -> (n => CoreNumber.run(g, maxIter = n)),
       "kcore" -> (n => KCore.subgraph(g, 4, maxIter = n)),
-      "ktruss" -> (n => KTruss.subgraph(g, 5, maxIter = n)))
+      "ktruss" -> (n => KTruss.subgraph(g, 5, maxIter = n)),
+      // Karate's levels from vertex 0 go 3 deep: every level is non-empty.
+      "bfs" -> (n => Bfs.run(g, Seq(0L),
+        Bfs.Config(maxDepth = n, pull = Some(false)))),
+      "bfs_pull" -> (n => Bfs.run(g, Seq(0L),
+        Bfs.Config(maxDepth = n, pull = Some(true)))),
+      "ms_bfs" -> (n => Bfs.multiSource(g, Seq(0L), maxDepth = n)))
     try {
       val got = loops.map { case (name, run) => name -> perSuperstep(run) }.toMap
       // One job per superstep, the convergence aggregate; it runs the
       // message reduce's exchange and its own single-partition one
-      // (HITS reduces twice: the auth and the hub gathers). The peels
-      // start more: the k-truss adjacency count and its two broadcast
-      // builds; the k-core survivor set's two builds, under the
-      // session's AQE, which KCore.subgraph leaves on and which runs
-      // every exchange as a job of its own.
+      // (HITS reduces twice: the auth and the hub gathers; a pulling
+      // BFS level also moves the edges to dst and back to src; the
+      // multi-source one reduces by (source, dst), then moves the
+      // visited side of its anti-join and the new level to id). The
+      // peels start more: the k-truss adjacency count and its two
+      // broadcast builds; the k-core survivor set's two broadcast
+      // builds, beside the count and its single-partition exchange.
       assert(got == Map("pagerank" -> (1, 2), "wcc" -> (1, 2),
         "lpa" -> (1, 2), "sssp" -> (1, 2),
         "hits" -> (1, 3), "core_number" -> (1, 2),
-        "kcore" -> (4, 0), "ktruss" -> (4, 5)))
+        "kcore" -> (3, 1), "ktruss" -> (4, 5),
+        "bfs" -> (1, 2), "bfs_pull" -> (1, 4), "ms_bfs" -> (1, 4)))
     } finally g.unpersist()
   }
 
