@@ -40,27 +40,40 @@ object ConnectedComponents {
       iterations: Int,
       converged: Boolean)
 
-  private val COMP = "component"
+  private[algos] val COMP = "component"
   private val CHANGED = "changed"
 
   def run(g0: LinkGraph, cfg: Config = Config()): Result =
     graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
 
   private def runImpl(g: LinkGraph, cfg: Config): Result = {
-    // One upfront cache of the edge table; vertices + the superstep
-    // joins all read it (an uncached upstream plan would re-run per use).
-    val p = g.numPartitions
-    val edges = g.edges
-
     // Undirected input means every vertex occurs as src — no need for
     // the 2x-wide src∪dst distinct.
-    val init = g.edges.select(col(SRC).as(ID)).distinct()
-      .select(col(ID), col(ID).as(COMP), lit(true).as(CHANGED))
-      .repartition(p, col(ID))
+    val r = minLabel(g, "wcc", cfg.maxIter, cfg.checkpoint, cfg.checkpointEvery)(
+      g.edges.select(col(SRC).as(ID)).distinct(), idsPartitioned = false)
+    Result(r.state.df.select(col(ID), col(COMP)), r.iterations, r.converged)
+  }
 
-    val r = Superstep.run(g, "wcc", cfg.maxIter, cfg.checkpoint,
-      cfg.checkpointEvery)(
-      init,
+  /**
+   * Min-label propagation along `g`'s edges (src → dst) on [[Superstep]]:
+   * every vertex of `ids` (one column, id) starts as its own label, and
+   * the state (id, component, changed) converges to component = the
+   * minimum id that reaches the vertex. WCC runs it on the symmetrized
+   * graph; SCC's forward phase on the live directed subgraph.
+   * `idsPartitioned`: `ids` is already hash-partitioned by id into
+   * `g.numPartitions`, so the state needs no repartition.
+   */
+  private[algos] def minLabel(
+      g: LinkGraph,
+      name: String,
+      maxIter: Int,
+      checkpoint: Option[CheckpointManager] = None,
+      checkpointEvery: Int = 1)(
+      ids: DataFrame, idsPartitioned: Boolean): Superstep.Result = {
+    val edges = g.edges
+    val init = ids.select(col(ID), col(ID).as(COMP), lit(true).as(CHANGED))
+    Superstep.run(g, name, maxIter, checkpoint, checkpointEvery)(
+      if (idsPartitioned) init else init.repartition(g.numPartitions, col(ID)),
       step = (state, _) => {
         // Only improved vertices broadcast their (smaller) label.
         val msgs = edges
@@ -81,8 +94,6 @@ object ConnectedComponents {
         val active = next.filter(col(CHANGED)).count()
         (active == 0L, Map("active" -> active.toDouble))
       })
-
-    Result(r.state.df.select(col(ID), col(COMP)), r.iterations, r.converged)
   }
 
   /** Number of distinct components (reference:

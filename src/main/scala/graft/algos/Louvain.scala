@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph, SparkTuning}
+import graft.core.{Lineage, LinkGraph, SparkTuning, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
 
 /**
@@ -73,12 +72,13 @@ object Louvain {
       modularity: Double,
       levels: Int,
       // One frame per level when cfg.keepDendrogram: (id, community)
-      // over that LEVEL's (coarsened) vertex space, level 0 first —
-      // flattening them top-down reproduces `labels`.
+      // over that LEVEL's (coarsened) vertex space, level 0 first (for
+      // Leiden, the refined assignment) — flattening them top-down
+      // reproduces `labels`.
       dendrogram: Seq[DataFrame] = Nil)
 
   def run(g0: LinkGraph, cfg: Config = Config()): Result =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(runImpl(g0, cfg))
+    SparkTuning.withGraph(g0)(runImpl(_, cfg, refine = false))
 
   /** Flatten a per-level dendrogram (level 0 first, each level's ids =
    * the previous level's community ids) to original-id → final
@@ -89,28 +89,42 @@ object Louvain {
    * intermediate level by passing a prefix of the frames). */
   def flattenDendrogram(levels: Seq[DataFrame]): DataFrame = {
     require(levels.nonEmpty, "empty dendrogram")
-    levels.tail.foldLeft(levels.head) { (flat, lvl) =>
-      flat.join(
-          lvl.select(col(ID).as("__c"), col("community").as("__nc"))
-            .hint("shuffle_hash"),
-          flat("community") === col("__c"))
-        .select(flat(ID), col("__nc").as("community"))
-    }
+    levels.tail.foldLeft(levels.head)(flattenStep)
   }
 
-  private def runImpl(g0: LinkGraph, cfg: Config): Result = {
-    val callerCached = g0.edges.storageLevel != StorageLevel.NONE
+  /** `flat` (id, community) with each community replaced by its own
+   * community in the next level's `lvl` (id, community). */
+  private def flattenStep(flat: DataFrame, lvl: DataFrame): DataFrame =
+    flat.join(
+        lvl.select(col(ID).as("__c"), col("community").as("__nc"))
+          .hint("shuffle_hash"),
+        flat("community") === col("__c"))
+      .select(flat(ID), col("__nc").as("community"))
+
+  /**
+   * The one level loop of Louvain and, with `refine`, of [[Leiden]]:
+   * each level's labels are replaced by their refinement
+   * ([[Leiden.refine]]) before the level's Q is taken and the graph
+   * contracted. `g0` is the caller's graph, already cached (the entry
+   * points run this inside [[SparkTuning.withGraph]]).
+   * `bcastBytes`: the V-sized frames of a level are broadcast while its
+   * vertex count times 32 bytes comes to less than this; tests pass 0
+   * to run the shuffled plan.
+   */
+  private[graft] def runImpl(
+      g0: LinkGraph,
+      cfg: Config,
+      refine: Boolean,
+      bcastBytes: Long = SparkTuning.BroadcastBytes): Result = {
     if (g0.edges.isEmpty) return Result(noLabels(g0.spark), -1.0, 0)
-    var g = if (callerCached) g0 else g0.cached()
-    // Whether the first-level cache behind `g` is ours to drop.
-    var gOwned = !callerCached
+    val p = g0.numPartitions
+    var g = g0
     // Coarsened levels are held as Lineage handles (flat LogicalRDD
     // plans): Dataset.unpersist CASCADES to dependent cached plans, so
     // a coarse level cached as a derived plan would lose its cache the
     // moment the parent level is unpersisted and silently recompute
     // from released state.
     var gHandle: Lineage.Handle = null
-    val p = g.numPartitions
 
     // Flattened mapping original-id -> current community.
     var flat: Lineage.Handle = null
@@ -120,25 +134,16 @@ object Louvain {
 
     val dendro = scala.collection.mutable.ArrayBuffer[DataFrame]()
     while (!done && levels < cfg.maxLevels) {
-      val (lvlLabels, lvlQ) = oneLevel(g, cfg, p)
+      val (lvlLabels, lvlQ) = oneLevel(g, cfg, p, refine, bcastBytes)
       if (lvlQ <= bestModularity) {
         lvlLabels.release()
         done = true
       } else {
         bestModularity = lvlQ
         levels += 1
+        val lvl = lvlLabels.df.select(col(ID), col("lbl").as("community"))
         val newFlat =
-          if (flat == null) {
-            Lineage.materialize(
-              lvlLabels.df.select(col(ID), col("lbl").as("community")))
-          } else {
-            Lineage.materialize(
-              flat.df.join(
-                  lvlLabels.df.select(col(ID).as("__c"), col("lbl"))
-                    .hint("shuffle_hash"),
-                  flat.df("community") === col("__c"))
-                .select(flat.df(ID), col("lbl").as("community")))
-          }
+          Lineage.materialize(if (flat == null) lvl else flattenStep(flat.df, lvl))
         if (flat != null) flat.release()
         flat = newFlat
 
@@ -151,18 +156,14 @@ object Louvain {
               Coarsen.run(g,
                 lvlLabels.df.select(col(ID), col("lbl").as("label"))).edges,
               p))
-          if (gOwned) { g.unpersist(); gOwned = false }
           if (gHandle != null) gHandle.release()
           gHandle = cEdges
           g = LinkGraph(cEdges.df, directed = false, p)
         }
-        if (cfg.keepDendrogram)
-          dendro += lvlLabels.df.select(col(ID), col("lbl").as("community"))
+        if (cfg.keepDendrogram) dendro += lvl
         else lvlLabels.release()
       }
     }
-
-    if (gOwned) g.unpersist()
     if (gHandle != null) gHandle.release()
 
     val labels = if (flat == null) noLabels(g0.spark) else flat.df
@@ -170,16 +171,20 @@ object Louvain {
   }
 
   /** 0 rows with the documented label columns (id, community). */
-  private[algos] def noLabels(spark: SparkSession): DataFrame = {
+  private def noLabels(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Seq.empty[(Long, Long)].toDF(ID, "community")
   }
 
-  /** One dendrogram level; returns (labels handle (id, lbl), level Q).
-   * private[algos]: Leiden drives the same level machinery and adds
-   * its refinement phase between the label loop and the contraction. */
-  private[algos] def oneLevel(
-      g: LinkGraph, cfg: Config, p: Int): (Lineage.Handle, Double) = {
+  /** One dendrogram level: the local-moving loop on [[Superstep]], then
+   * with `refine` Leiden's refinement; returns the level's labels
+   * handle (id, lbl) and their Q. */
+  private def oneLevel(
+      g: LinkGraph,
+      cfg: Config,
+      p: Int,
+      refine: Boolean,
+      bcastBytes: Long): (Lineage.Handle, Double) = {
     val edges = g.edges
     val totalW = edges.agg(sum(WEIGHT)).head().getDouble(0)
     val res = cfg.resolution
@@ -200,130 +205,131 @@ object Louvain {
     // exchanges per inner iteration. Past the bound (V too big to
     // broadcast) the original shuffle plan runs unchanged.
     val vCount = vw.df.count()
-    val bcastV = vCount * 32L < SparkTuning.BroadcastBytes
+    val bcastV = vCount * 32L < bcastBytes
 
-    var labels = Lineage.materialize(
-      vw.df.select(col(ID), col(ID).as("lbl")), eager = false)
+    val init = vw.df.select(col(ID), col(ID).as("lbl"))
     val fixed = cfg.fixedInnerIter > 0
-    // Adaptive mode keeps a separate copy of the best-Q labels; fixed
-    // mode takes every iteration unconditionally, so `best` just
-    // tracks the newest handle (the per-iteration eager copy was a
-    // V-sized cache + job of pure overhead).
-    var best = if (fixed) labels else Lineage.materialize(labels.df)
-    // Fixed-iteration mode takes every iteration's labels uncondition-
-    // ally, so the per-iteration Q evaluation (two extra jobs each) is
-    // pure overhead — evaluate Q once, after the loop.
+    // Adaptive mode keeps a separate copy of the best-Q labels and
+    // evaluates Q every iteration; fixed mode takes every iteration
+    // unconditionally, so its best labels are the last state and Q is
+    // evaluated once, after the loop.
+    var best = if (fixed) null else Lineage.materialize(init)
     var curQ =
       if (fixed) -1.0
-      else modularity(edges, labels.df, vw.df, totalW, res)
-    var newQ = curQ
-    var iter = 0
-    val maxIter = if (fixed) cfg.fixedInnerIter else cfg.maxInnerIter
+      else modularity(edges, best.df, vw.df, totalW, res)
+    // The superstep's labeled-edge cache, released by its check.
+    var ebH: Lineage.Handle = null
 
-    var continue = true
-    while (continue && iter < maxIter) {
-      iter += 1
-      val upDown = iter % 2 == 1 // reference alternates starting true
+    val r = Superstep.run(g, "louvain",
+      if (fixed) cfg.fixedInnerIter else cfg.maxInnerIter)(
+      init,
+      step = (labels, iter) => {
+        val upDown = iter % 2 == 1 // reference alternates starting true
 
-      // Cluster weights a(c) from the current labels.
-      val cw = labels.df.join(vw.df.hint("shuffle_hash"), Seq(ID))
-        .groupBy(col("lbl")).agg(sum("kk").as("a"))
-      val cwB = if (bcastV) broadcast(cw) else cw
+        // Cluster weights a(c) from the current labels.
+        val cw = labels.join(vw.df.hint("shuffle_hash"), Seq(ID))
+          .groupBy(col("lbl")).agg(sum("kk").as("a"))
+        val cwB = if (bcastV) broadcast(cw) else cw
 
-      // Edges with both endpoint clusters; the dst-label join is the
-      // per-iteration E-sized shuffle (or a broadcast when V fits).
-      // Materialized once — both the own-cluster and candidate
-      // aggregations scan it, and recomputing the double join per
-      // aggregation doubled the E-sized work.
-      val lsrcJ = labels.df.select(col(ID), col("lbl").as("lsrc"))
-      val ldstJ = labels.df.select(col(ID), col("lbl").as("ldst"))
-      val ebH = Lineage.materialize(
-        edges
-          .join(if (bcastV) broadcast(lsrcJ) else lsrcJ.hint("shuffle_hash"),
-            edges(SRC) === lsrcJ(ID))
-          .drop(ID)
-          .join(if (bcastV) broadcast(ldstJ) else ldstJ.hint("shuffle_hash"),
-            col(DST) === ldstJ(ID))
-          .select(col(SRC), col(DST), col(WEIGHT).as("w"),
-            col("lsrc"), col("ldst")))
-      val eb = ebH.df
+        // Edges with both endpoint clusters; the dst-label join is the
+        // per-iteration E-sized shuffle (or a broadcast when V fits).
+        // Materialized once — both the own-cluster and candidate
+        // aggregations scan it, and recomputing the double join per
+        // aggregation doubled the E-sized work.
+        val lsrcJ = labels.select(col(ID), col("lbl").as("lsrc"))
+        val ldstJ = labels.select(col(ID), col("lbl").as("ldst"))
+        ebH = Lineage.materialize(
+          edges
+            .join(if (bcastV) broadcast(lsrcJ) else lsrcJ.hint("shuffle_hash"),
+              edges(SRC) === lsrcJ(ID))
+            .drop(ID)
+            .join(if (bcastV) broadcast(ldstJ) else ldstJ.hint("shuffle_hash"),
+              col(DST) === ldstJ(ID))
+            .select(col(SRC), col(DST), col(WEIGHT).as("w"),
+              col("lsrc"), col("ldst")))
+        val eb = ebH.df
 
-      // Σw into own cluster (minus self-loops) and the self-loop weight.
-      val own = eb.filter(col("lsrc") === col("ldst"))
-        .groupBy(SRC)
-        .agg(
-          sum(when(col(SRC) =!= col(DST), col("w")).otherwise(0.0))
-            .as("osum"),
-          sum(when(col(SRC) === col(DST), col("w")).otherwise(0.0))
-            .as("sub"))
+        // Σw into own cluster (minus self-loops) and the self-loop weight.
+        val own = eb.filter(col("lsrc") === col("ldst"))
+          .groupBy(SRC)
+          .agg(
+            sum(when(col(SRC) =!= col(DST), col("w")).otherwise(0.0))
+              .as("osum"),
+            sum(when(col(SRC) === col(DST), col("w")).otherwise(0.0))
+              .as("sub"))
 
-      // Candidate sums per (v, neighbor cluster).
-      val cand = eb.groupBy(col(SRC), col("ldst"))
-        .agg(sum("w").as("ns"))
+        // Candidate sums per (v, neighbor cluster).
+        val cand = eb.groupBy(col(SRC), col("ldst"))
+          .agg(sum("w").as("ns"))
 
-      val vinfo = labels.df.join(vw.df.hint("shuffle_hash"), Seq(ID))
-        .join(cwB.select(col("lbl"), col("a").as("a_old")), Seq("lbl"))
+        val vinfo = labels.join(vw.df.hint("shuffle_hash"), Seq(ID))
+          .join(cwB.select(col("lbl"), col("a").as("a_old")), Seq("lbl"))
 
-      val scored = cand
-        .join(vinfo.select(col(ID).as(SRC), col("lbl"), col("kk"),
-          col("a_old")).hint("shuffle_hash"), Seq(SRC))
-        .join(cwB.select(col("lbl").as("ldst"), col("a").as("a_new")),
-          Seq("ldst"))
-        .join(own.hint("shuffle_hash"), Seq(SRC), "left")
-        .select(col(SRC), col("ldst"), col("lbl"),
-          (lit(2.0) * (
-            ((col("ns")
-              - when(col("ldst") === col("lbl"),
-                  coalesce(col("sub"), lit(0.0))).otherwise(0.0)
-              - coalesce(col("osum"), lit(0.0))) / totalW)
-            - lit(res) * (col("a_new") * col("kk")
-              - col("a_old") * col("kk") + col("kk") * col("kk"))
-              / (totalW * totalW))).as("delta"))
+        val scored = cand
+          .join(vinfo.select(col(ID).as(SRC), col("lbl"), col("kk"),
+            col("a_old")).hint("shuffle_hash"), Seq(SRC))
+          .join(cwB.select(col("lbl").as("ldst"), col("a").as("a_new")),
+            Seq("ldst"))
+          .join(own.hint("shuffle_hash"), Seq(SRC), "left")
+          .select(col(SRC), col("ldst"), col("lbl"),
+            (lit(2.0) * (
+              ((col("ns")
+                - when(col("ldst") === col("lbl"),
+                    coalesce(col("sub"), lit(0.0))).otherwise(0.0)
+                - coalesce(col("osum"), lit(0.0))) / totalW)
+              - lit(res) * (col("a_new") * col("kk")
+                - col("a_old") * col("kk") + col("kk") * col("kk"))
+                / (totalW * totalW))).as("delta"))
 
-      val bestMove = scored
-        .groupBy(SRC)
-        .agg(max(struct(col("delta"), (-col("ldst")).as("negc"))).as("b"))
-        .select(col(SRC), col("b.delta").as("delta"),
-          (-col("b.negc")).as("c"))
+        val bestMove = scored
+          .groupBy(SRC)
+          .agg(max(struct(col("delta"), (-col("ldst")).as("negc"))).as("b"))
+          .select(col(SRC), col("b.delta").as("delta"),
+            (-col("b.negc")).as("c"))
 
-      val nextLabels = Lineage.materialize(
-        labels.df.join(bestMove.hint("shuffle_hash"),
-            labels.df(ID) === bestMove(SRC), "left")
-          .select(labels.df(ID),
+        labels.join(bestMove.hint("shuffle_hash"),
+            labels(ID) === bestMove(SRC), "left")
+          .select(labels(ID),
             when(col("delta") > 0.0 &&
-                (col("c") > labels.df("lbl")) === lit(upDown), col("c"))
-              .otherwise(labels.df("lbl")).as("lbl")),
-        eager = fixed)
+                (col("c") > labels("lbl")) === lit(upDown), col("c"))
+              .otherwise(labels("lbl")).as("lbl"))
+      },
+      check = (next, _) => {
+        val done =
+          if (fixed) {
+            // Oracle-parity mode: always take the labels, run all
+            // fixedInnerIter iterations. One count fills `next`.
+            next.rdd.count()
+            false
+          } else {
+            // Q's first action fills `next`.
+            val newQ = modularity(edges, next, vw.df, totalW, res)
+            if (newQ > curQ) {
+              best.release()
+              best = Lineage.materialize(next)
+            }
+            val gained = newQ > curQ + cfg.threshold
+            if (gained) curQ = newQ
+            !gained
+          }
+        // `next` is computed, so the edge-label cache can drop.
+        ebH.release()
+        (done, Map.empty)
+      })
+    if (fixed) best = r.state else r.state.release()
 
-      if (fixed) {
-        // Oracle-parity mode: always take the labels, run all
-        // fixedInnerIter iterations; Q evaluated once after the loop.
-        // nextLabels was materialized eagerly above (so ebH can drop),
-        // and `best` just follows the newest handle.
-        labels.release()
-        labels = nextLabels
-        best = nextLabels
-      } else {
-        newQ = modularity(edges, nextLabels.df, vw.df, totalW, res)
-        if (newQ > curQ) {
-          best.release()
-          best = Lineage.materialize(nextLabels.df)
-        }
-        continue = newQ > curQ + cfg.threshold
-        if (continue) curQ = newQ
-        labels.release()
-        labels = nextLabels
+    val lvl =
+      if (!refine) best
+      else {
+        // Leiden: the level's labels are its refined partition (the
+        // one contracted), so Q is evaluated on that.
+        val refined = Lineage.materialize(Leiden.refine(g, best.df, p))
+        best.release()
+        refined
       }
-      // nextLabels is fully computed in both branches above (eager
-      // best materialize / modularity action), so the edge-label cache
-      // can drop now.
-      ebH.release()
-    }
-
-    if (fixed) curQ = modularity(edges, best.df, vw.df, totalW, res)
-    if (!fixed) labels.release() // fixed: labels IS best — keep it live
+    if (fixed || refine) curQ = modularity(edges, lvl.df, vw.df, totalW, res)
     vw.release()
-    (best, curQ)
+    (lvl, curQ)
   }
 
   /** Q = Σ_{same-cluster edges} w / T − res·Σ_c a(c)² / T²

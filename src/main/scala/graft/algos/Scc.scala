@@ -2,9 +2,8 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
-import graft.core.{Lineage, LinkGraph, SparkTuning}
+import graft.core.{Lineage, LinkGraph, SparkTuning, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
@@ -28,11 +27,14 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  *  3. settle those vertices with scc=f(v), drop them from the graph,
  *     repeat until nothing remains.
  *
- * Each inner superstep is the WCC superstep shape: co-partitioned
- * state⋈edges join + message reduce with map-side combine; the outer
- * loop shrinks the live vertex/edge set monotonically, so late passes
- * touch a small residue. Supersteps scale with the diameter of the
- * condensation, not |V| — short for web-style graphs.
+ * Both fixpoints run on [[graft.core.Superstep]]: the forward one is
+ * WCC's own superstep ([[ConnectedComponents.minLabel]]: co-partitioned
+ * state⋈edges join + message reduce with map-side combine), the
+ * backward one a BFS-style frontier expansion over a (id, level)
+ * state. The outer pass loop shrinks the live vertex/edge set
+ * monotonically, so late passes touch a small residue. Supersteps
+ * scale with the diameter of the condensation, not |V| — short for
+ * web-style graphs.
  */
 object Scc {
 
@@ -47,17 +49,23 @@ object Scc {
    * the unsettled vertices (the coloring settles one SCC per forward
    * region per pass, so a deep condensation — e.g. a long directed
    * path — can legitimately hit the bound; callers that want the
-   * partial labeling pass strict = false and check `converged`). */
+   * partial labeling pass strict = false and check `converged`).
+   * A forward or backward fixpoint that `maxIter` cuts short always
+   * raises, whatever `strict` says: the pass would settle vertices
+   * under wrong labels, not leave them unlabelled. */
   def run(
       g0: LinkGraph,
       maxOuter: Int = 100,
       maxIter: Int = 200,
       strict: Boolean = true): Result =
-    graft.core.SparkTuning.withoutAqe(g0.spark)(
-      runImpl(g0, maxOuter, maxIter, strict))
+    SparkTuning.withoutAqe(g0.spark)(runImpl(g0, maxOuter, maxIter, strict))
 
-  private def runImpl(
-      g0: LinkGraph, maxOuter: Int, maxIter: Int, strict: Boolean): Result = {
+  /** `bcastBytes`: the V-sized frames are broadcast while the live
+   * vertex count times 32 bytes comes to less than this; tests pass 0
+   * to run the shuffled plan. */
+  private[graft] def runImpl(
+      g0: LinkGraph, maxOuter: Int, maxIter: Int, strict: Boolean,
+      bcastBytes: Long = SparkTuning.BroadcastBytes): Result = {
     val spark = g0.spark
     val p = g0.numPartitions
     import spark.implicits._
@@ -75,8 +83,22 @@ object Scc {
         .repartition(p, col(ID)),
       eager = false)
 
-    val settled = scala.collection.mutable.ArrayBuffer[DataFrame]()
-    val settledHandles = scala.collection.mutable.ArrayBuffer[Lineage.Handle]()
+    val settled = scala.collection.mutable.ArrayBuffer[Lineage.Handle]()
+    def releaseAll(): Unit = {
+      verts.release(); edges.release(); settled.foreach(_.release())
+    }
+    // A fixpoint's last state; one cut short releases everything, `also`
+    // included, and raises.
+    def fixpoint(r: Superstep.Result, phase: String,
+        also: Lineage.Handle*): Lineage.Handle = {
+      if (!r.converged) {
+        (r.state +: also).foreach(_.release()); releaseAll()
+        throw new IllegalStateException(
+          s"SCC's $phase fixpoint did not converge within maxIter=$maxIter " +
+            "supersteps; its labels would be wrong. Raise maxIter")
+      }
+      r.state
+    }
     var pass = 0
     var remaining = verts.df.count()
 
@@ -84,29 +106,10 @@ object Scc {
       pass += 1
 
       // 1. Forward min-label to fixpoint: f(v) = min id reaching v.
-      var f = Lineage.materialize(
-        verts.df.select(col(ID), col(ID).as("f"), lit(true).as("chg")),
-        eager = false)
-      var it = 0
-      var active = 1L
-      while (active > 0 && it < maxIter) {
-        it += 1
-        val msgs = edges.df
-          .join(f.df.filter(col("chg")).select(col(ID), col("f"))
-              .hint("shuffle_hash"),
-            edges.df(SRC) === col(ID))
-          .select(col(DST), col("f").as("m"))
-          .groupBy(DST).agg(min("m").as("m"))
-        val next = Lineage.materialize(
-          f.df.join(msgs.hint("shuffle_hash"), f.df(ID) === msgs(DST), "left")
-            .select(f.df(ID),
-              least(f.df("f"), coalesce(col("m"), f.df("f"))).as("f"),
-              (coalesce(col("m"), lit(Long.MaxValue)) < f.df("f")).as("chg")),
-          eager = false)
-        active = next.df.filter(col("chg")).count()
-        f.release()
-        f = next
-      }
+      val f = fixpoint(ConnectedComponents.minLabel(
+          LinkGraph(edges.df, directed = true, p), "scc_forward", maxIter)(
+          verts.df, idsPartitioned = true),
+        "forward")
 
       // 2. Backward frontier from roots, restricted to equal f.
       //    fs/fd once per pass: edge endpoints annotated with labels.
@@ -119,8 +122,8 @@ object Scc {
       // repartition (nothing downstream needs its layout — every
       // consumer broadcasts it). Past the bound the original
       // co-partitioned shuffle plan runs unchanged.
-      val bcast = remaining * 32L < SparkTuning.BroadcastBytes
-      val fTab = f.df.select(col(ID), col("f"))
+      val bcast = remaining * 32L < bcastBytes
+      val fTab = f.df.select(col(ID), col(ConnectedComponents.COMP).as("f"))
       val fsJ = fTab.withColumnRenamed(ID, SRC).withColumnRenamed("f", "fs")
       val fdJ = fTab.withColumnRenamed(ID, DST).withColumnRenamed("f", "fd")
       val eLabPlan = edges.df
@@ -132,52 +135,41 @@ object Scc {
         if (bcast) eLabPlan else eLabPlan.repartition(p, col(DST)),
         eager = false)
 
-      var marked = Lineage.materialize(
-        fTab.filter(col(ID) === col("f")).select(col(ID)),
-        eager = false)
-      var frontier = marked.df
-      val passScratch = scala.collection.mutable.ArrayBuffer[Lineage.Handle]()
-      var grew = 1L
-      it = 0
-      while (grew > 0 && it < maxIter) {
-        it += 1
-        // predecessors of the frontier inside the same forward region
-        val frontJ = frontier.withColumnRenamed(ID, DST)
-        val preds = eLab.df
-          .join(if (bcast) broadcast(frontJ) else frontJ.hint("shuffle_hash"),
-            Seq(DST), "left_semi")
-          .select(col(SRC).as(ID)).distinct()
-        val fresh = preds.join(
-          if (bcast) broadcast(marked.df) else marked.df, Seq(ID), "left_anti")
-        val freshH = Lineage.materialize(fresh, eager = false)
-        passScratch += freshH
-        grew = freshH.df.count()
-        if (grew > 0) {
-          val nextMarkedPlan = marked.df.union(freshH.df)
-          val nextMarked = Lineage.materialize(
-            if (bcast) nextMarkedPlan
-            else nextMarkedPlan.repartition(p, col(ID)),
-            eager = false)
-          passScratch += marked
-          marked = nextMarked
-          frontier = freshH.df
-        }
-      }
+      // The marked set, each vertex with the superstep that reached it
+      // (roots at 0); superstep i expands the rows reached at i - 1.
+      val marked = fixpoint(Superstep.run(g0, "scc_backward", maxIter)(
+        fTab.filter(col(ID) === col("f")).select(col(ID), lit(0).as("level")),
+        step = (state, i) => {
+          // predecessors of the frontier inside the same forward region
+          val frontJ = state.filter(col("level") === i - 1)
+            .select(col(ID).as(DST))
+          val fresh = eLab.df
+            .join(if (bcast) broadcast(frontJ) else frontJ.hint("shuffle_hash"),
+              Seq(DST), "left_semi")
+            .select(col(SRC).as(ID)).distinct()
+            .join(if (bcast) broadcast(state) else state, Seq(ID), "left_anti")
+          val nextPlan = state.union(fresh.select(col(ID), lit(i).as("level")))
+          if (bcast) nextPlan else nextPlan.repartition(p, col(ID))
+        },
+        check = (next, i) => {
+          val grew = next.filter(col("level") === i).count()
+          (grew == 0L, Map("grew" -> grew.toDouble))
+        }),
+        "backward", f, eLab)
+      val markedIds = marked.df.select(col(ID))
 
       // 3. Settle marked vertices with scc = f.
-      val settledPass = Lineage.materialize(
+      settled += Lineage.materialize(
         if (bcast)
-          fTab.join(broadcast(marked.df), Seq(ID))
+          fTab.join(broadcast(markedIds), Seq(ID))
             .select(col(ID), col("f").as("scc"))
-        else marked.df.join(fTab, Seq(ID)).select(col(ID), col("f").as("scc")))
-      settledHandles += settledPass
-      settled += settledPass.df
+        else markedIds.join(fTab, Seq(ID)).select(col(ID), col("f").as("scc")))
 
       // Shrink the live graph (marked broadcasts under the same bound).
-      val mSrc = marked.df.withColumnRenamed(ID, SRC)
-      val mDst = marked.df.withColumnRenamed(ID, DST)
+      val mSrc = markedIds.withColumnRenamed(ID, SRC)
+      val mDst = markedIds.withColumnRenamed(ID, DST)
       val newVerts = Lineage.materialize(
-        verts.df.join(if (bcast) broadcast(marked.df) else marked.df,
+        verts.df.join(if (bcast) broadcast(markedIds) else markedIds,
             Seq(ID), "left_anti")
           .repartition(p, col(ID)),
         eager = false)
@@ -191,24 +183,22 @@ object Scc {
           .repartition(p, col(SRC)))
       remaining = newVerts.df.count()
       verts.release(); edges.release(); f.release(); eLab.release()
-      marked.release(); passScratch.foreach(_.release())
+      marked.release()
       verts = newVerts
       edges = newEdges
     }
 
     val converged = remaining == 0
     if (!converged && strict) {
-      val n = remaining
-      verts.release(); edges.release(); settledHandles.foreach(_.release())
+      releaseAll()
       throw new IllegalStateException(
-        s"SCC did not settle $n vertices within maxOuter=$maxOuter passes " +
-          "(deep condensation); raise maxOuter or pass strict = false")
+        s"SCC did not settle $remaining vertices within maxOuter=$maxOuter " +
+          "passes (deep condensation); raise maxOuter or pass strict = false")
     }
-    val all = settled.reduceOption(_ union _)
+    val all = settled.map(_.df).reduceOption(_ union _)
       .getOrElse(spark.emptyDataset[(Long, Long)].toDF(ID, "scc"))
     val out = Lineage.materialize(all)
-    settledHandles.foreach(_.release())
-    verts.release(); edges.release()
+    releaseAll()
     Result(out.df, pass, converged, remaining)
   }
 

@@ -23,16 +23,8 @@ object SparkTuning {
    * this. */
   val BroadcastBytes: Long = 64L << 20
 
-  def withoutAqe[T](spark: SparkSession)(f: => T): T = {
-    val key = "spark.sql.adaptive.enabled"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "false")
-    try f
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
-  }
+  def withoutAqe[T](spark: SparkSession)(f: => T): T =
+    withConf(spark, "spark.sql.adaptive.enabled", "false")(f)
 
   /**
    * The one entry scope of the algorithms that read their input graph
@@ -64,10 +56,16 @@ object SparkTuning {
    * safe under driver-thread concurrency (the conf is session-global);
    * the callers are single-threaded algorithm loops.
    */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
+  def withShufflePartitions[T](spark: SparkSession, n: Int)(f: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions", n.toString)(f)
+
+  /** Run `f` with session conf `key` set to `value`; the value read
+   * before is restored (a key that read as nothing is unset) when `f`
+   * returns or throws. */
+  private def withConf[T](spark: SparkSession, key: String, value: String)(
+      f: => T): T = {
     val prev = spark.conf.getOption(key)
-    spark.conf.set(key, n.toString)
+    spark.conf.set(key, value)
     try f
     finally prev match {
       case Some(v) => spark.conf.set(key, v)

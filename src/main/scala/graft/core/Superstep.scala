@@ -8,11 +8,13 @@ import graft.core.LinkGraph.ID
 
 /**
  * The superstep loop of PageRank, WCC, LPA, SSSP, Katz, Eigenvector,
- * HITS, core number, BFS (one traversal and `multiSource`) and the
- * k-core and k-truss peels. An algorithm supplies its init state, its
- * superstep plan (`step`, from the current state and the number of
- * the superstep it computes to the next state) and its convergence
- * `check` on the next state; this loop owns the rest, in one order:
+ * HITS, core number, BFS (one traversal and `multiSource`), the
+ * k-core and k-truss peels, SCC's forward and backward fixpoints and
+ * Louvain's (and so Leiden's) local-moving loop. An algorithm supplies
+ * its init state, its superstep plan (`step`, from the current state
+ * and the number of the superstep it computes to the next state) and
+ * its convergence `check` on the next state; this loop owns the rest,
+ * in one order:
  *
  *   - resume: the latest superstep committed under `name` with this
  *     run's fingerprint (the edge table plus `name +: extras`) is
@@ -28,19 +30,29 @@ import graft.core.LinkGraph.ID
  *
  * Scalars carried between supersteps (PageRank's dangling sum,
  * Eigenvector's and HITS's norms, the peels' previous row count, BFS's
- * visited and frontier counts) are the algorithm's own vars, set by
- * `check` and read by `step`; so are a superstep's side caches (HITS's
- * auth gather, the k-truss adjacency), which `check` releases once the
- * next state is counted.
+ * visited and frontier counts, Louvain's best Q) are the algorithm's
+ * own vars, set by `check` and read by `step`; so are a superstep's
+ * side caches (HITS's auth gather, the k-truss adjacency, Louvain's
+ * labeled edges), which `check` releases once the next state is
+ * counted.
  *
- * Four iterative algorithms keep hand-written loops, because their
- * loop is not one state stepped to the next:
+ * These iterative loops stay hand-written, because none is one state
+ * stepped to the next:
  *   - Betweenness steps two frames forward (the frontier and the
  *     visited set), then walks the kept levels backward;
  *   - MST's Borůvka rounds step two frames (components and the picked
  *     forest) and run a nested pointer-jump loop past a size bound;
- *   - Louvain and Leiden nest a local-moving loop inside a level loop
- *     that coarsens the graph between levels.
+ *   - Hungarian's auction steps two frames (prices and the
+ *     assignment) in bidding rounds nested inside ε-scaling phases,
+ *     each phase restarting the assignment;
+ *   - ForceAtlas2 needs an action in the middle of each step: the
+ *     global speed, from the new forces' swing and traction, must be
+ *     known before the positions move;
+ *   - the one Louvain/Leiden level loop contracts the graph between
+ *     levels: each level runs on a new graph, and its result folds
+ *     into the flat labels and the dendrogram;
+ *   - SCC's pass loop shrinks the live graph between passes, each pass
+ *     running two fixpoints here and settling their vertices.
  */
 object Superstep {
 

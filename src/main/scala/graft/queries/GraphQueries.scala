@@ -677,7 +677,7 @@ object GraphQueries {
       // iterations) + connectivity refinement; multi-level control is
       // certified by LeidenSpec.
       val r = Leiden.run(chainGraph(s, dir),
-        Leiden.Config(maxLevels = 1, fixedInnerIter = 3))
+        Louvain.Config(maxLevels = 1, fixedInnerIter = 3))
       r.labels
     }),
 

@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.algos.{Betweenness, Bfs, Coarsen, ConnectedComponents, CoreNumber,
-  Eigenvector, Hits, Katz, LabelPropagation, Leiden, Louvain, PageRank, Similarity,
-  TriangleCount}
+  Eigenvector, Hits, Katz, LabelPropagation, Leiden, Louvain, PageRank, Scc,
+  Similarity, TriangleCount}
 
 class KatzSpec extends SparkSpec {
   test("katz matches reference-semantics oracle on karate") {
@@ -276,6 +276,7 @@ class EmptyGraphSpec extends SparkSpec {
       Betweenness.runEdges(g) -> Seq("src", "dst", "bc"),
       Louvain.run(g).labels -> Seq("id", "community"),
       Leiden.run(g).labels -> Seq("id", "community"),
+      Scc.run(g).components -> Seq("id", "scc"),
       TriangleCount.run(g) -> Seq("id", "triangles"))
     results.foreach { case (df, cols) =>
       assert(df.columns.toSeq == cols)

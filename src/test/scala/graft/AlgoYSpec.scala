@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.algos.{CoreNumber, KCore, KTruss, NeighborSampling, Node2Vec, Scc}
-import graft.core.LinkGraph
+import graft.core.{LinkGraph, SparkTuning}
 
 /** Host-side (plain Scala) oracles for the round-2 operators. */
 object RefOraclesY {
@@ -213,16 +213,33 @@ class KTrussSpec extends SparkSpec {
 }
 
 class SccSpec extends SparkSpec {
+  /** SCC labels of `g`, under the broadcast bound and past it (the bound
+   * forced to 0, with Spark's own size-based broadcast off too, so the
+   * shuffled plan runs); both must agree. */
+  private def sccOf(g: LinkGraph): Map[Long, Long] = {
+    def labels(r: Scc.Result) =
+      r.components.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val shuffled = {
+      spark.conf.set(key, "-1")
+      try SparkTuning.withoutAqe(spark)(labels(Scc.runImpl(g,
+        maxOuter = 100, maxIter = 200, strict = true, bcastBytes = 0L)))
+      finally spark.conf.unset(key)
+    }
+    val got = labels(Scc.run(g))
+    assert(shuffled == got, "shuffled plan differs from the broadcast one")
+    got
+  }
+
+  private val mixed = Set(
+    (0L, 1L), (1L, 2L), (2L, 0L), // cycle
+    (2L, 3L), (3L, 4L), // path
+    (4L, 5L), (5L, 4L), // 2-cycle
+    (6L, 0L)) // source tail
+
   test("scc on mixed cycle/path digraph matches Tarjan") {
-    val edges = Set(
-      (0L, 1L), (1L, 2L), (2L, 0L), // cycle
-      (2L, 3L), (3L, 4L), // path
-      (4L, 5L), (5L, 4L), // 2-cycle
-      (6L, 0L)) // source tail
-    val g = graphOf(edges.toSeq.map(e => (e._1, e._2, 1.0)))
-    val got = Scc.run(g).components.collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == RefOraclesY.scc(edges, (0L to 6L)))
+    val g = graphOf(mixed.toSeq.map(e => (e._1, e._2, 1.0)))
+    assert(sccOf(g) == RefOraclesY.scc(mixed, (0L to 6L)))
   }
 
   test("scc on partially-oriented karate matches Tarjan") {
@@ -232,19 +249,39 @@ class SccSpec extends SparkSpec {
     val edges = sym.filter { case (u, v) => u < v || (u + v) % 3 != 0 }
     val verts = sym.flatMap(e => Seq(e._1, e._2)).toSeq.distinct
     val g = graphOf(edges.toSeq.map(e => (e._1, e._2, 1.0)))
-    val r = Scc.run(g)
-    val got = r.components.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
-    assert(got == RefOraclesY.scc(edges, verts))
+    assert(sccOf(g) == RefOraclesY.scc(edges, verts))
   }
 
   test("scc of a symmetric graph equals wcc") {
     val edges = loadFixture("karate-disjoint").map(e => (e._1, e._2)).toSet
     val verts = edges.flatMap(e => Seq(e._1, e._2)).toSeq.distinct
     val g = graphOf(edges.toSeq.map(e => (e._1, e._2, 1.0)))
-    val got = Scc.run(g).components.collect()
-      .map(x => x.getLong(0) -> x.getLong(1)).toMap
+    val got = sccOf(g)
     assert(got == RefOraclesY.scc(edges, verts))
     assert(got.values.toSet.size == 2)
+  }
+
+  test("a fixpoint cut short by maxIter raises, whatever strict says") {
+    // With one superstep the forward labels move one hop (f(2) = 1, not
+    // 0), so root 0 finds no predecessor in its region: a pass would
+    // settle 0 alone, where Tarjan puts it in {0, 1, 2}.
+    val g = graphOf(mixed.toSeq.map(e => (e._1, e._2, 1.0)))
+    for (strict <- Seq(true, false)) {
+      val e = intercept[IllegalStateException](
+        Scc.run(g, maxIter = 1, strict = strict))
+      assert(e.getMessage.contains("forward") &&
+        e.getMessage.contains("maxIter=1"), e.getMessage)
+    }
+    // The cycle 3 -> 2 -> 1 -> 0 -> 3 with shortcuts 0 -> 1, 0 -> 2: the
+    // forward labels settle in 2 supersteps (one move, one quiet), the
+    // backward closure of root 0 needs 4, so a bound of 2 cuts only it
+    // short and would settle 3 apart from {0, 1, 2}.
+    val cycle = Seq((0L, 1L), (0L, 2L), (0L, 3L), (3L, 2L), (2L, 1L), (1L, 0L))
+    val c = graphOf(cycle.map(e => (e._1, e._2, 1.0)))
+    val e = intercept[IllegalStateException](Scc.run(c, maxIter = 2))
+    assert(e.getMessage.contains("backward") &&
+      e.getMessage.contains("maxIter=2"), e.getMessage)
+    assert(sccOf(c) == RefOraclesY.scc(cycle.toSet, 0L to 3L))
   }
 }
 

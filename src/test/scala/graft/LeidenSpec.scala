@@ -5,7 +5,7 @@ import graft.algos.{Leiden, Louvain}
 class LeidenSpec extends SparkSpec {
 
   private def communities(name: String): (Map[Long, Long], Set[(Long, Long)],
-      Leiden.Result) = {
+      Louvain.Result) = {
     val edges = loadFixture(name).map(e => (e._1, e._2)).toSet
     val g = graphOf(edges.toSeq.map(e => (e._1, e._2, 1.0)))
     val r = Leiden.run(g)

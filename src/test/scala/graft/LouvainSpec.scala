@@ -71,7 +71,7 @@ class LouvainSpec extends SparkSpec {
     import graft.algos.Leiden
     val edges = loadFixture("dolphins")
     val g = graphOf(edges)
-    val r = Leiden.run(g, Leiden.Config(maxLevels = 3,
+    val r = Leiden.run(g, Louvain.Config(maxLevels = 3,
       keepDendrogram = true))
     assert(r.dendrogram.size == r.levels)
     var flat = r.dendrogram.head.collect()
@@ -82,6 +82,29 @@ class LouvainSpec extends SparkSpec {
     }
     val want = r.labels.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(flat == want)
+  }
+
+  test("louvain and leiden past the broadcast bound equal the broadcast plan on karate") {
+    // The bound forced to 0, with Spark's own size-based broadcast off
+    // too, runs every level's shuffled plan.
+    import graft.algos.Leiden
+    import graft.core.SparkTuning
+    val g = graphOf(loadFixture("karate")).cached()
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    def labels(r: Louvain.Result) =
+      (r.labels.collect().map(x => x.getLong(0) -> x.getLong(1)).toMap, r.modularity)
+    try {
+      for (refine <- Seq(false, true)) {
+        val under = labels(
+          if (refine) Leiden.run(g) else Louvain.run(g))
+        spark.conf.set(key, "-1")
+        val past =
+          try labels(SparkTuning.withGraph(g)(
+            Louvain.runImpl(_, Louvain.Config(), refine, bcastBytes = 0L)))
+          finally spark.conf.unset(key)
+        assert(past == under, s"refine = $refine")
+      }
+    } finally g.unpersist()
   }
 
   test("louvain is deterministic across runs and partitionings") {

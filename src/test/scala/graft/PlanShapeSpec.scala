@@ -54,7 +54,7 @@ class PlanShapeSpec extends SparkSpec {
     // each job's result stage (a stage whose shuffle output is reused
     // is skipped, not submitted).
     import graft.algos.{Bfs, ConnectedComponents, CoreNumber, Hits, KCore,
-      KTruss, LabelPropagation, PageRank, Sssp}
+      KTruss, LabelPropagation, Louvain, PageRank, Sssp}
     val g = graphOf(loadFixture("karate")).symmetrize.cached()
     g.edges.count()
     def counts(run: Int => Unit, iters: Int): (Int, Int) = {
@@ -86,7 +86,10 @@ class PlanShapeSpec extends SparkSpec {
         Bfs.Config(maxDepth = n, pull = Some(false)))),
       "bfs_pull" -> (n => Bfs.run(g, Seq(0L),
         Bfs.Config(maxDepth = n, pull = Some(true)))),
-      "ms_bfs" -> (n => Bfs.multiSource(g, Seq(0L), maxDepth = n)))
+      "ms_bfs" -> (n => Bfs.multiSource(g, Seq(0L), maxDepth = n)),
+      // One level of fixed-mode local moving, n iterations.
+      "louvain" -> (n => Louvain.run(g,
+        Louvain.Config(maxLevels = 1, fixedInnerIter = n))))
     try {
       val got = loops.map { case (name, run) => name -> perSuperstep(run) }.toMap
       // One job per superstep, the convergence aggregate; it runs the
@@ -98,12 +101,42 @@ class PlanShapeSpec extends SparkSpec {
       // peels start more: the k-truss adjacency count and its two
       // broadcast builds; the k-core survivor set's two broadcast
       // builds, beside the count and its single-partition exchange.
+      // A Louvain iteration runs the count that fills its labels and
+      // one build job per broadcast side (labels, cluster weights).
       assert(got == Map("pagerank" -> (1, 2), "wcc" -> (1, 2),
         "lpa" -> (1, 2), "sssp" -> (1, 2),
         "hits" -> (1, 3), "core_number" -> (1, 2),
         "kcore" -> (3, 1), "ktruss" -> (4, 5),
-        "bfs" -> (1, 2), "bfs_pull" -> (1, 4), "ms_bfs" -> (1, 4)))
+        "bfs" -> (1, 2), "bfs_pull" -> (1, 4), "ms_bfs" -> (1, 4),
+        "louvain" -> (6, 2)))
     } finally g.unpersist()
+  }
+
+  test("whole-call jobs and exchanges of SCC and Leiden") {
+    // SCC's pass loop around its two fixpoints on the partially
+    // oriented karate of SccSpec, and two fixed-mode Leiden levels:
+    // every job and executed exchange of the call, pinned as measured.
+    import graft.algos.{Leiden, Louvain, Scc}
+    val sym = loadFixture("karate").map(e => (e._1, e._2)).toSet
+    val oriented = graphOf(sym.filter { case (u, v) => u < v || (u + v) % 3 != 0 }
+      .toSeq.map(e => (e._1, e._2, 1.0))).cached()
+    val g = graphOf(loadFixture("karate")).symmetrize.cached()
+    g.edges.count()
+    oriented.edges.count()
+    def counts(run: => Unit): (Int, Int) = {
+      val (_, jobs, stages) = listen(run)
+      (jobs.size, stages - jobs.size)
+    }
+    try {
+      val got = Map(
+        "scc" -> counts(Scc.run(oriented)),
+        "leiden" -> counts(Leiden.run(g,
+          Louvain.Config(maxLevels = 2, fixedInnerIter = 3))))
+      assert(got == Map("scc" -> (40, 23), "leiden" -> (59, 63)))
+    } finally {
+      g.unpersist()
+      oriented.unpersist()
+    }
   }
 
   test("triangle count: a fixed number of jobs, each broadcast side built once") {

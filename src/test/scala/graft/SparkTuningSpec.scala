@@ -46,4 +46,31 @@ class SparkTuningSpec extends SparkSpec {
     assert(mine.edges.storageLevel == StorageLevel.MEMORY_ONLY)
     mine.unpersist()
   }
+
+  test("withShufflePartitions scopes the conf: restored after a return and after a throw") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.getOption(key)
+    def scoped(): Unit = {
+      assert(SparkTuning.withShufflePartitions(spark, 3)(spark.conf.get(key)) == "3")
+      val thrown = intercept[IllegalStateException] {
+        SparkTuning.withShufflePartitions(spark, 2) {
+          assert(spark.conf.get(key) == "2")
+          throw new IllegalStateException("body failed")
+        }
+      }
+      assert(thrown.getMessage == "body failed")
+    }
+    try {
+      // From a set value and from an unset key (which reads as its default).
+      for (prev <- Seq(Some("7"), None)) {
+        prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+        val want = spark.conf.get(key)
+        scoped()
+        assert(spark.conf.get(key) == want)
+      }
+    } finally before match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }
