@@ -19,8 +19,9 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  * DIRECTION-OPTIMIZING (the reference's push/pull switch in
  * `bfs_impl.cuh`): per level, either
  *
- *  - PUSH (top-down): frontier ⋈ edges (co-partitioned), min-reduce
- *    by dst, anti-join visited — cost ~ edges OUT of the frontier; or
+ *  - PUSH (top-down): [[Superstep.messages]] from the frontier, a
+ *    min-reduce by dst, anti-join visited — cost ~ edges OUT of the
+ *    frontier; or
  *  - PULL (bottom-up): edges are first semi-joined against the
  *    UNVISITED dst set, then joined to the frontier on src — cost ~
  *    edges INTO the unvisited residue. On the dense middle supersteps
@@ -162,11 +163,8 @@ object Bfs {
                 Seq(SRC))
               .groupBy(DST).agg(min(SRC).as("predecessor"))
           } else {
-            edges
-              .join(frontier.select(col(ID)).hint("shuffle_hash"),
-                edges(SRC) === col(ID))
-              .select(col(DST), edges(SRC).as("pred"))
-              .groupBy(DST).agg(min("pred").as("predecessor"))
+            Superstep.messages(edges, frontier.select(col(ID)), col(SRC), min)
+              .withColumnRenamed("m", "predecessor")
               .join(visited.select(col(ID)).withColumnRenamed(ID, DST),
                 Seq(DST), "left_anti")
           }

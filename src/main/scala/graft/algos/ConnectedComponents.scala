@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.checkpoint.CheckpointManager
 import graft.core.{LinkGraph, Superstep}
-import graft.core.LinkGraph.{DST, ID, SRC}
+import graft.core.LinkGraph.{ID, SRC}
 
 /**
  * Weakly connected components. The reference implements a multi-root
@@ -25,8 +25,8 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  * call `.symmetrize` first.
  *
  * Scale: supersteps = graph diameter; web graphs are short-diameter so
- * this is the right trade at 100 TB (each superstep is one co-partitioned
- * join + one message-reduce shuffle with map-side combine).
+ * this is the right trade at 100 TB (each superstep is one
+ * [[Superstep.messages]] min-reduce and its [[Superstep.receive]]).
  */
 object ConnectedComponents {
 
@@ -75,16 +75,10 @@ object ConnectedComponents {
     Superstep.run(g, name, maxIter, checkpoint, checkpointEvery)(
       if (idsPartitioned) init else init.repartition(g.numPartitions, col(ID)),
       step = (state, _) => {
-        // Only improved vertices broadcast their (smaller) label.
-        val msgs = edges
-          .join(state.filter(col(CHANGED)).select(col(ID), col(COMP))
-              .hint("shuffle_hash"),
-            edges(SRC) === col(ID))
-          .select(col(DST), col(COMP).as("m"))
-          .groupBy(DST)
-          .agg(min("m").as("m"))
-
-        state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+        // Only improved vertices send their (smaller) label.
+        val msgs = Superstep.messages(edges,
+          state.filter(col(CHANGED)).select(col(ID), col(COMP)), col(COMP), min)
+        Superstep.receive(state, msgs)
           .select(
             state(ID),
             least(state(COMP), coalesce(col("m"), state(COMP))).as(COMP),

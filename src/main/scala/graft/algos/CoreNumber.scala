@@ -31,7 +31,8 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  *      for a mega-hub row, once, shrinking as c values collapse.
  *      Starting from c = min(degree, K) keeps the iterate squeezed
  *      between the true core numbers and the degree-start sequence,
- *      so convergence (to the same fixpoint) is preserved.
+ *      so convergence (to the same fixpoint) is preserved;
+ *   3. h joins back onto the state by [[Superstep.receive]].
  *
  * Returns (id, core_number); isolated / self-loop-only vertices get 0.
  */
@@ -189,7 +190,7 @@ object CoreNumber {
                   least(x("v"), acc("cum") + x("cnt"))).as("h")),
               acc => acc("h")).as("h"))
 
-        state.join(h.hint("shuffle_hash"), state(ID) === h(DST), "left")
+        Superstep.receive(state, h)
           .select(state(ID),
             least(state("c"), coalesce(col("h"), state("c"))).as("c"),
             (coalesce(col("h"), state("c")) < state("c")).as("chg"))

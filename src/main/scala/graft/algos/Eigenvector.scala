@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{Lineage, LinkGraph, Superstep}
-import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
+import graft.core.LinkGraph.{ID, WEIGHT}
 
 /**
  * Eigenvector centrality, reference semantics
@@ -39,13 +39,10 @@ object Eigenvector {
     val r = Superstep.run(g, "eigenvector", cfg.maxIter)(
       verts.df.select(col(ID), lit(1.0 / v).as("raw"), lit(0.0).as("old")),
       step = (state, _) => {
-        val msgs = g.edges
-          .join(state.select(col(ID), (col("raw") / norm).as("c"))
-              .hint("shuffle_hash"),
-            g.edges(SRC) === col(ID))
-          .select(col(DST), (col("c") * col(WEIGHT)).as("m"))
-          .groupBy(DST).agg(sum("m").as("m"))
-        state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+        val msgs = Superstep.messages(g.edges,
+          state.select(col(ID), (col("raw") / norm).as("c")),
+          col("c") * col(WEIGHT), sum)
+        Superstep.receive(state, msgs)
           .select(state(ID),
             coalesce(col("m"), lit(0.0)).as("raw"),
             (state("raw") / norm).as("old"))

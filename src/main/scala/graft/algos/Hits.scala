@@ -18,11 +18,12 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  *   stop when L1(hub - prevHub) < epsilon (checked after normalize)
  * optional final division of both by their sums.
  *
- * Physical: TWO cached edge layouts — forward partitioned by src for
- * the auth gather, reversed partitioned by dst for the hub gather —
- * the analog of the reference storing the transposed graph; both
- * superstep joins stay co-partitioned. The loop is
- * [[graft.core.Superstep]]; the max-norms are its carried scalars.
+ * Physical: TWO edge layouts, each partitioned by its senders — the
+ * forward table by src for the auth gather, the reversed one (cached)
+ * by the original dst for the hub gather — the analog of the
+ * reference storing the transposed graph; both gathers are
+ * [[Superstep.messages]], so both joins stay co-partitioned. The loop
+ * is [[graft.core.Superstep]]; the max-norms are its carried scalars.
  */
 object Hits {
 
@@ -40,12 +41,11 @@ object Hits {
     val p = g.numPartitions
 
     val fwd = g.edges.select(SRC, DST)
-    // Partitioned by the hub gather's JOIN key (rev.DST ⋈ authRaw.id):
-    // the rename had it partitioned by the renamed SRC column instead,
-    // so every iteration re-exchanged the E-sized reversed table into
-    // the join (the shuffle ledger showed ~E bytes per iteration).
+    // The hub gather sends each auth(v) back along u -> v: the reversed
+    // edges, partitioned by their sending side (rev.src = v) so the
+    // join with the id-partitioned auth sums moves no edge.
     val rev = g.edges.select(col(DST).as(SRC), col(SRC).as(DST))
-      .repartition(p, col(DST))
+      .repartition(p, col(SRC))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
     val verts = Lineage.materialize(
@@ -79,27 +79,19 @@ object Hits {
         // (edge join + reduce) would execute twice inside the
         // superstep job.
         authRawH = Lineage.materialize(
-          fwd
-            .join(state.select(col(ID), (col("hub_raw") / hubNorm).as("hub"))
-                .hint("shuffle_hash"),
-              fwd(SRC) === col(ID))
-            .select(col(DST).as(ID), col("hub").as("m"))
-            .groupBy(ID).agg(sum("m").as("auth_in")),
+          Superstep.messages(fwd,
+            state.select(col(ID), (col("hub_raw") / hubNorm).as("hub")),
+            col("hub"), sum)
+            .select(col(DST).as(ID), col("m").as("auth_in")),
           eager = false)
         val authRaw = authRawH.df
         // hub_raw(u) = sum of auth_raw(v) over out-edges (gather via rev)
-        val hubRaw = rev
-          .join(authRaw.hint("shuffle_hash"), rev(DST) === authRaw(ID))
-          .select(rev(SRC).as(ID), col("auth_in").as("m"))
-          .groupBy(ID).agg(sum("m").as("hub_in"))
+        val hubRaw = Superstep.messages(rev, authRaw, col("auth_in"), sum)
 
-        state
-          .join(authRaw.withColumnRenamed(ID, "va").hint("shuffle_hash"),
-            state(ID) === col("va"), "left")
-          .join(hubRaw.withColumnRenamed(ID, "vh").hint("shuffle_hash"),
-            state(ID) === col("vh"), "left")
+        Superstep.receive(
+          Superstep.receive(state, authRaw.withColumnRenamed(ID, DST)), hubRaw)
           .select(state(ID),
-            coalesce(col("hub_in"), lit(0.0)).as("hub_raw"),
+            coalesce(col("m"), lit(0.0)).as("hub_raw"),
             coalesce(col("auth_in"), lit(0.0)).as("auth_raw"),
             (state("hub_raw") / hubNorm).as("prev_hub"))
       },

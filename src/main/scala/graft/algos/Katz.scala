@@ -4,15 +4,15 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.{Lineage, LinkGraph, Superstep}
-import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
+import graft.core.LinkGraph.{ID, WEIGHT}
 
 /**
  * Katz centrality, reference semantics
  * (`/root/reference/cpp/src/centrality/katz_centrality_impl.cuh:50-172`):
  * init katz = 0; per iteration katz'(v) = alpha * SUM over incoming
  * u->v of katz(u)*w + beta; stop when L1 diff < epsilon (error at
- * maxIter); optional final L2 normalization. Same co-partitioned
- * gather + shuffle-hash joins as PageRank.
+ * maxIter); optional final L2 normalization. Each superstep is
+ * [[Superstep.messages]] and [[Superstep.receive]], as PageRank's.
  */
 object Katz {
 
@@ -36,12 +36,9 @@ object Katz {
     val r = Superstep.run(g, "katz", cfg.maxIter)(
       verts.df.select(col(ID), lit(0.0).as("kz"), lit(0.0).as("old")),
       step = (state, _) => {
-        val msgs = g.edges
-          .join(state.select(col(ID), col("kz")).hint("shuffle_hash"),
-            g.edges(SRC) === col(ID))
-          .select(col(DST), (col("kz") * col(WEIGHT)).as("m"))
-          .groupBy(DST).agg(sum("m").as("m"))
-        state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+        val msgs = Superstep.messages(g.edges, state.select(col(ID), col("kz")),
+          col("kz") * col(WEIGHT), sum)
+        Superstep.receive(state, msgs)
           .select(state(ID),
             (lit(cfg.alpha) * coalesce(col("m"), lit(0.0)) + lit(cfg.beta))
               .as("kz"),

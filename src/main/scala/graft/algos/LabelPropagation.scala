@@ -29,7 +29,8 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  * then a two-level aggregation — groupBy(dst, label).count (map-side
  * combined) followed by groupBy(dst).max(struct(count, -label)) —
  * the deterministic argmax without a window function, so both levels
- * stay partial-aggregatable and skew-tolerant.
+ * stay partial-aggregatable and skew-tolerant — joined back onto the
+ * state by [[Superstep.receive]].
  */
 object LabelPropagation {
 
@@ -81,7 +82,7 @@ object LabelPropagation {
           .agg(max(struct(col("cnt"), (-col(LBL)).as("neg"))).as("top"))
           .select(col(DST), (-col("top.neg")).as("new_lbl"))
 
-        state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+        Superstep.receive(state, msgs)
           .select(
             state(ID),
             coalesce(col("new_lbl"), state(LBL)).as(LBL),

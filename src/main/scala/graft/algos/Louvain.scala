@@ -2,6 +2,9 @@ package graft.algos
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
+
+import org.apache.spark.sql.graft.SqlInternals
 
 import graft.core.{Lineage, LinkGraph, SparkTuning, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
@@ -217,8 +220,10 @@ object Louvain {
     var curQ =
       if (fixed) -1.0
       else modularity(edges, best.df, vw.df, totalW, res)
-    // The superstep's labeled-edge cache, released by its check.
+    // The superstep's labeled-edge and cluster-weight caches, released
+    // by its check.
     var ebH: Lineage.Handle = null
+    var cw: DataFrame = null
 
     val r = Superstep.run(g, "louvain",
       if (fixed) cfg.fixedInnerIter else cfg.maxInnerIter)(
@@ -226,10 +231,13 @@ object Louvain {
       step = (labels, iter) => {
         val upDown = iter % 2 == 1 // reference alternates starting true
 
-        // Cluster weights a(c) from the current labels.
-        val cw = labels.join(vw.df.hint("shuffle_hash"), Seq(ID))
+        // Cluster weights a(c) from the current labels, cached: the
+        // a_old and a_new joins below read one build of them.
+        cw = labels.join(vw.df.hint("shuffle_hash"), Seq(ID))
           .groupBy(col("lbl")).agg(sum("kk").as("a"))
-        val cwB = if (bcastV) broadcast(cw) else cw
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        val cwR = SqlInternals.cachedRelation(cw)
+        val cwB = if (bcastV) broadcast(cwR) else cwR
 
         // Edges with both endpoint clusters; the dst-label join is the
         // per-iteration E-sized shuffle (or a broadcast when V fits).
@@ -262,8 +270,11 @@ object Louvain {
         val cand = eb.groupBy(col(SRC), col("ldst"))
           .agg(sum("w").as("ns"))
 
+        // Both cluster-weight sides project (key, a) under two new
+        // names, so their builds are one plan and the second is reused.
         val vinfo = labels.join(vw.df.hint("shuffle_hash"), Seq(ID))
-          .join(cwB.select(col("lbl"), col("a").as("a_old")), Seq("lbl"))
+          .join(cwB.select(col("lbl").as("lbl_old"), col("a").as("a_old")),
+            col("lbl") === col("lbl_old"))
 
         val scored = cand
           .join(vinfo.select(col(ID).as(SRC), col("lbl"), col("kk"),
@@ -312,8 +323,10 @@ object Louvain {
             if (gained) curQ = newQ
             !gained
           }
-        // `next` is computed, so the edge-label cache can drop.
+        // `next` is computed, so the edge-label and cluster-weight
+        // caches can drop.
         ebH.release()
+        cw.unpersist()
         (done, Map.empty)
       })
     if (fixed) best = r.state else r.state.release()

@@ -23,14 +23,9 @@ import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
  *
  * Physical design (the part that must survive 100 TB):
  *   - Edge weights are pre-normalized once (w/outw(src)) and the edge
- *     table is hash-partitioned by src and cached — the per-iteration
- *     state join is then co-partitioned and ONLY the message reduce
- *     shuffles (~V rows of messages, never the edge table).
- *   - The message reduce is groupBy(dst).sum — Spark's partial (map-side)
- *     aggregation collapses hub fan-in before the shuffle, the same skew
- *     countermeasure as the reference's per-degree-segment kernels
- *     (`graph_view.hpp:258-262`); an algebraic reduce needs no extra
- *     hub salting.
+ *     table is hash-partitioned by src and cached; each superstep is
+ *     then [[Superstep.messages]] (a sum) and [[Superstep.receive]],
+ *     whose one exchange is the message reduce.
  *   - Dangling mass is folded into one scalar per iteration
  *     (`pagerank_impl.cuh:218-246`), never V messages.
  *   - L1 diff and the next dangling-sum come from ONE agg over the
@@ -138,22 +133,9 @@ object PageRank {
         // teleport weight (uniform 1/V or personalized).
         val mass = danglingSum.getOrElse(scalars(state)(0)) * cfg.alpha +
           (1.0 - cfg.alpha)
-
-        // shuffle_hash hints: without them Catalyst picks sort-merge and
-        // re-SORTS the (cached, unsorted) edge table every superstep —
-        // bandwidth-bound and the dominant iteration cost. Hash-building
-        // the per-partition slice of the small state side streams the
-        // edges unsorted; unlike a broadcast this stays valid when V is
-        // huge, because the build is per co-partition, not per task.
-        val msgs = normEdges
-          .join(state.select(col(ID), col(PR)).hint("shuffle_hash"),
-            normEdges(SRC) === col(ID))
-          .select(col(DST), (col(PR) * col("nw")).as("m"))
-          .groupBy(DST)
-          .agg(sum("m").as("m"))
-
-        state
-          .join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
+        val msgs = Superstep.messages(normEdges, state.select(col(ID), col(PR)),
+          col(PR) * col("nw"), sum)
+        Superstep.receive(state, msgs)
           .select(
             state(ID),
             (lit(cfg.alpha) * coalesce(col("m"), lit(0.0))

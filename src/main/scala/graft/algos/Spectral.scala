@@ -1,30 +1,42 @@
 package graft.algos
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Lineage, LinkGraph}
+import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
 
 /**
- * Spectral balanced-cut bipartition (reference
- * `/root/reference/cpp/include/cugraph/algorithms.hpp:818-849`
- * spectral*Clustering, legacy impl
- * `cpp/src/community/legacy/spectral_clustering.cu`): the k = 2
- * instance — split by the sign of the FIEDLER VECTOR (second-smallest
- * eigenvector of the graph Laplacian L = D − W), the canonical
- * spectral cut. The reference runs a Lanczos eigensolver; the
- * Spark-native equivalent is DEFLATED POWER ITERATION on the spectral
- * shift σI − L (σ = 2·max weighted degree ≥ λmax by Gershgorin):
+ * Spectral bipartitions (the reference's spectral*Clustering and
+ * spectralModularityMaximization,
+ * `cpp/include/cugraph/algorithms.hpp:818-875`, legacy impl
+ * `cpp/src/community/legacy/spectral_clustering.cu`), split by the sign
+ * of one eigenvector. The reference runs a Lanczos eigensolver; the
+ * Spark-native equivalent is ONE deflated power iteration, run under
+ * two spectral shifts (σ = 2·max weighted degree):
  *
- *   y(v) = (σ − d(v))·x(v) + Σ_u w(v,u)·x(u)   — one superstep join
- *   x'   = (y − mean(y)) / ‖y − mean(y)‖₂      — deflates the trivial
- *                                                constant eigenvector
+ *   x'   = (y − mean(y)) / ‖y − mean(y)‖₂   — deflates the constant
+ *                                            eigenvector
  *
- * which converges to the eigenvector of σ − λ₂, i.e. the Fiedler
- * vector. Each iteration is the PageRank superstep shape: one
- * co-partitioned state⋈edges join, one message reduce (the only
- * E-sized shuffle, map-side combined) plus two scalar aggregates.
+ *   - [[fiedlerCut]], the balanced cut: y on σI − L for the Laplacian
+ *     L = D − W (σ ≥ λmax by Gershgorin),
+ *       y(v) = (σ − d(v))·x(v) + Σ_u w(v,u)·x(u),
+ *     which converges to the eigenvector of σ − λ₂: the FIEDLER vector;
+ *   - [[modularityCut]]: y on σI + B for the modularity matrix
+ *     B = W − k·kᵀ/2m (Newman 2006; σ ≥ ‖B‖, as ‖W‖ ≤ max d and
+ *     Σd²/2m ≤ max d),
+ *       y(v) = σ·x(v) + Σ_u w(v,u)·x(u) − d(v)·(S/W),  S = Σ_u d(u)·x(u),
+ *     B's leading non-trivial eigenvector (the constant vector is a
+ *     B-eigenvector with eigenvalue 0, and the centering removes it).
+ *
+ * The loop is [[graft.core.Superstep]]: the state is the materialized
+ * y; x is a lazy projection of it from the carried mean and norm, and
+ * Σ_u w(v,u)·x(u) is [[Superstep.messages]] joined back by
+ * [[Superstep.receive]]. Per iteration: one job for the Fiedler cut
+ * (the mean/norm pass, which also fills y's cache), two for the
+ * modularity cut (S on the current x first: computing it
+ * algebraically from the y stats would change the float path the SQL
+ * oracle mirrors).
  *
  * Determinism: x₀(v) = md5-hash(seed:v) mapped to [−0.5, 0.5) — a
  * splittable counter init, identical on any partitioning and
@@ -32,17 +44,37 @@ import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
  * the computation bit-comparable against the recursive-CTE oracle up
  * to last-ulp float noise, absorbed by micro rounding.
  *
- * Expects an undirected (symmetrized, deduped) graph.
- * Returns (id, fiedler_micro, cluster ∈ {0, 1}).
+ * Expects an undirected (symmetrized, deduped) graph. An empty edge
+ * table gives an empty result.
  */
 object Spectral {
 
   final case class Config(iterations: Int = 20, seed: Long = 42L)
 
+  /** Fiedler-vector bipartition: (id, fiedler_micro, cluster ∈ {0, 1}). */
   def fiedlerCut(g0: LinkGraph, cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
+    graft.core.SparkTuning.withGraph(g0)(powerCut(_, cfg, "fiedler_micro") {
+      (sigma, _, _) => (x, d, m) => (lit(sigma) - d) * x + m
+    })
 
-  private def runImpl(g: LinkGraph, cfg: Config): DataFrame = {
+  /** Modularity bipartition: (id, mod_micro, cluster ∈ {0, 1}). */
+  def modularityCut(g0: LinkGraph, cfg: Config = Config()): DataFrame =
+    graft.core.SparkTuning.withGraph(g0)(powerCut(_, cfg, "mod_micro") {
+      (sigma, totalW, xs) =>
+        // S = k·x on the current vector: reads the cached y underneath.
+        val s = xs.agg(sum(col("d") * col("x"))).head().getDouble(0)
+        (x, d, m) => lit(sigma) * x - d * lit(s / totalW) + m
+    })
+
+  /**
+   * The deflated power iteration under one shift: `shift(σ, W, xs)`,
+   * given the current vector `xs` (id, d, x), σ and the total weight W,
+   * returns y's expression in x, d and the message sum m. The output
+   * is (id, `micro`, cluster): round(x·1e6) and the sign of x.
+   */
+  private def powerCut(g: LinkGraph, cfg: Config, micro: String)(
+      shift: (Double, Double, DataFrame) => (Column, Column, Column) => Column)
+      : DataFrame = {
     val p = g.numPartitions
     val edges = g.edges
 
@@ -51,135 +83,53 @@ object Spectral {
       edges.groupBy(col(SRC).as(ID)).agg(sum(WEIGHT).as("d"))
         .repartition(p, col(ID)),
       eager = false)
-    val sigma = 2.0 * deg.df.agg(max("d")).head().getDouble(0)
-
-    // x0: md5 counter hash -> [-0.5, 0.5)
-    val h01 = pmod(conv(substring(
-      md5(concat_ws(":", lit(cfg.seed), col(ID))), 1, 8), 16, 10)
-      .cast("long"), lit(1000000L)) / 1000000.0
-    // ONE action per iteration: only the y frame is ever materialized
-    // (by its own stats pass); x stays a LAZY centered/normalized
-    // projection over the cached y — constant plan depth, partitioning
-    // preserved, and the explicit next.count() job the old loop paid
-    // per iteration disappears (2 → 1 jobs/iter, the dominant cost of
-    // the halved subproblems in the k-way recursion).
-    var x: DataFrame = deg.df.select(col(ID), col("d"), (h01 - 0.5).as("x"))
-    var yPrev: Option[Lineage.Handle] = None
-
-    for (_ <- 1 to cfg.iterations) {
-      val msgs = edges
-        .join(x.select(col(ID), col("x")).hint("shuffle_hash"),
-          edges(SRC) === col(ID))
-        .select(col(DST), (col(WEIGHT) * col("x")).as("m"))
-        .groupBy(DST).agg(sum("m").as("m"))
-      val xq = x.as("xq")
-      val y = xq.join(msgs.hint("shuffle_hash"),
-          col(s"xq.$ID") === msgs(DST), "left")
-        .select(col(s"xq.$ID").as(ID), col(s"xq.d").as("d"),
-          ((lit(sigma) - col(s"xq.d")) * col(s"xq.x")
-            + coalesce(col("m"), lit(0.0))).as("y"))
-      val yH = Lineage.materialize(y, eager = false)
-      // One scalar pass: mu and the centered norm via
-      // ||y - mu||^2 = sum(y^2) - n*mu^2 (the oracle mirrors this
-      // exact algebraic form, so both engines share the same float
-      // path up to sum-order noise absorbed by micro rounding). This
-      // agg is ALSO the job that materializes yH.
-      val stats = yH.df
-        .agg(avg("y"), count(lit(1)), sum(col("y") * col("y"))).head()
-      val mu = stats.getDouble(0)
-      val norm = math.sqrt(stats.getDouble(2) - stats.getLong(1) * mu * mu)
-      x = yH.df.select(col(ID), col("d"), ((col("y") - mu) / norm).as("x"))
-      yPrev.foreach(_.release())
-      yPrev = Some(yH)
-    }
-
-    val out = Lineage.materialize(
-      x.select(col(ID),
-        round(col("x") * 1e6, 0).cast("long").as("fiedler_micro"),
-        when(col("x") > 0, 1L).otherwise(0L).as("cluster")))
-    yPrev.foreach(_.release())
-    deg.release()
-    out.df
-  }
-
-  /**
-   * Spectral MODULARITY MAXIMIZATION bipartition (reference
-   * `spectralModularityMaximization`,
-   * `/root/reference/cpp/include/cugraph/algorithms.hpp:849-875`,
-   * legacy impl `cpp/src/community/legacy/spectral_clustering.cu`):
-   * split by the sign of the LEADING eigenvector of the modularity
-   * matrix B = W − k·kᵀ/2m (Newman 2006), instead of the Laplacian's
-   * Fiedler vector. Same deflated power iteration machinery as
-   * [[fiedlerCut]], shifted to σI + B (σ = 2·max weighted degree ≥
-   * ‖B‖: ‖W‖ ≤ max d and ‖k·kᵀ‖/2m = Σd²/2m ≤ max d):
-   *
-   *   y(v) = σ·x(v) + Σ_u w(v,u)·x(u) − d(v)·(S/W),  S = Σ_u d(u)·x(u)
-   *   x'   = (y − mean(y)) / ‖y − mean(y)‖₂
-   *
-   * — one superstep join + message reduce plus TWO scalar passes (S
-   * on the current vector, then mean/norm on y); the centering
-   * deflates the constant vector (a B-eigenvector with eigenvalue 0),
-   * so the iteration converges to B's leading non-trivial eigenvector.
-   * Same determinism/oracle-parity contract as [[fiedlerCut]].
-   *
-   * Returns (id, mod_micro, cluster ∈ {0, 1}).
-   */
-  def modularityCut(g0: LinkGraph, cfg: Config = Config()): DataFrame =
-    graft.core.SparkTuning.withGraph(g0)(runModImpl(_, cfg))
-
-  private def runModImpl(g: LinkGraph, cfg: Config): DataFrame = {
-    val p = g.numPartitions
-    val edges = g.edges
-
-    val deg = Lineage.materialize(
-      edges.groupBy(col(SRC).as(ID)).agg(sum(WEIGHT).as("d"))
-        .repartition(p, col(ID)),
-      eager = false)
     val dstats = deg.df.agg(max("d"), sum("d")).head()
+    if (dstats.isNullAt(0)) {
+      deg.release()
+      val spark = g.spark
+      import spark.implicits._
+      return Seq.empty[(Long, Long, Long)].toDF(ID, micro, "cluster")
+    }
     val sigma = 2.0 * dstats.getDouble(0)
     val totalW = dstats.getDouble(1) // = 2m on the symmetric table
 
+    // y₀ = x₀: md5 counter hash -> [-0.5, 0.5); mu = 0 and norm = 1
+    // project it to itself.
     val h01 = pmod(conv(substring(
       md5(concat_ws(":", lit(cfg.seed), col(ID))), 1, 8), 16, 10)
       .cast("long"), lit(1000000L)) / 1000000.0
-    // Same lazy-x scheme as [[fiedlerCut]]: only y materializes (via
-    // the stats pass); x is a projection over the cached y. The S
-    // pass stays a separate scalar agg on x — computing it
-    // algebraically from the y stats would change the float path the
-    // SQL oracle mirrors. 2 jobs/iter (was 3).
-    var x: DataFrame = deg.df.select(col(ID), col("d"), (h01 - 0.5).as("x"))
-    var yPrev: Option[Lineage.Handle] = None
+    var mu = 0.0
+    var norm = 1.0
+    def vector(y: DataFrame): DataFrame =
+      y.select(col(ID), col("d"), ((col("y") - mu) / norm).as("x"))
 
-    for (_ <- 1 to cfg.iterations) {
-      // S = k·x on the CURRENT vector (one scalar pass; reads the
-      // cached y underneath the projection).
-      val s = x.agg(sum(col("d") * col("x"))).head().getDouble(0)
-      val msgs = edges
-        .join(x.select(col(ID), col("x")).hint("shuffle_hash"),
-          edges(SRC) === col(ID))
-        .select(col(DST), (col(WEIGHT) * col("x")).as("m"))
-        .groupBy(DST).agg(sum("m").as("m"))
-      val xq = x.as("xq")
-      val y = xq.join(msgs.hint("shuffle_hash"),
-          col(s"xq.$ID") === msgs(DST), "left")
-        .select(col(s"xq.$ID").as(ID), col(s"xq.d").as("d"),
-          (lit(sigma) * col(s"xq.x") - col(s"xq.d") * lit(s / totalW)
-            + coalesce(col("m"), lit(0.0))).as("y"))
-      val yH = Lineage.materialize(y, eager = false)
-      val stats = yH.df
-        .agg(avg("y"), count(lit(1)), sum(col("y") * col("y"))).head()
-      val mu = stats.getDouble(0)
-      val norm = math.sqrt(stats.getDouble(2) - stats.getLong(1) * mu * mu)
-      x = yH.df.select(col(ID), col("d"), ((col("y") - mu) / norm).as("x"))
-      yPrev.foreach(_.release())
-      yPrev = Some(yH)
-    }
+    val r = Superstep.run(g, "spectral", cfg.iterations)(
+      deg.df.select(col(ID), col("d"), (h01 - 0.5).as("y")),
+      step = (y, _) => {
+        val xs = vector(y)
+        val yOf = shift(sigma, totalW, xs)
+        val msgs = Superstep.messages(edges, xs.select(col(ID), col("x")),
+          col(WEIGHT) * col("x"), sum)
+        Superstep.receive(xs, msgs)
+          .select(xs(ID), xs("d"),
+            yOf(xs("x"), xs("d"), coalesce(col("m"), lit(0.0))).as("y"))
+      },
+      check = (y, _) => {
+        // One scalar pass: mu and the centered norm via
+        // ||y - mu||^2 = sum(y^2) - n*mu^2 (the oracle mirrors this
+        // exact algebraic form, so both engines share the same float
+        // path up to sum-order noise absorbed by micro rounding).
+        val stats = y.agg(avg("y"), count(lit(1)), sum(col("y") * col("y"))).head()
+        mu = stats.getDouble(0)
+        norm = math.sqrt(stats.getDouble(2) - stats.getLong(1) * mu * mu)
+        (false, Map.empty)
+      })
 
     val out = Lineage.materialize(
-      x.select(col(ID),
-        round(col("x") * 1e6, 0).cast("long").as("mod_micro"),
+      vector(r.state.df).select(col(ID),
+        round(col("x") * 1e6, 0).cast("long").as(micro),
         when(col("x") > 0, 1L).otherwise(0L).as("cluster")))
-    yPrev.foreach(_.release())
+    r.state.release()
     deg.release()
     out.df
   }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.checkpoint.CheckpointManager
 import graft.core.{Lineage, LinkGraph, Superstep}
-import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
+import graft.core.LinkGraph.{ID, SRC, WEIGHT}
 
 /**
  * Single-source shortest paths over non-negative edge weights
@@ -16,7 +16,7 @@ import graft.core.LinkGraph.{DST, ID, SRC, WEIGHT}
  * Bellman-Ford/Pregel form) with a change-frontier — only vertices
  * whose distance improved relax their out-edges next superstep, so the
  * superstep count is bounded by the shortest-path hop diameter, and
- * each superstep is the standard co-partitioned join + min-reduce.
+ * each superstep is [[Superstep.messages]] with a min-reduce.
  * The reference's near-far buckets are a GPU work-efficiency device;
  * the fixpoint they reach is identical.
  *
@@ -69,23 +69,16 @@ object Sssp {
         // Relax out-edges of improved vertices; keep the best (distance,
         // predecessor) candidate per destination — min over struct gives
         // the deterministic (smallest-distance, then smallest-pred) pick.
-        val cand = g.edges
-          .join(st.filter(col("chg"))
-              .select(col(ID), col("distance")).hint("shuffle_hash"),
-            g.edges(SRC) === col(ID))
-          .select(col(DST),
-            struct((col("distance") + col(WEIGHT)).as("d"),
-              col(SRC).as("pred")).as("c"))
-          .groupBy(DST)
-          .agg(min("c").as("c"))
-          .select(col(DST).as("cid"), col("c.d").as("nd"), col("c.pred").as("np"))
-
-        val better = col("nd") <
+        val cand = Superstep.messages(g.edges,
+          st.filter(col("chg")).select(col(ID), col("distance")),
+          struct((col("distance") + col(WEIGHT)).as("d"), col(SRC).as("pred")),
+          min)
+        val better = col("m.d") <
           coalesce(st("distance"), lit(Double.MaxValue))
-        st.join(cand.hint("shuffle_hash"), st(ID) === col("cid"), "left")
+        Superstep.receive(st, cand)
           .select(st(ID),
-            when(better, col("nd")).otherwise(st("distance")).as("distance"),
-            when(better, col("np")).otherwise(st("predecessor"))
+            when(better, col("m.d")).otherwise(st("distance")).as("distance"),
+            when(better, col("m.pred")).otherwise(st("predecessor"))
               .as("predecessor"),
             coalesce(better, lit(false)).as("chg"))
       },

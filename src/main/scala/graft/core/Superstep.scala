@@ -4,17 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, sum}
 
 import graft.checkpoint.CheckpointManager
-import graft.core.LinkGraph.ID
+import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
  * The superstep loop of PageRank, WCC, LPA, SSSP, Katz, Eigenvector,
  * HITS, core number, BFS (one traversal and `multiSource`), the
- * k-core and k-truss peels, SCC's forward and backward fixpoints and
- * Louvain's (and so Leiden's) local-moving loop. An algorithm supplies
- * its init state, its superstep plan (`step`, from the current state
- * and the number of the superstep it computes to the next state) and
- * its convergence `check` on the next state; this loop owns the rest,
- * in one order:
+ * k-core and k-truss peels, SCC's forward and backward fixpoints,
+ * Louvain's (and so Leiden's) local-moving loop and Spectral's power
+ * iteration. An algorithm supplies its init state, its superstep plan
+ * (`step`, from the current state and the number of the superstep it
+ * computes to the next state) and its convergence `check` on the next
+ * state; this loop owns the rest, in one order:
  *
  *   - resume: the latest superstep committed under `name` with this
  *     run's fingerprint (the edge table plus `name +: extras`) is
@@ -29,15 +29,21 @@ import graft.core.LinkGraph.ID
  *     [[CheckpointManager.committing]] — see the flush rule there.
  *
  * Scalars carried between supersteps (PageRank's dangling sum,
- * Eigenvector's and HITS's norms, the peels' previous row count, BFS's
- * visited and frontier counts, Louvain's best Q) are the algorithm's
- * own vars, set by `check` and read by `step`; so are a superstep's
- * side caches (HITS's auth gather, the k-truss adjacency, Louvain's
- * labeled edges), which `check` releases once the next state is
- * counted.
+ * Eigenvector's and HITS's norms, Spectral's mean and norm, the peels'
+ * previous row count, BFS's visited and frontier counts, Louvain's
+ * best Q) are the algorithm's own vars, set by `check` and read by
+ * `step`; so are a superstep's side caches (HITS's auth gather, the
+ * k-truss adjacency, Louvain's labeled edges and cluster weights),
+ * which `check` releases once the next state is counted.
  *
- * These iterative loops stay hand-written, because none is one state
- * stepped to the next:
+ * The message pass of a superstep is written once too: [[messages]]
+ * sends along the edges and reduces by dst, [[receive]] joins the
+ * reduce back onto the state. PageRank, Katz, Eigenvector, WCC and
+ * SCC's forward phase (`ConnectedComponents.minLabel`), SSSP, both
+ * HITS gathers, BFS's push level and Spectral call them; LPA and core
+ * number call only [[receive]] (see there for why).
+ *
+ * These iterative loops stay hand-written, each for the reason given:
  *   - Betweenness steps two frames forward (the frontier and the
  *     visited set), then walks the kept levels backward;
  *   - MST's Borůvka rounds step two frames (components and the picked
@@ -52,7 +58,13 @@ import graft.core.LinkGraph.ID
  *     levels: each level runs on a new graph, and its result folds
  *     into the flat labels and the dendrogram;
  *   - SCC's pass loop shrinks the live graph between passes, each pass
- *     running two fixpoints here and settling their vertices.
+ *     running two fixpoints here and settling their vertices;
+ *   - Egonet's hops and the pointer doubling of ExtractPaths and
+ *     TraversedCost run a fixed number of rounds and start no job in
+ *     them: the final action computes the whole chain, so every
+ *     round's frame stays cached until then;
+ *   - RandomWalks and Node2Vec take a fixed number of steps, and the
+ *     walks are the union of every step's frame, none released early.
  */
 object Superstep {
 
@@ -96,6 +108,48 @@ object Superstep {
     }
     Result(state, iter, converged)
   }
+
+  /**
+   * One superstep's messages, the reference's
+   * `per_v_transform_reduce_incoming_e`
+   * (`cpp/src/prims/per_v_transform_reduce_incoming_outgoing_e.cuh`):
+   * every row of `senders` (keyed by id) sends `msg` along its
+   * out-edges in `edges` (src → dst), and the messages to each dst
+   * fold by `reduce`. Returns (dst, m).
+   *
+   * The physical decision, the same for every caller: `edges` is
+   * hash-partitioned by src and `senders` by id, so the join is
+   * co-partitioned, and its shuffle-hash hint builds each partition's
+   * slice of the sender state and streams the cached, unsorted edges
+   * past it. Without the hint Catalyst picks sort-merge and re-sorts
+   * the edge table every superstep; unlike a broadcast the build stays
+   * valid when V is huge, because it is per co-partition, not per task.
+   * The reduce by dst is then the superstep's one exchange: ~V rows of
+   * messages, never the edge table, and an algebraic `reduce` (sum,
+   * min) aggregates partially map-side, collapsing a hub's fan-in
+   * before the shuffle — the skew countermeasure of the reference's
+   * per-degree-segment kernels, with no hub salting.
+   */
+  def messages(
+      edges: DataFrame, senders: DataFrame, msg: Column,
+      reduce: Column => Column): DataFrame =
+    edges.join(senders.hint("shuffle_hash"), edges(SRC) === senders(ID))
+      .select(col(DST), msg.as("m"))
+      .groupBy(DST).agg(reduce(col("m")).as("m"))
+
+  /**
+   * `msgs` (keyed by dst) left-joined onto `state` by id = dst, with a
+   * shuffle-hash build of the messages: the reduce left them
+   * hash-partitioned by dst, the state is by id, so the join moves
+   * nothing and keeps the state's partitioning; a vertex no message
+   * reached keeps its row, with nulls on the message side. LPA and
+   * core number join their own reduce back through this too: a
+   * histogram fold under one explicit repartition by dst, which
+   * measured ~25% faster than the second exchange that partial
+   * aggregation of `(dst, value)` pays.
+   */
+  def receive(state: DataFrame, msgs: DataFrame): DataFrame =
+    state.join(msgs.hint("shuffle_hash"), state(ID) === msgs(DST), "left")
 
   /** Sum of `e` over `df`; 0 over no rows, where SQL's sum is null. */
   def total(df: DataFrame, e: Column): Double = {

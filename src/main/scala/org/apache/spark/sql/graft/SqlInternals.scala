@@ -66,4 +66,15 @@ object SqlInternals {
     if (eager) rdd.count() // else: the caller's first action materializes
     (out, rdd)
   }
+
+  /** `df`, which the caller has persisted, as a frame over its cached
+   * relation: read twice in one plan, the two reads canonicalize alike
+   * and the second read's exchange is reused. A plan over a
+   * [[truncate]]d frame, read twice, is re-instanced at one read, and
+   * the re-instanced partitioning attributes keep the two apart, so
+   * each read computes it again. */
+  def cachedRelation(df: DataFrame): DataFrame = {
+    val cds = df.asInstanceOf[ClassicDataset[Row]]
+    ClassicDataset.ofRows(cds.sparkSession, cds.queryExecution.withCachedData)
+  }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.algos.{Betweenness, Bfs, Coarsen, ConnectedComponents, CoreNumber,
   Eigenvector, Hits, Katz, LabelPropagation, Leiden, Louvain, PageRank, Scc,
-  Similarity, TriangleCount}
+  Similarity, Spectral, TriangleCount}
 
 class KatzSpec extends SparkSpec {
   test("katz matches reference-semantics oracle on karate") {
@@ -32,6 +32,24 @@ class HitsSpec extends SparkSpec {
     want.foreach { case (v, (h, a)) =>
       assert(math.abs(got(v)._1 - h) < 1e-5, s"hub($v)")
       assert(math.abs(got(v)._2 - a) < 1e-5, s"auth($v)")
+    }
+  }
+
+  test("hits hubs gather over out-edges on a directed graph") {
+    // Karate is symmetric, so a hub gather over in-edges passes there;
+    // here it would send 0 and 3's hub mass nowhere and, by the second
+    // iteration, zero every hub.
+    val edges = Seq((0L, 1L, 1.0), (0L, 2L, 1.0), (1L, 2L, 1.0), (3L, 2L, 1.0),
+      (2L, 4L, 1.0))
+    val vs = edges.flatMap(e => Seq(e._1, e._2)).distinct
+    val got = Hits.run(graphOf(edges), Hits.Config(tol = 0.0, maxIter = 5))
+      .scores.collect()
+      .map(x => x.getLong(0) -> (x.getDouble(1), x.getDouble(2))).toMap
+    val want = RefOraclesX.hits(edges, vs, 0.0, 5)
+    assert(got.keySet == want.keySet)
+    want.foreach { case (v, (h, a)) =>
+      assert(math.abs(got(v)._1 - h) < 1e-12, s"hub($v)")
+      assert(math.abs(got(v)._2 - a) < 1e-12, s"auth($v)")
     }
   }
 }
@@ -277,6 +295,8 @@ class EmptyGraphSpec extends SparkSpec {
       Louvain.run(g).labels -> Seq("id", "community"),
       Leiden.run(g).labels -> Seq("id", "community"),
       Scc.run(g).components -> Seq("id", "scc"),
+      Spectral.fiedlerCut(g) -> Seq("id", "fiedler_micro", "cluster"),
+      Spectral.modularityCut(g) -> Seq("id", "mod_micro", "cluster"),
       TriangleCount.run(g) -> Seq("id", "triangles"))
     results.foreach { case (df, cols) =>
       assert(df.columns.toSeq == cols)

@@ -53,8 +53,8 @@ class PlanShapeSpec extends SparkSpec {
     // jobs and its executed Exchanges: the submitted stages other than
     // each job's result stage (a stage whose shuffle output is reused
     // is skipped, not submitted).
-    import graft.algos.{Bfs, ConnectedComponents, CoreNumber, Hits, KCore,
-      KTruss, LabelPropagation, Louvain, PageRank, Sssp}
+    import graft.algos.{Bfs, ConnectedComponents, CoreNumber, Eigenvector, Hits,
+      Katz, KCore, KTruss, LabelPropagation, Louvain, PageRank, Spectral, Sssp}
     val g = graphOf(loadFixture("karate")).symmetrize.cached()
     g.edges.count()
     def counts(run: Int => Unit, iters: Int): (Int, Int) = {
@@ -74,6 +74,13 @@ class PlanShapeSpec extends SparkSpec {
       "lpa" -> (n => assert(!LabelPropagation.run(g,
         LabelPropagation.Config(maxIter = n)).converged)),
       "sssp" -> (n => Sssp.run(g, 0L, Sssp.Config(maxIter = n))),
+      "katz" -> (n => assert(!Katz.run(g,
+        Katz.Config(tol = 0.0, maxIter = n)).converged)),
+      "eigenvector" -> (n => assert(!Eigenvector.run(g,
+        Eigenvector.Config(tol = 0.0, maxIter = n)).converged)),
+      "spectral" -> (n => Spectral.fiedlerCut(g, Spectral.Config(iterations = n))),
+      "spectral_mod" -> (n =>
+        Spectral.modularityCut(g, Spectral.Config(iterations = n))),
       // Karate takes 3 core-number supersteps, 4 rounds of the 4-core
       // peel and 3 of the 5-truss peel, so every run stops at `n`.
       "hits" -> (n => assert(!Hits.run(g,
@@ -97,18 +104,23 @@ class PlanShapeSpec extends SparkSpec {
       // (HITS reduces twice: the auth and the hub gathers; a pulling
       // BFS level also moves the edges to dst and back to src; the
       // multi-source one reduces by (source, dst), then moves the
-      // visited side of its anti-join and the new level to id). The
+      // visited side of its anti-join and the new level to id; the
+      // modularity cut adds the job of its S = Σ d·x pass, with its own
+      // single-partition exchange). The
       // peels start more: the k-truss adjacency count and its two
       // broadcast builds; the k-core survivor set's two broadcast
       // builds, beside the count and its single-partition exchange.
       // A Louvain iteration runs the count that fills its labels and
-      // one build job per broadcast side (labels, cluster weights).
+      // one build job per broadcast side: the two label sides and the
+      // cached cluster weights, built once for both of their joins.
       assert(got == Map("pagerank" -> (1, 2), "wcc" -> (1, 2),
         "lpa" -> (1, 2), "sssp" -> (1, 2),
+        "katz" -> (1, 2), "eigenvector" -> (1, 2),
+        "spectral" -> (1, 2), "spectral_mod" -> (2, 3),
         "hits" -> (1, 3), "core_number" -> (1, 2),
         "kcore" -> (3, 1), "ktruss" -> (4, 5),
         "bfs" -> (1, 2), "bfs_pull" -> (1, 4), "ms_bfs" -> (1, 4),
-        "louvain" -> (6, 2)))
+        "louvain" -> (5, 1)))
     } finally g.unpersist()
   }
 
@@ -132,7 +144,7 @@ class PlanShapeSpec extends SparkSpec {
         "scc" -> counts(Scc.run(oriented)),
         "leiden" -> counts(Leiden.run(g,
           Louvain.Config(maxLevels = 2, fixedInnerIter = 3))))
-      assert(got == Map("scc" -> (40, 23), "leiden" -> (59, 63)))
+      assert(got == Map("scc" -> (40, 23), "leiden" -> (53, 55)))
     } finally {
       g.unpersist()
       oriented.unpersist()

@@ -6,6 +6,7 @@ con = duckdb.connect()
 for t in ['region','nation','customer','supplier','part','orders','lineitem','events','documents','embeddings']:
     con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sfdir}/{t}.parquet')")
 oracle = json.load(open(f'{outdir}/oracle_sql.json'))
+matched = 0
 for name, sql in sorted(oracle.items()):
     try:
         want = con.execute(sql).fetchdf()
@@ -31,3 +32,8 @@ for name, sql in sorted(oracle.items()):
         print(pd.concat([w[diff].head(3).add_suffix('_want'), g[diff].head(3).add_suffix('_got')], axis=1))
     else:
         print(f'{name}: MATCH ({len(w)} rows)')
+        matched += 1
+# Every query that is not MATCH (oracle SQL error, no Spark output, a
+# schema, row-count or value mismatch) fails the run.
+print(f'{matched}/{len(oracle)} MATCH')
+sys.exit(0 if matched == len(oracle) else 1)
