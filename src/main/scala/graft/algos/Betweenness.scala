@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Lineage, LinkGraph, SparkTuning}
 import graft.core.LinkGraph.{DST, ID, SRC}
@@ -131,14 +130,21 @@ object Betweenness {
     Some(Forward(visited, depth, kUsed, n, verts))
   }
 
+  /** The backward join's arcs, (w, v) for every edge v → w, keyed by
+   * the head w that each level joins on. Under the broadcast bound the
+   * levels broadcast, so the cached forward table streams past them in
+   * place; past it the graph's by-dst layout is already partitioned on
+   * w, and no level re-shuffles the edge table. */
+  private def arcs(g: LinkGraph, bcast: Boolean): DataFrame =
+    if (bcast) g.edges.select(col(DST).as("w"), col(SRC).as("v"))
+    else g.transposed.select(col(SRC).as("w"), col(DST).as("v"))
+
   /** Returns (id, bc). */
   def run(g0: LinkGraph, cfg: Config = Config()): DataFrame =
     graft.core.SparkTuning.withGraph(g0)(runImpl(_, cfg))
 
   private def runImpl(g: LinkGraph, cfg: Config): DataFrame = {
-    val p = g.numPartitions
     val spark = g.spark
-    val edges = g.edges.select(SRC, DST)
 
     val fw = forwardPhase(g, cfg) match {
       case None =>
@@ -150,10 +156,9 @@ object Betweenness {
 
     // ---- backward phase: δ accumulation from the deepest layer ----
     // Same k·n broadcast bound as the forward phase: under it, the
-    // per-level frames broadcast into the reversed-edge join (which
-    // then streams the CACHED edge table in place — no rev
-    // repartition/persist at all) and the term reduce's partial
-    // aggregation is the level's only exchange.
+    // per-level frames broadcast into the arc join (see [[arcs]]) and
+    // the term reduce's partial aggregation is the level's only
+    // exchange.
     val bcast = kUsed * n * 48L < SparkTuning.BroadcastBytes
     var level = Lineage.materialize(
       visited.df.filter(col("dist") === depth)
@@ -161,14 +166,7 @@ object Betweenness {
     val acc = scala.collection.mutable.ArrayBuffer[Lineage.Handle]()
     acc += level
 
-    // Reversed edges; above the broadcast bound, hash-partitioned on
-    // the join key ONCE — each backward level joins on w, and an
-    // unpartitioned rev would re-shuffle the full edge table per level.
-    val revBase = edges.select(col(DST).as("w"), col(SRC).as("v"))
-    val rev =
-      if (bcast) revBase
-      else revBase.repartition(p, col("w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    val rev = arcs(g, bcast)
     var d = depth - 1
     while (d >= 0) {
       val vAtD = visited.df.filter(col("dist") === d)
@@ -219,7 +217,6 @@ object Betweenness {
           (coalesce(col("d0"), lit(0.0)) * factor).as("bc")))
 
     acc.foreach(_.release())
-    if (!bcast) rev.unpersist()
     visited.release()
     verts.release()
     bc.df
@@ -231,7 +228,6 @@ object Betweenness {
     graft.core.SparkTuning.withGraph(g0)(runEdgesImpl(_, cfg))
 
   private def runEdgesImpl(g: LinkGraph, cfg: Config): DataFrame = {
-    val p = g.numPartitions
     val spark = g.spark
     val edges = g.edges.select(SRC, DST)
 
@@ -251,11 +247,7 @@ object Betweenness {
     val acc = scala.collection.mutable.ArrayBuffer[Lineage.Handle](level)
     val edgeAcc = scala.collection.mutable.ArrayBuffer[Lineage.Handle]()
 
-    val revBase = edges.select(col(DST).as("w"), col(SRC).as("v"))
-    val rev =
-      if (bcast) revBase
-      else revBase.repartition(p, col("w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    val rev = arcs(g, bcast)
     var d = depth - 1
     while (d >= 0) {
       val vAtD = visited.df.filter(col("dist") === d)
@@ -314,7 +306,6 @@ object Betweenness {
 
     acc.foreach(_.release())
     edgeAcc.foreach(_.release())
-    if (!bcast) rev.unpersist()
     visited.release()
     verts.release()
     out.df

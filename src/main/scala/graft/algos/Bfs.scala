@@ -22,13 +22,15 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  *  - PUSH (top-down): [[Superstep.messages]] from the frontier, a
  *    min-reduce by dst, anti-join visited — cost ~ edges OUT of the
  *    frontier; or
- *  - PULL (bottom-up): edges are first semi-joined against the
- *    UNVISITED dst set, then joined to the frontier on src — cost ~
- *    edges INTO the unvisited residue. On the dense middle supersteps
- *    of a web-scale BFS the frontier covers most of the graph while
- *    the unvisited set collapses, so pruning by unvisited-dst first
- *    touches far fewer edge rows (the relational analog of bottom-up's
- *    parent-found early exit).
+ *  - PULL (bottom-up): the graph's by-dst layout
+ *    ([[LinkGraph.transposed]]) is semi-joined against the UNVISITED
+ *    set, co-partitioned by id, and only the surviving edges move to
+ *    meet the frontier on src — cost ~ edges INTO the unvisited
+ *    residue; no exchange moves the whole edge table. On the dense
+ *    middle supersteps of a web-scale BFS the frontier covers most of
+ *    the graph while the unvisited set collapses, so pruning by
+ *    unvisited-dst first touches far fewer edge rows (the relational
+ *    analog of bottom-up's parent-found early exit).
  *
  * The switch is chosen per level by comparing |frontier| against the
  * unvisited residue (both already tracked); both directions produce
@@ -156,9 +158,10 @@ object Bfs {
           if (doPull) {
             val unvisited = allVerts.df
               .join(visited.select(ID), Seq(ID), "left_anti")
-            edges
-              .join(unvisited.withColumnRenamed(ID, DST).hint("shuffle_hash"),
-                Seq(DST), "left_semi")
+            g.transposed
+              .join(unvisited.withColumnRenamed(ID, SRC).hint("shuffle_hash"),
+                Seq(SRC), "left_semi")
+              .select(col(DST).as(SRC), col(SRC).as(DST))
               .join(frontier.select(col(ID).as(SRC)).hint("shuffle_hash"),
                 Seq(SRC))
               .groupBy(DST).agg(min(SRC).as("predecessor"))

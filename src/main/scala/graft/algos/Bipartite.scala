@@ -1,6 +1,5 @@
 package graft.algos
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.LinkGraph
@@ -48,13 +47,5 @@ object Bipartite {
     val merged = evens.join(odds, Seq("v"))
       .filter(col("c0") === col("c1")).count()
     Result(merged == 0L, merged)
-  }
-
-  /** Frame form for query surfaces: one row (bipartite, merged). */
-  def checkDf(g: LinkGraph): DataFrame = {
-    val r = check(g)
-    val spark = g.spark
-    import spark.implicits._
-    Seq((r.isBipartite, r.merged)).toDF("bipartite", "merged")
   }
 }

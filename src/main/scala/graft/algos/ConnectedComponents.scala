@@ -89,9 +89,4 @@ object ConnectedComponents {
         (active == 0L, Map("active" -> active.toDouble))
       })
   }
-
-  /** Number of distinct components (reference:
-   * `python/cugraph/cugraph/components/connectivity.py:86`). */
-  def componentCount(components: DataFrame): Long =
-    components.agg(countDistinct(COMP)).head().getLong(0)
 }

@@ -63,24 +63,25 @@ object CoreNumber {
       g: LinkGraph, maxIter: Int, degreeType: DegreeType): DataFrame = {
     val p = g.numPartitions
 
-    val simple = g.edges.select(SRC, DST).filter(col(SRC) =!= col(DST))
-    // Delivery frame: (src = value OWNER, dst = RECEIVER). A receiver's
-    // histogram is the values of the neighbors its degree type counts:
-    // OUT-core depends on out-neighbor values (v→u edge delivers u's
-    // value to v), IN-core on in-neighbor values, INOUT on both. The
-    // frame is src-hash partitioned so the per-round state join stays
-    // co-partitioned; for Out/InOut that costs one extra shuffle +
-    // cache up front.
-    val delivery = degreeType match {
-      case In => simple
-      case Out => simple.select(col(DST).as(SRC), col(SRC).as(DST))
-      case InOut => simple.union(
-        simple.select(col(DST).as(SRC), col(SRC).as(DST)))
-    }
-    val edges =
-      if (degreeType == In) delivery
-      else delivery.repartition(p, col(SRC))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    // Delivery layouts: (src = value OWNER, dst = RECEIVER). A
+    // receiver's histogram is the values of the neighbors its degree
+    // type counts: IN-core depends on in-neighbor values (u→v delivers
+    // u's value to v: the graph's edges), OUT-core on out-neighbor
+    // values (the by-dst layout, [[LinkGraph.transposed]]), INOUT on
+    // both. Each layout is src-hash partitioned, so its per-round state
+    // join stays co-partitioned; InOut unions the two joined streams
+    // ahead of the exchange by dst (a union of the layouts themselves
+    // would lose the partitioning).
+    val delivery = (degreeType match {
+      case In => Seq(g.edges)
+      case Out => Seq(g.transposed)
+      case InOut => Seq(g.edges, g.transposed)
+    }).map(_.select(SRC, DST).filter(col(SRC) =!= col(DST)))
+    // The delivery rows out of each sender in `senders` (keyed by id).
+    def deliver(senders: DataFrame): DataFrame = delivery
+      .map(d => d.join(senders.hint("shuffle_hash"), d(SRC) === senders(ID)))
+      .reduce(_ union _)
+    val edges = delivery.reduce(_ union _)
 
     // Global cap on any core number, from delivery-edge counting: an
     // In/Out k-core has >= k+1 vertices each with k typed edges, so
@@ -123,11 +124,9 @@ object CoreNumber {
           lit(true).as("chg"))
         .repartition(p, col(ID)),
       step = (state, iter) => {
-        // Neighbor-value stream (dst, c): the edges⋈state join is
-        // co-partitioned (edges by src, state by id) — zero exchange.
-        val joined = edges
-          .join(state.hint("shuffle_hash"), edges(SRC) === state(ID))
-          .select(col(DST), col("c"), col("chg"))
+        // Neighbor-value stream (dst, c): the delivery⋈state joins are
+        // co-partitioned (layouts by src, state by id) — zero exchange.
+        val joined = deliver(state).select(col(DST), col("c"), col("chg"))
 
         // Convergence-tail frontier: h(v) can only change if some
         // neighbor's c changed last round. Once the changed set is
@@ -137,10 +136,7 @@ object CoreNumber {
         val frontierMode = !smallGraph && iter > 1 && changed < nVerts / 10
         val stream =
           if (frontierMode) {
-            val dirtyPlan = edges
-              .join(state.filter(col("chg")).select(col(ID))
-                  .hint("shuffle_hash"),
-                edges(SRC) === col(ID))
+            val dirtyPlan = deliver(state.filter(col("chg")).select(col(ID)))
               .select(col(DST)).distinct()
             // The changed-vertex gate does NOT bound the dirty set — one
             // changed mega-hub dirties every neighbor, approaching |V|.
@@ -205,7 +201,6 @@ object CoreNumber {
     val out = Lineage.materialize(
       r.state.df.select(col(ID), col("c").as("core_number")))
     r.state.release()
-    if (degreeType != In) edges.unpersist()
     out.df
   }
 }

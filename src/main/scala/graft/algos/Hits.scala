@@ -2,7 +2,6 @@ package graft.algos
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.core.{Lineage, LinkGraph, Superstep}
 import graft.core.LinkGraph.{DST, ID, SRC}
@@ -18,12 +17,12 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  *   stop when L1(hub - prevHub) < epsilon (checked after normalize)
  * optional final division of both by their sums.
  *
- * Physical: TWO edge layouts, each partitioned by its senders — the
- * forward table by src for the auth gather, the reversed one (cached)
- * by the original dst for the hub gather — the analog of the
- * reference storing the transposed graph; both gathers are
- * [[Superstep.messages]], so both joins stay co-partitioned. The loop
- * is [[graft.core.Superstep]]; the max-norms are its carried scalars.
+ * Physical: both of the graph's edge layouts, each partitioned by its
+ * senders — [[LinkGraph.edges]] by src for the auth gather,
+ * [[LinkGraph.transposed]] by the original dst for the hub gather;
+ * both gathers are [[Superstep.messages]], so both joins stay
+ * co-partitioned. The loop is [[graft.core.Superstep]]; the max-norms
+ * are its carried scalars.
  */
 object Hits {
 
@@ -41,18 +40,12 @@ object Hits {
     val p = g.numPartitions
 
     val fwd = g.edges.select(SRC, DST)
-    // The hub gather sends each auth(v) back along u -> v: the reversed
-    // edges, partitioned by their sending side (rev.src = v) so the
-    // join with the id-partitioned auth sums moves no edge.
-    val rev = g.edges.select(col(DST).as(SRC), col(SRC).as(DST))
-      .repartition(p, col(SRC))
-      .persist(StorageLevel.MEMORY_AND_DISK)
 
     val verts = Lineage.materialize(
       g.outWeightSums.select(col(ID)).repartition(p, col(ID)), eager = false)
     val v = verts.df.count()
     if (v == 0) {
-      verts.release(); rev.unpersist()
+      verts.release()
       val spark = g.spark
       import spark.implicits._
       return Result(Seq.empty[(Long, Double, Double)].toDF(ID, "hub", "auth"),
@@ -85,8 +78,9 @@ object Hits {
             .select(col(DST).as(ID), col("m").as("auth_in")),
           eager = false)
         val authRaw = authRawH.df
-        // hub_raw(u) = sum of auth_raw(v) over out-edges (gather via rev)
-        val hubRaw = Superstep.messages(rev, authRaw, col("auth_in"), sum)
+        // hub_raw(u) = sum of auth_raw(v) over out-edges: v sends
+        // back along u -> v, its in-edge in the by-dst layout.
+        val hubRaw = Superstep.messages(g.transposed, authRaw, col("auth_in"), sum)
 
         Superstep.receive(
           Superstep.receive(state, authRaw.withColumnRenamed(ID, DST)), hubRaw)
@@ -119,7 +113,6 @@ object Hits {
       } else normalized
 
     verts.release()
-    rev.unpersist()
     Result(out, r.iterations, r.converged)
   }
 }

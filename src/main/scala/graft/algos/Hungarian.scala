@@ -3,8 +3,7 @@ package graft.algos
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.{Lineage, LinkGraph}
-import graft.core.LinkGraph.{DST, SRC, WEIGHT}
+import graft.core.Lineage
 
 /**
  * Minimum-cost bipartite assignment ("Hungarian" in the reference API:
@@ -52,17 +51,6 @@ object Hungarian {
 
   private val W = "vertex"
   private val J = "assignment"
-
-  /** Reference `hungarian(G, workers)` call shape: edges of a weighted
-   * bipartite graph plus the worker-side vertex set; jobs are all
-   * non-worker endpoints. */
-  def fromGraph(g: LinkGraph, workers: DataFrame): Result = {
-    val w = workers.select(col(workers.columns.head).as(W))
-    val costs = g.edges
-      .join(w.withColumnRenamed(W, SRC), Seq(SRC), "left_semi")
-      .select(col(SRC).as(W), col(DST).as(J), col(WEIGHT).cast("double").as("cost"))
-    assign(costs)
-  }
 
   /** Dense-matrix entry point — the reference's `dense_hungarian`
    * (`/root/reference/python/cugraph/cugraph/linear_assignment/lap.py:98-150`:

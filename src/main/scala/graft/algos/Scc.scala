@@ -201,7 +201,4 @@ object Scc {
     releaseAll()
     Result(out.df, pass, converged, remaining)
   }
-
-  def componentCount(components: DataFrame): Long =
-    components.agg(countDistinct("scc")).head().getLong(0)
 }

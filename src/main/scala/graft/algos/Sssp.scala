@@ -34,10 +34,6 @@ object Sssp {
     graft.core.SparkTuning.withGraph(g0)(runImpl(_, source, cfg))
 
   private def runImpl(g: LinkGraph, source: Long, cfg: Config): DataFrame = {
-    val spark = g.spark
-    import spark.implicits._
-    val p = g.numPartitions
-
     // State: DENSE (every vertex; unreached rows carry null distance/
     // predecessor) — (id, distance, predecessor, changed). The dense
     // layout keeps the superstep a LEFT join that preserves the
@@ -49,22 +45,13 @@ object Sssp {
     // §2.4; measured 85 stages / 34 MB total shuffle at sf0.1).
     // The chg column is checkpointed too, so a resumed run re-enters
     // with the exact change-frontier of the committed superstep.
-    // Fingerprint = weighted edge set + state format + source (see
-    // Bfs): refuses to resume a checkpoint of a different graph/source,
-    // or one of the reached-only format, which the dense left join
-    // would silently truncate to the reached vertices.
-    val init = g.vertices.select(col(ID))
-      .union(Seq(source).toDF(ID)) // a source outside the edge set
-      .distinct()
-      .repartition(p, col(ID))
-      .select(col(ID),
-        when(col(ID) === source, lit(0.0)).as("distance"),
-        when(col(ID) === source, lit(source)).as("predecessor"),
-        (col(ID) === source).as("chg"))
-
+    // Fingerprint extras = state format tag + source (see Bfs): refuses
+    // to resume a checkpoint of a different source, or one of the
+    // reached-only format (the same columns as this one), which the
+    // dense left join would silently truncate to the reached vertices.
     val r = Superstep.run(g, Name, cfg.maxIter, cfg.checkpoint,
       cfg.checkpointEvery, extras(source))(
-      init,
+      init(g, source),
       step = (st, _) => {
         // Relax out-edges of improved vertices; keep the best (distance,
         // predecessor) candidate per destination — min over struct gives
@@ -97,12 +84,26 @@ object Sssp {
     out.df
   }
 
+  private def init(g: LinkGraph, source: Long): DataFrame = {
+    val spark = g.spark
+    import spark.implicits._
+    g.vertices.select(col(ID))
+      .union(Seq(source).toDF(ID)) // a source outside the edge set
+      .distinct()
+      .repartition(g.numPartitions, col(ID))
+      .select(col(ID),
+        when(col(ID) === source, lit(0.0)).as("distance"),
+        when(col(ID) === source, lit(source)).as("predecessor"),
+        (col(ID) === source).as("chg"))
+  }
+
   private val Name = "sssp"
   private def extras(source: Long) = Seq("sssp-dense", source.toString)
 
+  /** The fingerprint [[run]] commits under and resumes by. */
   private[graft] def fingerprint(
       cm: CheckpointManager, g: LinkGraph, source: Long): String =
-    cm.graphFingerprint(g.edges, Name +: extras(source): _*)
+    Superstep.fingerprint(cm, g, Name, extras(source), init(g, source))
 
   /**
    * Drop unreachable rows from a BFS/SSSP result — reference

@@ -20,6 +20,8 @@ import org.apache.spark.storage.StorageLevel
  * reduce shuffles. That mirrors the reference's Murmur3-hash vertex
  * ownership (`/root/reference/cpp/src/detail/graph_utils.cuh:45-52`) —
  * Spark's `hash()` / HashPartitioning is the same Murmur3-32 family.
+ * Readers of edges by dst use the second layout, [[transposed]], built
+ * once per graph.
  */
 final case class LinkGraph(
     edges: DataFrame,
@@ -73,12 +75,6 @@ final case class LinkGraph(
       .union(edges.select(col(DST).as(ID), lit(0L).as("o"), lit(1L).as("i")))
       .groupBy(ID)
       .agg(sum("o").as("out_degree"), sum("i").as("in_degree"))
-
-  /** Out-degree per vertex, including zero-out-degree vertices. */
-  def outDegrees: DataFrame = degreeTable.select(ID, "out_degree")
-
-  /** In-degree per vertex, including zero-in-degree vertices. */
-  def inDegrees: DataFrame = degreeTable.select(ID, "in_degree")
 
   /** Total degree (out + in). */
   def degrees: DataFrame =
@@ -135,7 +131,39 @@ final case class LinkGraph(
     copy(edges = e)
   }
 
-  def unpersist(): Unit = edges.unpersist()
+  // The by-dst layout, once built; `copy` starts without one.
+  private var byDst: Option[DataFrame] = None
+
+  /**
+   * The graph's second edge layout, the reference's transposed
+   * adjacency (`store_transposed` in `graph_view.hpp`,
+   * `transposedAdjList` in `simpleGraph.py`): every edge as (src, dst)
+   * with the roles swapped, hash-partitioned by its `src` (the original
+   * dst) like [[edges]], so [[Superstep.messages]] and the
+   * co-partitioned joins read it as they read `edges`: a sender sends
+   * to its in-neighbours. No weight: no reader uses one.
+   *
+   * Built on first use and kept for the graph's lifetime: persisted at
+   * `edges`' storage level, so a cached graph pays its one exchange
+   * once; over unpersisted edges it is a plain repartition that caches
+   * nothing. Safe to call from concurrent queries on one memo'd graph.
+   */
+  def transposed: DataFrame = synchronized {
+    byDst.getOrElse {
+      val t = partitioned(
+        edges.select(col(DST).as(SRC), col(SRC).as(DST)), numPartitions)
+      val level = edges.storageLevel
+      val built = if (level == StorageLevel.NONE) t else t.persist(level)
+      byDst = Some(built)
+      built
+    }
+  }
+
+  /** Release both layouts; the by-dst one only if it was built. */
+  def unpersist(): Unit = {
+    edges.unpersist()
+    synchronized { byDst.foreach(_.unpersist()); byDst = None }
+  }
 }
 
 object LinkGraph {

@@ -17,9 +17,8 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  * state; this loop owns the rest, in one order:
  *
  *   - resume: the latest superstep committed under `name` with this
- *     run's fingerprint (the edge table plus `name +: extras`) is
- *     restored, repartitioned by id, in place of `init`; the numbering
- *     goes on from it;
+ *     run's [[fingerprint]] is restored, repartitioned by id, in place
+ *     of `init`; the numbering goes on from it;
  *   - every state is lineage-cut ([[Lineage.materialize]], lazily: the
  *     check's action fills the cache);
  *   - at most `maxIter` supersteps, fewer once `check` converges;
@@ -82,8 +81,7 @@ object Superstep {
       init: DataFrame,
       step: (DataFrame, Int) => DataFrame,
       check: (DataFrame, Int) => (Boolean, Map[String, Double])): Result = {
-    val fp = checkpoint.map(_.graphFingerprint(g.edges, name +: extras: _*))
-      .getOrElse("")
+    val fp = checkpoint.map(fingerprint(_, g, name, extras, init)).getOrElse("")
     val resume = checkpoint.flatMap(cm => cm.latestIteration(name, fp).map(it =>
       (it, cm.restore(name, it).repartition(g.numPartitions, col(ID)))))
     val committed = init.columns.map(col)
@@ -108,6 +106,16 @@ object Superstep {
     }
     Result(state, iter, converged)
   }
+
+  /** What a run commits under and resumes by: the edge table,
+   * `name +: extras` and the column names and types of `init`, so a
+   * checkpoint of another graph, key or state format is never resumed.
+   * Starts the one edge aggregation of
+   * [[CheckpointManager.graphFingerprint]]; `init` is only analyzed. */
+  def fingerprint(cm: CheckpointManager, g: LinkGraph, name: String,
+      extras: Seq[String], init: DataFrame): String =
+    cm.graphFingerprint(g.edges, (name +: extras) ++
+      init.schema.fields.map(f => s"${f.name}:${f.dataType.catalogString}"): _*)
 
   /**
    * One superstep's messages, the reference's

@@ -175,6 +175,17 @@ object GraphQueries {
         spark.sessionState.conf.numShufflePartitions)
     }
 
+  /** The directed consecutive-pair graph: one arc u → v per distinct
+   * chain pair, unit weight. */
+  def dchainGraph(spark: SparkSession, sfDir: String): LinkGraph =
+    memo(spark, sfDir, "dchain") {
+      val de = chainPairs(spark, sfDir)
+        .select(col("u").as(SRC), col("v").as(DST)).distinct()
+        .withColumn(WEIGHT, lit(1.0))
+      LinkGraph(de, directed = true,
+        spark.sessionState.conf.numShufflePartitions)
+    }
+
   /** Dense symmetric co-occurrence edge table (all pairs per order). */
   def allEdges(spark: SparkSession, sfDir: String): DataFrame = {
     val li = lineitem(spark, sfDir).select("l_orderkey", "l_partkey")
@@ -796,14 +807,7 @@ object GraphQueries {
       // OUT-degree core numbers of the DIRECTED consecutive-pair graph
       // (reference degree_type OUT, algorithms.hpp:1581-1610 — the
       // variant triangle counting's 2-core uses).
-      val g = memo(s, dir, "dchain") {
-        val de = chainPairs(s, dir)
-          .select(col("u").as(SRC), col("v").as(DST)).distinct()
-          .withColumn(WEIGHT, lit(1.0))
-        LinkGraph(de, directed = true,
-          s.sessionState.conf.numShufflePartitions)
-      }
-      CoreNumber.run(g, degreeType = CoreNumber.Out)
+      CoreNumber.run(dchainGraph(s, dir), degreeType = CoreNumber.Out)
     }),
 
     "q_core_number_in" -> ((s, dir) => {
@@ -811,14 +815,7 @@ object GraphQueries {
       // degree_type IN, algorithms.hpp:1581-1610) — closes the
       // degree_type matrix: INOUT (q_core_number), OUT
       // (q_core_number_out), IN here.
-      val g = memo(s, dir, "dchain") {
-        val de = chainPairs(s, dir)
-          .select(col("u").as(SRC), col("v").as(DST)).distinct()
-          .withColumn(WEIGHT, lit(1.0))
-        LinkGraph(de, directed = true,
-          s.sessionState.conf.numShufflePartitions)
-      }
-      CoreNumber.run(g, degreeType = CoreNumber.In)
+      CoreNumber.run(dchainGraph(s, dir), degreeType = CoreNumber.In)
     }),
 
     "q_spectral_metrics" -> ((s, dir) => {
@@ -842,13 +839,7 @@ object GraphQueries {
       // (in+out)/(n-1) over the directed pair graph — the reference's
       // degree_centrality (python/cugraph/cugraph/centrality/
       // degree_centrality.py:52-56, validated vs networkx semantics).
-      val g = memo(s, dir, "dchain") {
-        val de = chainPairs(s, dir)
-          .select(col("u").as(SRC), col("v").as(DST)).distinct()
-          .withColumn(WEIGHT, lit(1.0))
-        LinkGraph(de, directed = true,
-          s.sessionState.conf.numShufflePartitions)
-      }
+      val g = dchainGraph(s, dir)
       val n = g.numVertices
       g.degreeTable.select(col(ID),
         round((col("out_degree") + col("in_degree"))

@@ -200,6 +200,10 @@ class BfsSpec extends SparkSpec {
   test("bfs on a caller-cached graph keeps only the result's own cache") {
     val g = graphOf(loadFixture("karate")).symmetrize.cached()
     g.edges.count()
+    // The by-dst layout a pulling level reads is the graph's cache, kept
+    // until g.unpersist(): build it first, so a call's new caches are
+    // its own.
+    g.transposed.count()
     val sc = spark.sparkContext
     val dir = java.nio.file.Files.createTempDirectory("graft-bfs-cache").toString
     val cm = new graft.checkpoint.CheckpointManager(dir, spark)

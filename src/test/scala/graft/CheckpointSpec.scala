@@ -5,11 +5,13 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.json4s._
 import org.json4s.jackson.JsonMethods.parse
 
 import graft.algos.PageRank
 import graft.checkpoint.CheckpointManager
+import graft.core.Superstep
 
 /** The commit layer: what one commit costs in Spark jobs, what its
  * manifest records, and that torn and failed commits are handled. */
@@ -81,6 +83,32 @@ class CheckpointSpec extends SparkSpec {
     assert(cm.latestIteration("algo").contains(1))
     assert(cm.latestIteration("algo", "fp").contains(1))
     assert(!Files.exists(Paths.get(dir, "algo", "iter=00001", "manifest.json.tmp")))
+  }
+
+  test("a committed state of another schema is not resumed under the same name and graph") {
+    val dir = Files.createTempDirectory("graft-ckpt-schema").toString
+    val cm = new CheckpointManager(dir, spark)
+    val g = graphOf(loadFixture("karate"))
+    val ids = g.vertices.repartition(g.numPartitions, col("id"))
+    val asLong = ids.select(col("id"), col("id").as("x"))
+    val asDouble = ids.select(col("id"), col("id").cast("double").as("x"))
+    // Supersteps run by a loop that commits every one and never converges.
+    def supersteps(init: DataFrame, maxIter: Int): Int = {
+      val r = Superstep.run(g, "algo", maxIter, Some(cm))(init,
+        step = (st, _) => st,
+        check = (next, _) => { next.count(); (false, Map.empty[String, Double]) })
+      r.state.release()
+      r.iterations
+    }
+    assert(supersteps(asLong, 3) == 3)
+    // Same name, graph and extras, (id, x: double): superstep 3 of the
+    // (id, x: long) run is not resumed; the run starts from its init.
+    assert(supersteps(asDouble, 2) == 2)
+    assert(cm.latestIteration("algo").contains(3))
+    // The format that committed it resumes from it.
+    assert(supersteps(asLong, 4) == 4)
+    assert(cm.latestIteration("algo",
+      Superstep.fingerprint(cm, g, "algo", Nil, asLong)).contains(4))
   }
 
   test("a superstep loop that throws leaves no commit in flight") {

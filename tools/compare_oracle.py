@@ -29,7 +29,13 @@ for name, sql in sorted(oracle.items()):
         diff = (w != g).any(axis=1)
         nd = int(diff.sum())
         print(f'{name}: VALUE MISMATCH rows={nd}/{len(w)}')
-        print(pd.concat([w[diff].head(3).add_suffix('_want'), g[diff].head(3).add_suffix('_got')], axis=1))
+        if nd == 0:
+            # Equal values, unequal column types (DataFrame.equals
+            # compares dtypes): name each column's pair.
+            for c in w.columns:
+                print(f'  {c}: want={w[c].dtype} got={g[c].dtype}')
+        else:
+            print(pd.concat([w[diff].head(3).add_suffix('_want'), g[diff].head(3).add_suffix('_got')], axis=1))
     else:
         print(f'{name}: MATCH ({len(w)} rows)')
         matched += 1
