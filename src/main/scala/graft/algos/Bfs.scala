@@ -1,6 +1,6 @@
 package graft.algos
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.checkpoint.CheckpointManager
@@ -40,7 +40,9 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  * Both entry points run on [[Superstep]]. The state is the visited
  * frame; superstep d expands its rows at distance d - 1 (the frontier)
  * into level d and returns visited ∪ level d, and the check counts
- * level d, converging when it is empty.
+ * level d, converging when it is empty. [[multiSource]] runs the same
+ * loop keyed by (source, id), [[levels]], which Betweenness's forward
+ * phase runs too.
  */
 object Bfs {
 
@@ -64,14 +66,16 @@ object Bfs {
   /**
    * One INDEPENDENT traversal per source in a single superstep loop —
    * the reference's multi_source_bfs / concurrent_bfs
-   * (`python/cugraph/cugraph/traversal/ms_bfs.py:110,187`): the
-   * frontier is keyed (source, id), each superstep expands every
-   * source's frontier simultaneously (one co-partitioned edge join +
-   * one (source,dst) min-reduce — same shape Betweenness uses for its
-   * all-sources forward pass), so s sources cost one loop of s-times-
-   * wider frames instead of s loops. Rows scale with s·reach — the
-   * hazard the reference's `offload` flag addresses by spilling;
-   * Spark's shuffle spills the same way, so no special casing.
+   * (`python/cugraph/cugraph/traversal/ms_bfs.py:110,187`): [[levels]]
+   * with the sender's id as the message and `min` as the reduce, so s
+   * sources cost one loop of s-times-wider frames instead of s loops.
+   * Rows scale with s·reach — the hazard the reference's `offload`
+   * flag addresses by spilling; Spark's shuffle spills the same way,
+   * so no special casing.
+   *
+   * Distributed shape: that of [[levels]]. A level moves the frontier
+   * to id and the min-reduced messages to (source, dst), and nothing
+   * moves the visited frame.
    *
    * Returns (source, id, distance, predecessor), min-id predecessor
    * per (source, id), sources at distance 0 from themselves.
@@ -80,31 +84,53 @@ object Bfs {
       g0: LinkGraph, sources: Seq[Long], maxDepth: Int = Int.MaxValue): DataFrame =
     SparkTuning.withGraph(g0) { g =>
       val spark = g.spark
-      val p = g.numPartitions
-      val edges = g.edges
       import spark.implicits._
-
-      Superstep.run(g, "ms_bfs", maxDepth)(
-        sources.map(s => (s, s, 0L, s))
-          .toDF("source", ID, "distance", "predecessor")
-          .repartition(p, col(ID)),
-        step = (visited, depth) => {
-          val frontier = visited.filter(col("distance") === depth - 1)
-          val expanded = edges
-            .join(frontier.select(col("source"), col(ID)).hint("shuffle_hash"),
-              edges(SRC) === col(ID))
-            .select(col("source"), col(DST), edges(SRC).as("pred"))
-            .groupBy("source", DST).agg(min("pred").as("predecessor"))
-            .join(visited.select(col("source"), col(ID).as(DST)),
-              Seq("source", DST), "left_anti")
-          visited.union(expanded
-            .select(col("source"), col(DST).as(ID),
-              lit(depth.toLong).as("distance"), col("predecessor"))
-            .repartition(p, col(ID)))
-        },
-        check = (next, depth) => (levelRows(next, depth) == 0, Map.empty)
-      ).state.df
+      levels(g, "ms_bfs", maxDepth, sources.toDF("source"),
+        init = col("source"), msg = col(SRC), reduce = min)
+        .state.df.withColumnRenamed("m", "predecessor")
     }
+
+  /**
+   * The tagged frontier of the reference's
+   * `transform_reduce_v_frontier_outgoing_e_by_dst`
+   * (`cpp/src/prims/transform_reduce_v_frontier_outgoing_e_by_dst.cuh`):
+   * one BFS per row of `sources` (column `source`), all expanded in one
+   * [[Superstep]] loop. The state is (source, id, distance, m), `m`
+   * starting at `init` on each source's own row; superstep d sends
+   * `msg` from the rows at distance d − 1 along their out-edges,
+   * folds it by (source, dst) with `reduce`, keeps the (source, dst)
+   * pairs not yet visited as level d and returns visited ∪ level d.
+   * The check counts level d, converging when it is empty.
+   *
+   * Distributed shape: the state is hash-partitioned by (source, id),
+   * the key the reduce leaves its output in, so the visited anti-join
+   * (a shuffle-hash build of the visited keys, no sort) and the union
+   * move nothing. A level moves only the frontier (to id, for the
+   * co-partitioned edge join) and the partially aggregated messages.
+   */
+  private[algos] def levels(
+      g: LinkGraph, name: String, maxDepth: Int, sources: DataFrame,
+      init: Column, msg: Column, reduce: Column => Column): Superstep.Result = {
+    val key = Seq(col("source"), col(ID))
+    Superstep.run(g, name, maxDepth)(
+      sources.select(col("source"), col("source").as(ID),
+        lit(0L).as("distance"), init.as("m")).repartition(g.numPartitions, key: _*),
+      step = (visited, depth) => {
+        val frontier = visited.filter(col("distance") === depth - 1)
+          .select(col("source"), col(ID), col("m"))
+        val level = Superstep.messages(g.edges, frontier, msg, reduce, Seq("source"))
+          .join(visited.select(col("source"), col(ID).as(DST)).hint("shuffle_hash"),
+            Seq("source", DST), "left_anti")
+          .select(col("source"), col(DST).as(ID),
+            lit(depth.toLong).as("distance"), col("m"))
+        // Kept in the state's layout when the widths differ (as in
+        // [[runImpl]]); at the session width the reduce already left it so.
+        visited.union(
+          if (g.numPartitions == g.spark.sessionState.conf.numShufflePartitions) level
+          else level.repartition(g.numPartitions, key: _*))
+      },
+      check = (next, depth) => (levelRows(next, depth) == 0, Map.empty))
+  }
 
   /** Rows of the level a superstep added: those at its distance. Their
    * count also fills the cache of the visited frame they are in. */
@@ -157,7 +183,7 @@ object Bfs {
         val expanded =
           if (doPull) {
             val unvisited = allVerts.df
-              .join(visited.select(ID), Seq(ID), "left_anti")
+              .join(visited.select(ID).hint("shuffle_hash"), Seq(ID), "left_anti")
             g.transposed
               .join(unvisited.withColumnRenamed(ID, SRC).hint("shuffle_hash"),
                 Seq(SRC), "left_semi")

@@ -8,13 +8,14 @@ import graft.core.LinkGraph.{DST, ID, SRC}
 
 /**
  * The superstep loop of PageRank, WCC, LPA, SSSP, Katz, Eigenvector,
- * HITS, core number, BFS (one traversal and `multiSource`), the
- * k-core and k-truss peels, SCC's forward and backward fixpoints,
- * Louvain's (and so Leiden's) local-moving loop and Spectral's power
- * iteration. An algorithm supplies its init state, its superstep plan
- * (`step`, from the current state and the number of the superstep it
- * computes to the next state) and its convergence `check` on the next
- * state; this loop owns the rest, in one order:
+ * HITS, core number, BFS (one traversal), the tagged multi-source
+ * frontier `Bfs.levels` (`Bfs.multiSource` and Betweenness's forward
+ * phase), the k-core and k-truss peels, SCC's forward and backward
+ * fixpoints, Louvain's (and so Leiden's) local-moving loop and
+ * Spectral's power iteration. An algorithm supplies its init state,
+ * its superstep plan (`step`, from the current state and the number of
+ * the superstep it computes to the next state) and its convergence
+ * `check` on the next state; this loop owns the rest, in one order:
  *
  *   - resume: the latest superstep committed under `name` with this
  *     run's [[fingerprint]] is restored, repartitioned by id, in place
@@ -39,12 +40,16 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  * sends along the edges and reduces by dst, [[receive]] joins the
  * reduce back onto the state. PageRank, Katz, Eigenvector, WCC and
  * SCC's forward phase (`ConnectedComponents.minLabel`), SSSP, both
- * HITS gathers, BFS's push level and Spectral call them; LPA and core
- * number call only [[receive]] (see there for why).
+ * HITS gathers, BFS's push level and Spectral call them; `Bfs.levels`
+ * calls [[messages]] with the `by` key `source`, reducing by
+ * (source, dst); LPA and core number call only [[receive]] (see there
+ * for why).
  *
  * These iterative loops stay hand-written, each for the reason given:
- *   - Betweenness steps two frames forward (the frontier and the
- *     visited set), then walks the kept levels backward;
+ *   - Betweenness's backward δ walk runs a known number of levels,
+ *     deepest first, with nothing to converge on, and keeps every
+ *     level's δ and arc terms for the final sums, where this loop
+ *     releases each previous state;
  *   - MST's Borůvka rounds step two frames (components and the picked
  *     forest) and run a nested pointer-jump loop past a size bound;
  *   - Hungarian's auction steps two frames (prices and the
@@ -137,13 +142,18 @@ object Superstep {
    * min) aggregates partially map-side, collapsing a hub's fan-in
    * before the shuffle — the skew countermeasure of the reference's
    * per-degree-segment kernels, with no hub salting.
+   *
+   * `by` names sender columns that key the reduce beside dst, the
+   * reference's tagged frontier: `Bfs.levels` passes `Seq("source")`,
+   * so every source's messages fold apart, by (source, dst). Returns
+   * (`by`, dst, m).
    */
   def messages(
       edges: DataFrame, senders: DataFrame, msg: Column,
-      reduce: Column => Column): DataFrame =
+      reduce: Column => Column, by: Seq[String] = Nil): DataFrame =
     edges.join(senders.hint("shuffle_hash"), edges(SRC) === senders(ID))
-      .select(col(DST), msg.as("m"))
-      .groupBy(DST).agg(reduce(col("m")).as("m"))
+      .select(by.map(col) :+ col(DST) :+ msg.as("m"): _*)
+      .groupBy((by :+ DST).map(col): _*).agg(reduce(col("m")).as("m"))
 
   /**
    * `msgs` (keyed by dst) left-joined onto `state` by id = dst, with a

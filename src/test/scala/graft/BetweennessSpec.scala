@@ -166,6 +166,42 @@ class BetweennessSpec extends SparkSpec {
     }
   }
 
+  test("past the broadcast bound the shuffled plan matches the host oracles") {
+    // The walk's bound forced to 0 and Spark's size-based broadcast off:
+    // every join of the forward levels and the backward walk shuffles.
+    import graft.core.SparkTuning
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val karate = loadFixture("karate")
+    val dolphins = loadFixture("dolphins")
+    val all = karate.flatMap(e => Seq(e._1, e._2)).distinct.sorted
+    def cfg(norm: Boolean, sources: Seq[Long]) =
+      Betweenness.Config(normalized = norm, sources = Some(sources))
+    def vertexBc(edges: Seq[(Long, Long, Double)], c: Betweenness.Config) =
+      SparkTuning.withGraph(graphOf(edges).copy(directed = false))(
+        Betweenness.runImpl(_, c, bcastBytes = 0L).collect())
+        .map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    def close[K](got: Map[K, Double], want: Map[K, Double], what: String) = {
+      assert(got.keySet == want.keySet, what)
+      want.foreach { case (k, x) =>
+        assert(math.abs(got(k) - x) < 1e-9, s"$what: $k ${got(k)} vs $x")
+      }
+    }
+    spark.conf.set(key, "-1")
+    try {
+      for (norm <- Seq(true, false)) {
+        close(vertexBc(karate, cfg(norm, all)),
+          hostBrandes(karate, all, norm, directed = false), s"karate norm=$norm")
+        val edgeBc = SparkTuning.withGraph(graphOf(karate).copy(directed = false))(
+          Betweenness.runEdgesImpl(_, cfg(norm, all), bcastBytes = 0L).collect())
+          .map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2)).toMap
+        close(edgeBc, hostEdgeBrandes(karate, all, norm), s"karate edges norm=$norm")
+      }
+      val five = Seq(0L, 7L, 13L, 21L, 42L)
+      close(vertexBc(dolphins, cfg(norm = true, five)),
+        hostBrandes(dolphins, five, normalized = true, directed = false), "dolphins")
+    } finally spark.conf.unset(key)
+  }
+
   test("deterministic md5 source sampling is partition-independent") {
     val edges = loadFixture("dolphins")
     val a = Betweenness.run(graphOf(edges, parts = 2).copy(directed = false),

@@ -108,9 +108,10 @@ class PlanShapeSpec extends SparkSpec {
       // (HITS reduces twice: the auth and the hub gathers; a pulling
       // BFS level prunes the by-dst layout to the unvisited residue
       // where it lies, then moves only the survivors, to src, to meet
-      // the frontier; the
-      // multi-source one reduces by (source, dst), then moves the
-      // visited side of its anti-join and the new level to id; the
+      // the frontier; a multi-source level moves its frontier to id for
+      // the edge join, and its (source, dst) reduce leaves the level
+      // co-partitioned with the (source, id)-keyed visited frame, so
+      // the anti-join and the union move nothing; the
       // modularity cut adds the job of its S = Σ d·x pass, with its own
       // single-partition exchange). The
       // peels start more: the k-truss adjacency count and its two
@@ -125,7 +126,7 @@ class PlanShapeSpec extends SparkSpec {
         "spectral" -> (1, 2), "spectral_mod" -> (2, 3),
         "hits" -> (1, 3), "core_number" -> (1, 2),
         "kcore" -> (3, 1), "ktruss" -> (4, 5),
-        "bfs" -> (1, 2), "bfs_pull" -> (1, 3), "ms_bfs" -> (1, 4),
+        "bfs" -> (1, 2), "bfs_pull" -> (1, 3), "ms_bfs" -> (1, 3),
         "louvain" -> (5, 1)))
     } finally g.unpersist()
   }
@@ -155,6 +156,29 @@ class PlanShapeSpec extends SparkSpec {
       g.unpersist()
       oriented.unpersist()
     }
+  }
+
+  test("whole-call jobs and exchanges of Betweenness, vertex and edge") {
+    // Both accumulations from 4 explicit sources on symmetrized karate,
+    // under the broadcast bound, every job and executed exchange of the
+    // call as measured. Each forward level is one job, its count, with
+    // the frontier's move to id, the (source, dst) reduce and the
+    // count's single-partition exchange; the backward walk serves both
+    // accumulations, its arc terms filled by each level's job.
+    import graft.algos.Betweenness
+    val g = graphOf(loadFixture("karate")).symmetrize.cached()
+    g.edges.count()
+    def counts(run: => Unit): (Int, Int) = {
+      val (_, jobs, stages) = listen(run)
+      (jobs.size, stages - jobs.size)
+    }
+    val cfg = Betweenness.Config(sources = Some(Seq(0L, 1L, 2L, 3L)))
+    try {
+      val got = Map(
+        "run" -> counts(Betweenness.run(g, cfg)),
+        "runEdges" -> counts(Betweenness.runEdges(g, cfg)))
+      assert(got == Map("run" -> (21, 17), "runEdges" -> (20, 18)))
+    } finally g.unpersist()
   }
 
   test("triangle count: a fixed number of jobs, each broadcast side built once") {

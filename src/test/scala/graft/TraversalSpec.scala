@@ -19,6 +19,27 @@ class MultiSourceBfsSpec extends SparkSpec {
     }.toMap
     assert(got == want)
   }
+
+  test("multiSource on a directed graph: sources stop at different levels") {
+    // 8 reaches 6 but nothing reaches 8; 4 has no out-edge; from 3 the
+    // traversal ends at level 1, while from 0 and 6 a maxDepth of 2 cuts
+    // it short.
+    val g = graphOf(Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 4L), (0L, 5L),
+      (5L, 3L), (6L, 0L), (8L, 6L)).map(e => (e._1, e._2, 1.0)))
+    val srcs = Seq(0L, 3L, 4L, 6L)
+    for (depth <- Seq(2, Int.MaxValue)) {
+      val got = Bfs.multiSource(g, srcs, maxDepth = depth)
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
+        .toMap
+      val want = srcs.flatMap { s =>
+        Bfs.run(g, Seq(s), Bfs.Config(maxDepth = depth)).collect()
+          .map(r => (s, r.getLong(0)) -> (r.getLong(1), r.getLong(2)))
+      }.toMap
+      assert(got == want, s"maxDepth = $depth")
+      assert(!got.keySet.exists(_._2 == 8L))
+    }
+  }
 }
 
 class SsspSpec extends SparkSpec {
