@@ -51,7 +51,8 @@ object ConnectedComponents {
     // the 2x-wide src∪dst distinct.
     val r = minLabel(g, "wcc", cfg.maxIter, cfg.checkpoint, cfg.checkpointEvery)(
       g.edges.select(col(SRC).as(ID)).distinct(), idsPartitioned = false)
-    Result(r.state.df.select(col(ID), col(COMP)), r.iterations, r.converged)
+    Result(r.fixpoint("WCC", cfg.maxIter).df.select(col(ID), col(COMP)),
+      r.iterations, r.converged)
   }
 
   /**

@@ -198,9 +198,10 @@ object CoreNumber {
         (changed == 0, Map.empty)
       })
 
+    val state = r.fixpoint("Core number", maxIter)
     val out = Lineage.materialize(
-      r.state.df.select(col(ID), col("c").as("core_number")))
-    r.state.release()
+      state.df.select(col(ID), col("c").as("core_number")))
+    state.release()
     out.df
   }
 }

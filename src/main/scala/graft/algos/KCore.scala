@@ -78,7 +78,8 @@ object KCore {
           rows = m
           (done, Map.empty)
         })
-      Result(LinkGraph(r.state.df, g.directed, g.numPartitions), r.iterations)
+      Result(LinkGraph(r.fixpoint("k-core", maxIter).df, g.directed, g.numPartitions),
+        r.iterations)
     }
 
   /** One-shot k-core given core numbers (id, core_number): keep edges

@@ -165,6 +165,8 @@ object KTruss {
         n = m
         (done, Map.empty)
       })
-    Result(r.state.df, r.iterations)
+    // The 2-truss ran no round, so it has nothing to converge on.
+    Result((if (minSupport == 0) r.state else r.fixpoint("k-truss", maxIter)).df,
+      r.iterations)
   }
 }

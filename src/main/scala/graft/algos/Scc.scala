@@ -91,13 +91,8 @@ object Scc {
     // included, and raises.
     def fixpoint(r: Superstep.Result, phase: String,
         also: Lineage.Handle*): Lineage.Handle = {
-      if (!r.converged) {
-        (r.state +: also).foreach(_.release()); releaseAll()
-        throw new IllegalStateException(
-          s"SCC's $phase fixpoint did not converge within maxIter=$maxIter " +
-            "supersteps; its labels would be wrong. Raise maxIter")
-      }
-      r.state
+      if (!r.converged) { also.foreach(_.release()); releaseAll() }
+      r.fixpoint(s"SCC's $phase fixpoint", maxIter)
     }
     var pass = 0
     var remaining = verts.df.count()

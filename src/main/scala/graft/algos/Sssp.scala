@@ -77,10 +77,11 @@ object Sssp {
 
     // Reached vertices only (the dense state's unreached rows carry
     // null distance) — same output contract as before.
+    val state = r.fixpoint("SSSP", cfg.maxIter)
     val out = Lineage.materialize(
-      r.state.df.filter(col("distance").isNotNull)
+      state.df.filter(col("distance").isNotNull)
         .select(col(ID), col("distance"), col("predecessor")))
-    r.state.release()
+    state.release()
     out.df
   }
 

@@ -29,7 +29,7 @@ import graft.core.LinkGraph.{DST, ID, SRC}
  *     [[CheckpointManager.committing]] — see the flush rule there.
  *
  * Scalars carried between supersteps (PageRank's dangling sum,
- * Eigenvector's and HITS's norms, Spectral's mean and norm, the peels'
+ * Eigenvector's and HITS's norms, Spectral's means and norms, the peels'
  * previous row count, BFS's visited and frontier counts, Louvain's
  * best Q) are the algorithm's own vars, set by `check` and read by
  * `step`; so are a superstep's side caches (HITS's auth gather, the
@@ -74,7 +74,21 @@ object Superstep {
 
   /** The last state, still cached: the caller releases it, or returns
    * a frame over it. */
-  final case class Result(state: Lineage.Handle, iterations: Int, converged: Boolean)
+  final case class Result(state: Lineage.Handle, iterations: Int, converged: Boolean) {
+
+    /** The state of an EXACT fixpoint, an answer only once converged: a
+     * run that `maxIter` cut short releases it and throws, naming
+     * `algorithm` and the cap. */
+    def fixpoint(algorithm: String, maxIter: Int): Lineage.Handle = {
+      if (!converged) {
+        state.release()
+        throw new IllegalStateException(
+          s"$algorithm did not converge within maxIter=$maxIter supersteps; " +
+            "its result would be wrong. Raise maxIter")
+      }
+      state
+    }
+  }
 
   def run(
       g: LinkGraph,

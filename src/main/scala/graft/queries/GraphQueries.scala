@@ -614,7 +614,7 @@ object GraphQueries {
       // spectralBalancedCutClustering for arbitrary n_clusters). The
       // root bisection is exactly the q_spectral cut — reuse the
       // shared frame (built here if run standalone); the two induced
-      // halves still run their own concurrent power iterations.
+      // halves are then cut by one power iteration over both parts.
       Spectral.balancedCut(chainGraph(s, dir), 4,
         Spectral.Config(iterations = 20, seed = 42L),
         rootCut = Some(memoFrame(s, dir, "fiedler")(buildFiedler(s, dir))))),

@@ -285,6 +285,40 @@ class SccSpec extends SparkSpec {
   }
 }
 
+class CappedFixpointSpec extends SparkSpec {
+  import graft.algos.{ConnectedComponents, Sssp}
+
+  // A 12-vertex path, 11 hops end to end, stored both ways: labels,
+  // distances and core numbers move one hop per superstep and the
+  // 2-core peels one vertex from each end per round, so a cap of 2
+  // stops each of them short. Its square (each vertex also joined to
+  // the one two along) takes two 4-truss rounds: the outer edges, in
+  // one triangle each, go first.
+  private val n = 12L
+  private def undirected(es: Seq[(Long, Long)]) =
+    graphOf(es.flatMap { case (u, v) => Seq((u, v, 1.0), (v, u, 1.0)) })
+  private val path = (0L until n - 1).map(i => (i, i + 1))
+  private val square = path ++ (0L until n - 2).map(i => (i, i + 2))
+
+  // (algorithm, the name its error gives, cap, run under the cap)
+  private val capped: Seq[(String, String, Int, Int => Any)] = Seq(
+    ("WCC", "WCC", 2, m => ConnectedComponents.run(undirected(path),
+      ConnectedComponents.Config(maxIter = m))),
+    ("SSSP", "SSSP", 2, m => Sssp.run(undirected(path), 0L, Sssp.Config(maxIter = m))),
+    ("CoreNumber", "Core number", 2, m => CoreNumber.run(undirected(path), maxIter = m)),
+    ("KCore", "k-core", 2, m => KCore.subgraph(undirected(path), 2, maxIter = m)),
+    ("KTruss", "k-truss", 1, m => KTruss.subgraph(undirected(square), 4, maxIter = m)),
+    ("SCC", "SCC's forward fixpoint", 2, m =>
+      Scc.run(graphOf(path.map(e => (e._1, e._2, 1.0))), maxIter = m)))
+
+  for ((algo, named, cap, run) <- capped)
+    test(s"$algo on a path throws at its cap") {
+      val e = intercept[IllegalStateException](run(cap))
+      assert(e.getMessage.startsWith(
+        s"$named did not converge within maxIter=$cap supersteps"), e.getMessage)
+    }
+}
+
 class SamplingYSpec extends SparkSpec {
   private val s = spark
   import s.implicits._

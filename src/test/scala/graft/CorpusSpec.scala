@@ -208,28 +208,30 @@ class ResumeSpec extends SparkSpec {
     val g = graphOf(loadFixture("karate-disjoint")).symmetrize
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // (name, committed columns, run(maxIter, checkpoint) = (labels,
-    // iterations, converged))
+    // (name, committed columns, whether a run stopped at its cap throws,
+    // run(maxIter, checkpoint) = (labels, iterations, converged))
     type Run = (Int, Option[CheckpointManager]) => (Map[Long, Long], Int, Boolean)
-    val loops: Seq[(String, Int, Run)] = Seq(
-      ("wcc", 3, (n, cm) => {
+    val loops: Seq[(String, Int, Boolean, Run)] = Seq(
+      ("wcc", 3, true, (n, cm) => {
         val r = ConnectedComponents.run(g, ConnectedComponents.Config(
           maxIter = n, checkpointEvery = 1, checkpoint = cm))
         (pairs(r.components), r.iterations, r.converged)
       }),
-      ("lpa", 2, (n, cm) => {
+      ("lpa", 2, false, (n, cm) => {
         val r = LabelPropagation.run(g, LabelPropagation.Config(
           maxIter = n, checkpointEvery = 1, checkpoint = cm))
         (pairs(r.labels), r.iterations, r.converged)
       }))
-    for ((algo, columns, run) <- loops) {
+    for ((algo, columns, exact, run) <- loops) {
       val dir = java.nio.file.Files.createTempDirectory(s"graft-ckpt-$algo").toString
       val full = run(20, None)
       assert(full._3 && full._2 > 2, algo)
 
-      // Phase 1: stop after 2 supersteps (commit every superstep).
+      // Phase 1: stop after 2 supersteps (commit every superstep); an
+      // exact fixpoint stopped there throws, its commits made.
       val cm1 = new CheckpointManager(dir, spark)
-      run(2, Some(cm1))
+      if (exact) intercept[IllegalStateException](run(2, Some(cm1)))
+      else run(2, Some(cm1))
       assert(cm1.latestIteration(algo).contains(2))
       assert(cm1.restore(algo, 2).columns.length == columns, algo)
 
@@ -300,9 +302,10 @@ class ResumeSpec extends SparkSpec {
     val want = Sssp.run(g, root).collect()
       .map(r => r.getLong(0) -> (r.getDouble(1), r.getLong(2))).toMap
 
+    // Stopped at its cap, the run throws, its commits made.
     val cm1 = new graft.checkpoint.CheckpointManager(dir, spark)
-    Sssp.run(g, root, Sssp.Config(maxIter = 3, checkpointEvery = 1,
-      checkpoint = Some(cm1)))
+    intercept[IllegalStateException](Sssp.run(g, root, Sssp.Config(maxIter = 3,
+      checkpointEvery = 1, checkpoint = Some(cm1))))
     assert(cm1.latestIteration("sssp").contains(3))
 
     val cm2 = new graft.checkpoint.CheckpointManager(dir, spark)

@@ -73,11 +73,13 @@ class PlanShapeSpec extends SparkSpec {
     val loops: Seq[(String, Int => Unit)] = Seq(
       "pagerank" -> (n => assert(!PageRank.run(g,
         PageRank.Config(tol = 0.0, maxIter = n)).converged)),
-      "wcc" -> (n => assert(!ConnectedComponents.run(g,
-        ConnectedComponents.Config(maxIter = n)).converged)),
+      // An exact fixpoint that stops at `n` throws, after its supersteps.
+      "wcc" -> (n => intercept[IllegalStateException](ConnectedComponents.run(g,
+        ConnectedComponents.Config(maxIter = n)))),
       "lpa" -> (n => assert(!LabelPropagation.run(g,
         LabelPropagation.Config(maxIter = n)).converged)),
-      "sssp" -> (n => Sssp.run(g, 0L, Sssp.Config(maxIter = n))),
+      "sssp" -> (n => intercept[IllegalStateException](
+        Sssp.run(g, 0L, Sssp.Config(maxIter = n)))),
       "katz" -> (n => assert(!Katz.run(g,
         Katz.Config(tol = 0.0, maxIter = n)).converged)),
       "eigenvector" -> (n => assert(!Eigenvector.run(g,
@@ -86,12 +88,17 @@ class PlanShapeSpec extends SparkSpec {
       "spectral_mod" -> (n =>
         Spectral.modularityCut(g, Spectral.Config(iterations = n))),
       // Karate takes 3 core-number supersteps, 4 rounds of the 4-core
-      // peel and 3 of the 5-truss peel, so every run stops at `n`.
+      // peel and 3 of the 5-truss peel, so every run stops at its cap:
+      // `n` for the 4-core, n - 1 for the other two, whose runs of 3
+      // would converge.
       "hits" -> (n => assert(!Hits.run(g,
         Hits.Config(tol = 0.0, maxIter = n)).converged)),
-      "core_number" -> (n => CoreNumber.run(g, maxIter = n)),
-      "kcore" -> (n => KCore.subgraph(g, 4, maxIter = n)),
-      "ktruss" -> (n => KTruss.subgraph(g, 5, maxIter = n)),
+      "core_number" -> (n => intercept[IllegalStateException](
+        CoreNumber.run(g, maxIter = n - 1))),
+      "kcore" -> (n => intercept[IllegalStateException](
+        KCore.subgraph(g, 4, maxIter = n))),
+      "ktruss" -> (n => intercept[IllegalStateException](
+        KTruss.subgraph(g, 5, maxIter = n - 1))),
       // Karate's levels from vertex 0 go 3 deep: every level is non-empty.
       "bfs" -> (n => Bfs.run(g, Seq(0L),
         Bfs.Config(maxDepth = n, pull = Some(false)))),
@@ -156,6 +163,25 @@ class PlanShapeSpec extends SparkSpec {
       g.unpersist()
       oriented.unpersist()
     }
+  }
+
+  test("whole-call jobs and exchanges of the k-way spectral cuts") {
+    // Both recursive bisections to k = 4 on symmetrized karate: every
+    // job and executed exchange of the call, pinned as measured.
+    import graft.algos.Spectral
+    val g = graphOf(loadFixture("karate")).symmetrize.cached()
+    g.edges.count()
+    def counts(run: => Unit): (Int, Int) = {
+      val (_, jobs, stages) = listen(run)
+      (jobs.size, stages - jobs.size)
+    }
+    try {
+      val got = Map(
+        "balanced" -> counts(Spectral.balancedCut(g, 4)),
+        "modularity" -> counts(Spectral.modularityMaximization(g, 4)))
+      // ⌈log₂ 4⌉ = 2 levels, each one power iteration over its parts.
+      assert(got == Map("balanced" -> (48, 89), "modularity" -> (88, 129)))
+    } finally g.unpersist()
   }
 
   test("whole-call jobs and exchanges of Betweenness, vertex and edge") {

@@ -151,6 +151,72 @@ class SpectralSpec extends SparkSpec {
     assert(again == k4)
   }
 
+  /** Host mirror of the k-way recursion: `cut` on each side's induced
+   * edges, with [[Spectral.balancedCut]]'s range assignment (x <= 0 ->
+   * [base, base + k/2), x > 0 -> the rest; a vertex the cut misses
+   * joins the low side). Per vertex: its label and the smallest |x| of
+   * the splits it passed through (infinite when no cut scored it). */
+  private def hostRecursion(
+      edges: Seq[(Long, Long, Double)],
+      k: Int,
+      cut: Seq[(Long, Long, Double)] => Map[Long, Double])
+      : Map[Long, (Long, Double)] = {
+    def rec(vs: Set[Long], k: Int, base: Long, margin: Map[Long, Double])
+        : Map[Long, (Long, Double)] = {
+      val es = edges.filter { case (u, v, _) => vs(u) && vs(v) }
+      if (k == 1 || es.isEmpty) vs.iterator.map(v => v -> (base, margin(v))).toMap
+      else {
+        val x = cut(es)
+        val m = margin ++ x.map { case (v, xv) => v -> math.min(margin(v), math.abs(xv)) }
+        val (high, low) = vs.partition(v => x.get(v).exists(_ > 0))
+        rec(low, k / 2, base, m) ++ rec(high, k - k / 2, base + k / 2, m)
+      }
+    }
+    val vs = edges.flatMap(e => Seq(e._1, e._2)).toSet
+    rec(vs, k, 0L, vs.iterator.map(_ -> Double.PositiveInfinity).toMap)
+  }
+
+  test("k-way cuts match a host recursion of the bisections") {
+    val edges = loadFixture("karate")
+    val g = graphOf(edges)
+    val fiedler = hostFiedler(_: Seq[(Long, Long, Double)], 20, 42L)
+    val cases = Seq(
+      ("balancedCut k=3", Spectral.balancedCut(g, 3), hostRecursion(edges, 3, fiedler)),
+      ("balancedCut k=4", Spectral.balancedCut(g, 4), hostRecursion(edges, 4, fiedler)),
+      ("modularityMaximization k=4", Spectral.modularityMaximization(g, 4),
+        hostRecursion(edges, 4, hostModularity(_, 20, 42L))))
+    for ((name, df, want) <- cases) {
+      val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got.keySet == want.keySet, name)
+      // Labels are compared where every split the vertex passed through
+      // scored it clear of 0; float sum order cannot flip those signs.
+      val decided = want.filter(_._2._2 > 1e-3)
+      assert(decided.size * 2 >= want.size, s"$name: ${decided.size} decided")
+      decided.foreach { case (v, (label, _)) =>
+        assert(got(v) == label, s"$name: vertex $v got ${got(v)}, host $label")
+      }
+    }
+  }
+
+  test("balanced cut of an empty edge table is empty") {
+    val got = Spectral.balancedCut(graphOf(Nil), 4)
+    assert(got.columns.toSeq == Seq("id", "cluster"))
+    assert(got.collect().isEmpty)
+  }
+
+  test("balanced cut keeps a side with no internal edges at its base") {
+    // A star: the root cut splits the leaves, and the side without the
+    // center has no internal edges, so all of it stays at that side's
+    // base while the center's side is cut again.
+    val star = (1L to 8L).flatMap(v => Seq((0L, v, 1.0), (v, 0L, 1.0)))
+    val got = Spectral.balancedCut(graphOf(star), 4).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    // As the per-subgraph recursion labelled it: leaves 1, 5 and 7 are
+    // the root's low side and stay at 0.
+    assert(got == Map(0L -> 3L, 1L -> 0L, 2L -> 2L, 3L -> 3L, 4L -> 2L,
+      5L -> 0L, 6L -> 3L, 7L -> 0L, 8L -> 3L))
+  }
+
   test("analyzeClustering metrics match a host recomputation") {
     val edges = loadFixture("karate")
     val g = graphOf(edges)
